@@ -57,12 +57,17 @@ def _ngrams(toks, n: int):
     ~30% SLOWER on 5-gram shingles), so those stay on the transform
     form."""
     if n == 2:
-        return F.array_compact(
-            F.zip_with(
-                toks,
-                F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
+        # zip_with over null toks is null; coalesce keeps the [] contract
+        # the n >= 3 form gives null toks
+        return F.coalesce(
+            F.array_compact(
+                F.zip_with(
+                    toks,
+                    F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
+                    lambda a, b: F.concat(a, F.lit(" "), b),
+                )
+            ),
+            F.array().cast("array<string>"),
         )
 
     def join_at(i):

@@ -10,6 +10,8 @@ SURVEY.md §4 "Checkpoint/resume").
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,8 +42,7 @@ def run_pipeline(
     pages: DataFrame,
     alias_index: DataFrame,
     checkpoint_dir: str | None = None,
-    extract_html: bool = True,
-) -> dict[str, DataFrame]:
+) -> Mapping[str, DataFrame]:
     """Run (or resume) the full pipeline; returns all stage DataFrames."""
     reg = CheckpointRegistry(spark, checkpoint_dir) if checkpoint_dir else None
 
@@ -59,11 +60,8 @@ def run_pipeline(
 
     gaz, regions = gazetteer_from_alias_index(alias_index)
 
-    extracted = ck(
-        "extracted",
-        lambda: (with_extracted_text(pages.drop("text")) if extract_html else pages),
-    )
-    if reg is None and extract_html:
+    extracted = ck("extracted", lambda: with_extracted_text(pages.drop("text")))
+    if reg is None:
         # no checkpoint boundary between extract and annotate: fuse the
         # frozen extractor into the annotation pass so the 13KB-per-page
         # text never crosses the JVM<->Python boundary twice (guide §4.1).
@@ -157,44 +155,26 @@ def run_pipeline(
     return stages
 
 
-class _LazyStages(dict):
-    """Stage dict whose derived entries build on first access.
+class _LazyStages(Mapping):
+    """Stage mapping whose derived entries build on first access.
 
-    The whole dict protocol sees the union of eager and lazy keys —
-    get()/items()/values()/len()/iteration included — but only
-    __getitem__/get/items/values actually trigger a build."""
+    Iteration, len() and ``in`` see every stage, eager and lazy, without
+    building anything; item access (and so get/items/values) builds."""
 
     def __init__(self, builders, eager):
-        super().__init__(eager)
+        self._stages = dict(eager)
         self._builders = builders
 
-    def _pending(self):
-        # dict.__contains__ explicitly: zero-arg super() has no __class__
-        # cell inside a comprehension scope
-        return [k for k in self._builders if not dict.__contains__(self, k)]
-
     def __getitem__(self, key):
-        if not super().__contains__(key) and key in self._builders:
-            self[key] = self._builders[key]()
-        return super().__getitem__(key)
-
-    def __contains__(self, key):
-        return super().__contains__(key) or key in self._builders
-
-    def get(self, key, default=None):  # noqa: A003 - dict interface
-        return self[key] if key in self else default
-
-    def keys(self):  # noqa: A003 - dict interface
-        return list(dict.keys(self)) + self._pending()
+        if key not in self._stages:
+            self._stages[key] = self._builders[key]()
+        return self._stages[key]
 
     def __iter__(self):
-        return iter(self.keys())
+        return iter(dict.fromkeys([*self._stages, *self._builders]))
 
     def __len__(self):
-        return dict.__len__(self) + len(self._pending())
+        return len(self._stages.keys() | self._builders.keys())
 
-    def items(self):  # noqa: A003 - dict interface
-        return [(k, self[k]) for k in self.keys()]
-
-    def values(self):  # noqa: A003 - dict interface
-        return [self[k] for k in self.keys()]
+    def __contains__(self, key):
+        return key in self._stages or key in self._builders

@@ -27,10 +27,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-ready defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, else 32) in
-    this sandbox; on a real cluster pass None and let spark-submit decide.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, else one thread per
+    CPU this process may run on (``os.sched_getaffinity``); on a real
+    cluster pass None and let spark-submit decide.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

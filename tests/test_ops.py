@@ -627,7 +627,7 @@ def test_word_shingles_from_matches_inline(spark):
 
 def test_ngrams_zip_form_matches_transform_spec(spark):
     """r7 chained-zip_with _ngrams == the transform+slice+array_join spec,
-    including short docs, empty arrays, and n=2,3,5."""
+    including short docs, empty arrays, null tokens, and n=2,3,5."""
     from kgspark.ops.webtext import _ngrams
 
     def spec(toks, n):
@@ -642,6 +642,7 @@ def test_ngrams_zip_form_matches_transform_spec(spark):
         (1, []), (2, ["a"]), (3, ["a", "b"]), (4, ["a", "b", "c"]),
         (5, ["x", "y", "z", "w", "v"]), (6, ["t"] * 12),
         (7, "some longer token stream with repeated token stream".split()),
+        (8, None),
     ]
     df = spark.createDataFrame(rows, "doc_id long, toks array<string>")
     for n in (2, 3, 5):

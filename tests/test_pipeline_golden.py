@@ -52,6 +52,31 @@ def test_partial_resume(tmp_path, spark):
     assert second["triples"].count() == n1
 
 
+def test_stages_mapping_builds_lazily(tmp_path, spark):
+    """The returned mapping lists every stage without building one; derived
+    tables are built (and, checkpointed, written) on first item access."""
+    from pathlib import Path
+
+    from kgspark.io import MARKER
+
+    pages = fixtures.gen_pages(spark, 40)
+    aliases = fixtures.gen_alias_index(spark)
+    ckdir = tmp_path / "ck_lazy"
+    out = run_pipeline(spark, pages, aliases, checkpoint_dir=str(ckdir))
+    assert set(out) == {
+        "extracted", "annotated", "mentions", "relations", "links", "surfaces",
+        "surface_entity", "components", "canonical_map", "resolved_surfaces",
+        "triples", "entities", "edges", "lineage", "prov_entities", "prov_edges",
+        "entity_snapshots", "entity_timeline",
+    }
+    assert "entities" in out and len(out) == 18
+    done = Path(ckdir) / "entities" / MARKER
+    out["triples"]
+    assert not done.exists()
+    out["entities"]
+    assert done.exists()
+
+
 def test_bulk_paragraphs_draw_identical_to_choice_loop():
     """r7 fast filler generator must consume the SAME random stream as the
     original rng.choice loop and emit identical paragraphs (the bench
