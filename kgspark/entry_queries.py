@@ -17,6 +17,7 @@ Engine-portability rules used throughout:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 import pandas as pd
@@ -652,7 +653,7 @@ def events_hourly(spark, sf_dir):
 )
 def events_sessionize(spark, sf_dir):
     """Sessionization: gap-detection via lag + running flags (stateful-op
-    shape expressed as windows; streaming version in streaming.py)."""
+    shape expressed as windows)."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     flagged = ev.withColumn(
@@ -2923,6 +2924,16 @@ def multimodal_decode_stats(spark, sf_dir):
 # =====================================================================
 
 
+_PIPELINE_PAGES = {"sf0.001": 200, "sf0.01": 1000, "sf0.1": 5000}
+
+
+def _pipeline_pages(sf_dir: str) -> int:
+    """Fixture corpus size for kg_pipeline_triples, keyed on the scale
+    factor directory name (the last path component, trailing '/' ignored);
+    200 pages for any other name."""
+    return _PIPELINE_PAGES.get(os.path.basename(sf_dir.rstrip("/")), 200)
+
+
 def kg_pipeline_triples(spark, sf_dir):
     """Full pipeline on the deterministic fixture corpus (size ~ sf).
 
@@ -2936,12 +2947,7 @@ def kg_pipeline_triples(spark, sf_dir):
     from . import fixtures
     from .pipeline import run_pipeline
 
-    n = 200
-    if "0.01" in sf_dir and "0.001" not in sf_dir:
-        n = 1000
-    elif "0.1" in sf_dir:
-        n = 5000
-    pages = fixtures.gen_pages(spark, n)
+    pages = fixtures.gen_pages(spark, _pipeline_pages(sf_dir))
     aliases = fixtures.gen_alias_index(spark)
     key = "spark.sql.codegen.wholeStage"
     prior = spark.conf.get(key, None)

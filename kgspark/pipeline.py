@@ -60,18 +60,13 @@ def run_pipeline(
 
     gaz, regions = gazetteer_from_alias_index(alias_index)
 
-    extracted = ck("extracted", lambda: with_extracted_text(pages.drop("text")))
-    if reg is None:
-        # no checkpoint boundary between extract and annotate: fuse the
-        # frozen extractor into the annotation pass so the 13KB-per-page
-        # text never crosses the JVM<->Python boundary twice (guide §4.1).
-        # Byte-identical output: annotate_pages(from_html=True) applies the
-        # same extract_text_bytes the `extracted` stage uses.
-        annotated = ck(
-            "annotated", lambda: annotate_pages(pages, gaz, regions, from_html=True)
-        )
-    else:
-        annotated = ck("annotated", lambda: annotate_pages(extracted, gaz, regions))
+    # The frozen extractor is fused into the annotation pass so the
+    # 13KB-per-page text never crosses the JVM<->Python boundary twice
+    # (guide §4.1). Byte-identical output: annotate_pages(from_html=True)
+    # applies the same extract_text_bytes the lazy `extracted` stage uses.
+    annotated = ck(
+        "annotated", lambda: annotate_pages(pages, gaz, regions, from_html=True)
+    )
     mentions = ck("mentions", lambda: explode_mentions(annotated))
     relations = ck("relations", lambda: explode_relations(annotated))
     links = ck("links", lambda: linkmod.link_mentions(mentions, alias_index))
@@ -112,6 +107,9 @@ def run_pipeline(
     # floor) that triples-only consumers — including the scaling bench —
     # never execute.
     lazy_builders = {
+        "extracted": lambda: ck(
+            "extracted", lambda: with_extracted_text(pages.drop("text"))
+        ),
         "entities": lambda: ck("entities", lambda: mat.build_entities(alias_index, links)),
         "edges": lambda: ck(
             "edges",
@@ -140,7 +138,6 @@ def run_pipeline(
     }
 
     stages = _LazyStages(lazy_builders, {
-        "extracted": extracted,
         "annotated": annotated,
         "mentions": mentions,
         "relations": relations,

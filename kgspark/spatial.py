@@ -315,18 +315,6 @@ def wkb_summary(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
 # ---------------------------------------------------------------------------
 
 
-def _ring_points(buf: bytes) -> np.ndarray:
-    """Outer-ring vertices (closing point dropped) of a WKB Polygon."""
-    byte_order, geom_type, n_rings = struct.unpack_from("<BII", buf, 0)
-    if byte_order != 1 or geom_type != _WKB_POLYGON or n_rings < 1:
-        raise ValueError("unsupported WKB (need little-endian Polygon)")
-    (n_pts,) = struct.unpack_from("<I", buf, 9)
-    pts = np.frombuffer(buf, dtype="<f8", count=2 * n_pts, offset=13).reshape(n_pts, 2)
-    if n_pts > 1 and (pts[0] == pts[-1]).all():
-        pts = pts[:-1]
-    return pts
-
-
 def _signed_area2(pts: np.ndarray) -> float:
     """Twice the signed ring area (positive = counter-clockwise)."""
     x, y = pts[:, 0], pts[:, 1]

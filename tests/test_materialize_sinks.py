@@ -1,10 +1,10 @@
-"""Sinks (Neo4j bulk CSV, Turtle), appellations, observations melt."""
+"""Sinks (Neo4j bulk CSV, Turtle), observations melt."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kgspark import appellations, fixtures, observations, sinks
+from kgspark import fixtures, observations, sinks
 from kgspark.pipeline import run_pipeline
 
 
@@ -44,20 +44,6 @@ def test_turtle_literal_inference(spark):
     df = spark.createDataFrame([("42",), ("3.14",), ("abc",)], "v string")
     got = [r[0] for r in df.select(sinks.turtle_literal("v")).collect()]
     assert got == ['42^^xsd:integer', '3.14^^xsd:decimal', '"abc"']
-
-
-def test_appellations_and_ambiguous(spark):
-    out = run_pipeline(spark, fixtures.gen_pages(spark, 150), fixtures.gen_alias_index(spark))
-    app = appellations.build_appellations(out["canonical_map"], out["resolved_surfaces"])
-    rows = app.collect()
-    assert len(rows) > 0
-    # canonical rows only where the rename gate passed
-    assert all(r["reason"] in ("unanimous", "ocr_variants", "name_change") for r in rows)
-    edges = appellations.appellation_edges(app)
-    assert edges.where(~F.col("pred").isin(["has_appellation", "has_variant_appellation"])).count() == 0
-    amb = appellations.ambiguous_links(out["links"])
-    assert set(amb.columns) == {"url", "surface", "entity_id", "canonical_name",
-                                "name_sim", "ctx_score", "score"}
 
 
 def test_melt_observations(spark):

@@ -73,6 +73,8 @@ def test_stages_mapping_builds_lazily(tmp_path, spark):
     done = Path(ckdir) / "entities" / MARKER
     out["triples"]
     assert not done.exists()
+    # annotate reads html directly: extract is written only when asked for
+    assert not (Path(ckdir) / "extracted" / MARKER).exists()
     out["entities"]
     assert done.exists()
 

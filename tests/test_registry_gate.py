@@ -35,3 +35,16 @@ def test_demoted_queries_still_registered():
 
     assert all(n in QUERIES for n in _DEMOTED)
     assert len(QUERIES) == GATE_WINDOW + len(_DEMOTED)
+
+
+def test_pipeline_pages_parses_scale_factor():
+    # the corpus size keys on the sf<number> leaf, not on a substring of
+    # the whole path ("0.1" occurs in "/tmp/run0.1/sf0.001")
+    from kgspark.entry_queries import _pipeline_pages
+
+    assert _pipeline_pages("testdata/sf0.001") == 200
+    assert _pipeline_pages("testdata/sf0.01") == 1000
+    assert _pipeline_pages("testdata/sf0.1") == 5000
+    assert _pipeline_pages("testdata/sf0.01/") == 1000
+    assert _pipeline_pages("/tmp/run0.1/sf0.001") == 200
+    assert _pipeline_pages("/tmp/sf0.1x") == 200
