@@ -15,14 +15,22 @@ assign_canonical_names_simple.py:94-124) as distributed primitives:
    link_csd_years_spatial_v2.py:135-165 shape: block -> exact verify ->
    threshold classify). Surfaces that linked to the same entity id are
    SAME_AS by construction (the reference's SAME_AS/iou>=0.999 chains).
-3. **Connected components**: iterative min-label propagation as DataFrame
-   self-joins with `localCheckpoint()` per frontier (cuts lineage — the
-   north rule's "checkpointed frontiers") and convergence detection
-   (reference cycle guard -> `changed == 0`). Head-entity skew ("Canada" on
-   35% of pages) never reaches this loop at page-cardinality: CC runs over
-   *distinct surfaces*, and the label-propagation aggregate is a min() —
-   partial (map-side) aggregation flattens residual key skew; AQE skew-join
-   handles the join side.
+3. **Connected components** in one vectorized pass plus a boundary
+   merge: a numpy union-find runs over each edge partition where it
+   lands (one `mapInPandas`, no exchange) and labels every node with its
+   local root, the smallest node of its local component. Only nodes seen
+   in more than one partition form the boundary graph, edges (node,
+   local root); pointer-doubled min-label propagation with
+   `localCheckpoint()` per frontier (the north rule's "checkpointed
+   frontiers") runs on that graph alone, with convergence detection
+   (reference cycle guard -> `changed == 0`), and relabels the local
+   roots. Distinct mention surfaces are vocabulary-sized and arrive in one
+   partition, which has no boundary, so no merge job runs.
+   Head-entity skew ("Canada" on 35% of pages) never reaches this step at
+   page-cardinality: CC runs over *distinct surfaces*; a star inside a
+   partition costs the union-find one pass, and a star across partitions
+   leaves one boundary edge per partition for the merge's map-side
+   combined min().
 4. **Consensus canonical form**: occurrence-weighted mode per component
    (reference A4) gated by avg/min similarity >= 70/60 (reference
    assign_canonical_names_simple.py:117-124) so true renames
@@ -31,8 +39,12 @@ assign_canonical_names_simple.py:94-124) as distributed primitives:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .link import normalize_surface  # noqa: F401  (re-exported for callers)
 
@@ -155,32 +167,78 @@ def same_as_edges(
     return lsh.unionByName(via_entity).distinct()
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "node",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Min-label propagation CC: iterative DataFrame self-join with
-    checkpointed frontiers (north rule). nodes: (node); edges: (a, b).
+def _min_roots(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """root[i] = the smallest index joined to i by the edges (u[k], v[k]).
 
-    Returns (node, component) where component = min node id in component.
-    Convergence = no label changed (reference cycle-guard analog,
-    assign_canonical_names.py:146-151).
+    Vectorized union-find: every round hooks each root to the smallest root
+    across its edges, then pointer-jumps until every index points at a
+    root. Hooking only ever lowers a pointer, so root[i] <= i throughout
+    and the forest never cycles; edges whose ends share a root are done
+    for good and are dropped."""
+    root = np.arange(n)
+    while True:
+        ru, rv = root[u], root[v]
+        cross = ru != rv
+        if not cross.any():
+            return root
+        u, v, ru, rv = u[cross], v[cross], ru[cross], rv[cross]
+        np.minimum.at(root, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = root[root]
+            if np.array_equal(jumped, root):
+                break
+            root = jumped
 
-    The frontier is sized adaptively: iteration jobs run over
-    ~max(1, n_edges/500k) partitions, so small graphs (distinct mention
-    surfaces are vocabulary-bounded) pay single-task job latency instead of
-    full-width shuffles, while billion-edge graphs get full parallelism.
-    The per-iteration min() aggregate is partially (map-side) combined, so
-    head-entity stars (one label feeding millions of neighbors) reduce
-    before the shuffle — the skew defusal the north rule asks for; AQE
-    skew-join handles the join side."""
-    # setup actions trimmed to ONE (r7): the edge count materializes the
-    # lazily-checkpointed symmetric edge table; the repartitioned copy and
-    # the initial labels stay lazy and materialize inside round 1's job
-    # instead of each paying a synchronous setup action (the serial
-    # per-action floor is what the scaling bench's low/high ratio sees).
+
+def _local_union_find(batches):
+    """mapInPandas body: union-find over one edge partition as it arrives.
+
+    Emits (pid, node, root) for every node the partition's edges touch,
+    root being the smallest node of its component within the partition.
+    Nodes are factorized in sorted order, so the smallest index is the
+    smallest node (string order is code-point order, as in Spark)."""
+    frames = list(batches)
+    if not frames:
+        return
+    ab = pd.concat(frames, ignore_index=True)
+    codes, uniq = pd.factorize(pd.concat([ab["a"], ab["b"]], ignore_index=True), sort=True)
+    uniq = np.asarray(uniq)
+    n = len(ab)
+    root = _min_roots(codes[:n], codes[n:], len(uniq))
+    yield pd.DataFrame({
+        "pid": np.full(len(uniq), TaskContext.get().partitionId(), dtype=np.int32),
+        "node": uniq,
+        "root": uniq[root],
+    })
+
+
+def _without_size_estimate(df: DataFrame) -> DataFrame:
+    """`df` as a plan leaf that carries no size estimate.
+
+    A checkpoint keeps the size estimate of the plan it cut, and Catalyst
+    estimates a join as the product of its inputs. A round joins the
+    labels with themselves several times, so the estimate carried from
+    round to round gains digits geometrically: a 10-round merge of a
+    2,000-node graph took two minutes, nearly all of it planning in
+    BigInt arithmetic, instead of under twenty seconds. Rebuilding
+    the DataFrame from its rows (JVM-side, no Python) drops the
+    estimate; AQE still plans joins from measured shuffle sizes."""
+    spark = df.sparkSession
+    return DataFrame(
+        spark._jsparkSession.createDataFrame(df._jdf.javaRDD(), df._jdf.schema()), spark
+    )
+
+
+def _min_label_loop(edges: DataFrame, max_iter: int) -> DataFrame | None:
+    """Pointer-doubled min-label propagation over the graph `edges` (a, b).
+
+    Returns (node, component) for every endpoint, or None when there are
+    no edges. The frontier is sized adaptively: iteration jobs run over
+    ~max(1, n_edges/500k) partitions, so a small graph pays single-task
+    job latency instead of full-width shuffles. The per-iteration min()
+    aggregate is partially (map-side) combined, so a hub feeding many
+    neighbours reduces before the shuffle; AQE skew-join handles the join
+    side."""
     sym = (
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
@@ -188,19 +246,19 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     n_edges = sym.count()
+    if n_edges == 0:
+        return None
     n_parts = max(1, min(n_edges // 500_000, 1024))
-    spark = nodes.sparkSession
+    spark = edges.sparkSession
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     sym = sym.repartition(n_parts, "dst").localCheckpoint(eager=False)
-
     labels = (
-        nodes.select(F.col(node_col).alias("node"))
+        sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
         .repartition(n_parts, "node")
         .localCheckpoint(eager=False)
     )
-    converged = False
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
         for _ in range(max_iter):
@@ -217,61 +275,133 @@ def connected_components(
                 ).alias("component"),
                 F.col("component").alias("prev_component"),
             )
-            # step 2 — pointer doubling: component(v) := component(component(v)).
-            # Neighbor-min alone moves labels one hop per round (O(diameter) —
-            # a 50-node chain would silently exhaust max_iter); the label-of-
-            # label jump doubles propagation distance per round => O(log n).
-            # Applied TWICE per round (r7): a second label-of-label join
-            # quadruples propagation distance per convergence check, so the
-            # loop needs roughly half the rounds — and each round's count()
-            # action is serial driver floor. Extra doubling at the fixpoint
-            # is a no-op, so the final labels are unchanged.
-            parent = stepped.select(
-                F.col("node").alias("component"), F.col("component").alias("grand")
-            )
-            doubled = stepped.join(parent, "component", "left").select(
-                "node",
-                F.least(F.coalesce("grand", "component"), F.col("component")).alias(
-                    "component"
-                ),
-                "prev_component",
-            )
-            parent2 = doubled.select(
-                F.col("node").alias("component"), F.col("component").alias("grand")
-            )
-            doubled = doubled.join(parent2, "component", "left").select(
-                "node",
-                F.least(F.coalesce("grand", "component"), F.col("component")).alias(
-                    "component"
-                ),
-                "prev_component",
-            )
-            # ONE job per iteration: the previous label rides through the
-            # frontier (no extra join against the old labels), and the lazy
-            # localCheckpoint materializes inside the convergence count.
-            # (Separate checkpoint + join-count jobs doubled the
-            # per-iteration driver floor — the serial cost the scaling
-            # bench actually measures.)
-            new_labels = doubled.localCheckpoint(eager=False)
-            # full count (no limit-1 short circuit): the count job must touch
-            # every partition so the lazy checkpoint fully materializes
-            # before the next iteration builds on it
+            # step 2 — pointer doubling, twice: component(v) :=
+            # component(component(v)). Neighbor-min alone moves labels one
+            # hop per round (O(diameter)); each label-of-label jump doubles
+            # the distance, so a round covers 4x and the loop needs
+            # O(log n) rounds. Doubling at the fixpoint is a no-op.
+            doubled = stepped
+            for _jump in range(2):
+                parent = doubled.select(
+                    F.col("node").alias("component"), F.col("component").alias("grand")
+                )
+                doubled = doubled.join(parent, "component", "left").select(
+                    "node",
+                    F.least(F.coalesce("grand", "component"), F.col("component")).alias(
+                        "component"
+                    ),
+                    "prev_component",
+                )
+            # one action per round: the previous label rides through the
+            # frontier (no join against the old labels). Under AQE the
+            # checkpoint call itself runs the round's shuffle stages; the
+            # convergence count touches every partition (no limit-1 short
+            # circuit), so the checkpoint is complete before the next
+            # round builds on it
+            new_labels = _without_size_estimate(doubled.localCheckpoint(eager=False))
             changed = new_labels.where(
                 F.col("component") != F.col("prev_component")
             ).count()
             labels = new_labels.select("node", "component")
             if changed == 0:
-                converged = True
-                break
+                return labels
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
-            "(graph diameter too large?) — raise max_iter; silent mislabeling "
-            "is not an option"
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} iterations "
+        "(graph diameter too large?) — raise max_iter; silent mislabeling "
+        "is not an option"
+    )
+
+
+def connected_components(
+    nodes: DataFrame,
+    edges: DataFrame,
+    node_col: str = "node",
+    max_iter: int = 25,
+) -> DataFrame:
+    """Connected components of the graph `edges` (a, b), labelled for every
+    distinct value of `nodes[node_col]`.
+
+    Returns (node, component) where component = the smallest node id in
+    the node's component (reference cycle-guard analog,
+    assign_canonical_names.py:146-151). Three steps:
+
+    1. **Local union-find.** One mapInPandas pass runs a vectorized numpy
+       union-find over each edge partition where it already is (no
+       exchange), emitting (pid, node, local root).
+    2. **Boundary graph.** Nodes seen in more than one partition (one
+       groupBy: min(pid) != max(pid)) link each of their local roots:
+       boundary edges (node, local root).
+    3. **Merge.** Pointer-doubled min-label propagation runs on the
+       boundary graph only, then each local root takes its merged label.
+       Vocabulary-sized graphs arrive in one partition, which has no
+       boundary, so the merge is skipped and runs no job.
+
+    Input contract:
+
+    - `edges` endpoints are cast to the type of `nodes[node_col]`, which
+      the output keeps (string and bigint are both used).
+    - An edge with a null endpoint is ignored.
+    - A null node comes back as its own component: (null, null).
+    - Empty `edges`: every node is a singleton.
+    - An edge endpoint missing from `nodes` still joins its neighbours:
+      the components are those of the graph over nodes and edge
+      endpoints, restricted to `nodes` on output, so a component can be
+      labelled by an id that is not in `nodes`. The engine's callers take
+      their edges from their nodes.
+
+    Raises RuntimeError if the merge does not converge in `max_iter`
+    rounds — silent mislabeling is not an option."""
+    node_type = nodes.schema[node_col].dataType
+    local = (
+        edges.select(
+            F.col("a").cast(node_type).alias("a"), F.col("b").cast(node_type).alias("b")
         )
-    return labels
+        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .mapInPandas(
+            _local_union_find,
+            StructType([
+                StructField("pid", IntegerType(), False),
+                StructField("node", node_type, False),
+                StructField("root", node_type, False),
+            ]),
+        )
+        .localCheckpoint(eager=False)
+    )
+    node_root = local.select("node", F.col("root").alias("component"))
+    if local.rdd.getNumPartitions() <= 1:
+        merged = None  # no second edge partition for a node to cross into
+    else:
+        boundary = (
+            local.groupBy("node")
+            .agg(
+                (F.min("pid") != F.max("pid")).alias("crosses"),
+                F.collect_set("root").alias("roots"),
+            )
+            .where("crosses")
+            .select(F.col("node").alias("a"), F.explode("roots").alias("b"))
+            .where(F.col("a") != F.col("b"))
+        )
+        merged = _min_label_loop(boundary, max_iter)
+    if merged is not None:
+        node_root = (
+            node_root.join(
+                merged.select(
+                    F.col("node").alias("component"), F.col("component").alias("merged")
+                ),
+                "component",
+                "left",
+            )
+            .select("node", F.coalesce("merged", "component").alias("component"))
+            .distinct()
+        )
+    return (
+        nodes.select(F.col(node_col).alias("node"))
+        .distinct()
+        .join(node_root, "node", "left")
+        .select("node", F.coalesce("component", "node").alias("component"))
+    )
 
 
 def consensus_canonical(

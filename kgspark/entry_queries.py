@@ -2653,9 +2653,10 @@ def kg_pipeline_link_triples(spark, sf_dir):
 def kg_pipeline_components(spark, sf_dir):
     """Flagship CANONICALIZE-stage companion with a REAL oracle (closes
     round-4 verdict missing #2b): runs the pipeline's own
-    canonicalize.connected_components — pointer-doubled min-label
-    propagation, the exact code kg_pipeline_triples uses for same-as
-    clustering — on a graph DuckDB can independently solve by recursive
+    canonicalize.connected_components — per-partition union-find plus a
+    pointer-doubled min-label merge over the boundary graph (docs whose
+    edges land in 2+ partitions), the exact code kg_pipeline_triples
+    uses for same-as clustering — on a graph DuckDB can independently solve by recursive
     transitive closure: per gazetteer term, docs mentioning the term are
     chained in doc_id order (path edges, so components have real
     diameter — a clique fixture would never exercise the doubling), and

@@ -555,10 +555,12 @@ def near_dup_clusters(
     /root/reference/scripts/assign_canonical_names_simple.py:118-151).
 
     Scale shape: pairs are the banded equi-join (minhash_lsh_pairs);
-    components are pointer-doubled min-label propagation, O(log diameter)
-    rounds — and near-dup graphs are almost all tiny cliques, so the
-    frontier empties after round 1; singletons ride through the left
-    anti pattern below as their own cluster."""
+    components are a per-partition union-find over the pairs where they
+    land, then pointer-doubled min-label propagation over the boundary
+    graph only (docs that appear in pairs of 2+ partitions, linked to
+    their local roots). Near-dup graphs are almost all tiny cliques, so
+    most clusters are settled locally; docs in no pair come back as
+    their own cluster."""
     from pyspark.sql import Window
 
     from ..canonicalize import connected_components

@@ -47,9 +47,12 @@ def run_pipeline(
     reg = CheckpointRegistry(spark, checkpoint_dir) if checkpoint_dir else None
 
     # Stages consumed by 2+ downstream stages: break recomputation with a
-    # lazy localCheckpoint. Single-consumer stages stay fully lazy so
-    # Catalyst fuses them into their consumer (fewer jobs — job-launch
-    # latency is the serial floor of the pipeline at small scale).
+    # localCheckpoint. It is not lazy: with AQE on, building the
+    # checkpoint RDD runs every shuffle stage beneath it, so run_pipeline
+    # itself executes most of the pipeline (only the last stage after
+    # the final exchange waits for the first action). Single-consumer
+    # stages stay lazy so Catalyst fuses them into their consumer (fewer
+    # jobs — job-launch latency is the serial floor at small scale).
     _SHARED = {"annotated", "links", "surfaces", "surface_entity", "components"}
 
     def ck(name: str, make, partition_by=None) -> DataFrame:

@@ -7,6 +7,6 @@ import pytest
 def spark():
     from kgspark.session import get_spark
 
-    s = get_spark(app_name="kgspark-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="kgspark-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s

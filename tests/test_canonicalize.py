@@ -65,6 +65,105 @@ def test_cc_star_skew(spark):
     assert len(set(comp.values())) == 1
 
 
+def test_cc_null_endpoints_ignored_null_node_kept(spark):
+    """Edges with a null endpoint connect nothing; a null node comes back
+    as its own component."""
+    comp = _cc(spark, ["a", "b", "c", None], [("a", None), (None, "b"), ("b", "c"), (None, None)])
+    assert comp == {"a": "a", "b": "b", "c": "b", None: None}
+
+
+def test_cc_empty_edges_all_singletons(spark):
+    comp = _cc(spark, ["x", "y", "z"], [])
+    assert comp == {"x": "x", "y": "y", "z": "z"}
+
+
+def test_cc_missing_endpoint_bridges(spark):
+    """Endpoints absent from `nodes` still join their neighbours, and the
+    label is the smallest id of the whole component, listed or not."""
+    comp = _cc(spark, ["b", "c", "d"], [("a", "b"), ("a", "c")])
+    assert comp == {"b": "a", "c": "a", "d": "d"}
+
+
+def test_cc_preserves_node_type(spark):
+    big = 10**12
+    ndf = spark.createDataFrame([(big + i,) for i in range(4)], "node bigint")
+    edf = spark.createDataFrame([(big + 3, big + 1)], "a bigint, b bigint")
+    out = canon.connected_components(ndf, edf)
+    assert [f.dataType.simpleString() for f in out.schema] == ["bigint", "bigint"]
+    assert dict(out.collect()) == {big: big, big + 1: big + 1, big + 2: big + 2, big + 3: big + 1}
+    sout = canon.connected_components(
+        ndf.select(F.col("node").cast("string").alias("node")), edf
+    )
+    assert [f.dataType.simpleString() for f in sout.schema] == ["string", "string"]
+    assert dict(sout.collect())[str(big + 3)] == str(big + 1)
+
+
+def _reference_components(nodes, edges):
+    """Pure-Python union-find; the root of a set is its smallest member."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
+
+
+def _random_graph(rng, ids, n_edges, path_len):
+    edges = [tuple(rng.sample(ids, 2)) for _ in range(n_edges)]
+    path = rng.sample(ids, path_len)
+    return edges + list(zip(path, path[1:]))
+
+
+def test_cc_random_graphs_match_union_find(spark):
+    """Edges spread over 7 partitions, so local union-find leaves a
+    boundary graph for the min-label merge (a 300-node path in random
+    order crosses partitions many times)."""
+    import random
+
+    rng = random.Random(20240607)
+    ids = rng.sample(range(-(2**40), 2**40), 2000)
+    edges = _random_graph(rng, ids, 1600, 300)
+    ndf = spark.createDataFrame([(i,) for i in ids], "node bigint")
+    edf = spark.createDataFrame(edges, "a bigint, b bigint").repartition(7)
+    got = dict(canon.connected_components(ndf, edf).collect())
+    assert got == _reference_components(ids, edges)
+
+    names = sorted({"".join(rng.choices("aZé中_0", k=4)) for _ in range(400)})
+    sedges = _random_graph(rng, names, 250, 60)
+    ndf = spark.createDataFrame([(n,) for n in names], "node string")
+    edf = spark.createDataFrame(sedges, "a string, b string").repartition(7)
+    got = dict(canon.connected_components(ndf, edf).collect())
+    assert got == _reference_components(names, sedges)
+
+
+def test_cc_single_partition_job_budget(spark):
+    """A vocabulary-sized graph in one partition: local union-find settles
+    it, no node crosses partitions so the merge is skipped, and the whole
+    call — output included — stays within 9 Spark jobs."""
+    nodes = [f"n{i:02d}" for i in range(70)]
+    edges = [(nodes[6 * p + i], nodes[6 * p + i + 1]) for p in range(10) for i in range(5)]
+    ndf = spark.createDataFrame([(n,) for n in nodes], "node string").coalesce(1)
+    edf = spark.createDataFrame(edges, "a string, b string").coalesce(1)
+    sc = spark.sparkContext
+    group = "test-cc-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        comp = dict(canon.connected_components(ndf, edf).collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert comp == _reference_components(nodes, edges)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 9, n_jobs
+
+
 def test_lsh_blocking_recall_on_ocr_variants(spark):
     """Every OCR pair must survive LSH blocking (blocking-recall test,
     SURVEY.md §5.3 — analog of the reference bbox-prefilter assumption)."""

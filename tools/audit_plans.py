@@ -98,7 +98,7 @@ def main():
     from kgspark.entry_queries import QUERIES
     from kgspark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     failures = 0
