@@ -2659,9 +2659,11 @@ def kg_pipeline_components(spark, sf_dir):
     uses for same-as clustering — on a graph DuckDB can independently solve by recursive
     transitive closure: per gazetteer term, docs mentioning the term are
     chained in doc_id order (path edges, so components have real
-    diameter — a clique fixture would never exercise the doubling), and
-    paths sharing a doc merge across terms. The oracle computes
-    min-reachable-id per node with WITH RECURSIVE.
+    diameter), and paths sharing a doc merge across terms. The oracle
+    computes min-reachable-id per node with WITH RECURSIVE. At sf0.01
+    the 3,889 edges arrive in one partition, so the union-find settles
+    them and the merge does not run; tests/test_canonicalize.py covers
+    the merge on graphs spread over several partitions.
 
     The lag() path construction sorts each term's docs on one reducer —
     fine for an oracle fixture, NOT the scale path (the pipeline's real

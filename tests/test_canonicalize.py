@@ -12,11 +12,19 @@ from pyspark.sql import functions as F
 from kgspark import canonicalize as canon
 
 
+def _labels(components):
+    """{node: component} of a connected_components result, which must hold
+    one row per node."""
+    rows = components.collect()
+    comp = {r["node"]: r["component"] for r in rows}
+    assert len(comp) == len(rows), "a node came back more than once"
+    return comp
+
+
 def _cc(spark, nodes, edges):
     ndf = spark.createDataFrame([(n,) for n in nodes], "node string")
     edf = spark.createDataFrame(edges, "a string, b string")
-    out = canon.connected_components(ndf, edf)
-    return {r["node"]: r["component"] for r in out.collect()}
+    return _labels(canon.connected_components(ndf, edf))
 
 
 def test_cc_chain(spark):
@@ -65,6 +73,18 @@ def test_cc_star_skew(spark):
     assert len(set(comp.values())) == 1
 
 
+def test_cc_hub_across_partitions_one_row_per_node(spark):
+    """A hub below all its spokes is its own local root in every partition
+    its edges land in, so it makes no boundary edge; it still comes back
+    exactly once."""
+    nodes = ["hub"] + [f"s{i:03d}" for i in range(200)]
+    ndf = spark.createDataFrame([(n,) for n in nodes], "node string")
+    edf = spark.createDataFrame([("hub", s) for s in nodes[1:]], "a string, b string")
+    out = canon.connected_components(ndf, edf.repartition(5))
+    assert out.count() == ndf.distinct().count()
+    assert {r["component"] for r in out.collect()} == {"hub"}
+
+
 def test_cc_null_endpoints_ignored_null_node_kept(spark):
     """Edges with a null endpoint connect nothing; a null node comes back
     as its own component."""
@@ -90,12 +110,12 @@ def test_cc_preserves_node_type(spark):
     edf = spark.createDataFrame([(big + 3, big + 1)], "a bigint, b bigint")
     out = canon.connected_components(ndf, edf)
     assert [f.dataType.simpleString() for f in out.schema] == ["bigint", "bigint"]
-    assert dict(out.collect()) == {big: big, big + 1: big + 1, big + 2: big + 2, big + 3: big + 1}
+    assert _labels(out) == {big: big, big + 1: big + 1, big + 2: big + 2, big + 3: big + 1}
     sout = canon.connected_components(
         ndf.select(F.col("node").cast("string").alias("node")), edf
     )
     assert [f.dataType.simpleString() for f in sout.schema] == ["string", "string"]
-    assert dict(sout.collect())[str(big + 3)] == str(big + 1)
+    assert _labels(sout)[str(big + 3)] == str(big + 1)
 
 
 def _reference_components(nodes, edges):
@@ -123,24 +143,25 @@ def _random_graph(rng, ids, n_edges, path_len):
 
 
 def test_cc_random_graphs_match_union_find(spark):
-    """Edges spread over 7 partitions, so local union-find leaves a
-    boundary graph for the min-label merge (a 300-node path in random
-    order crosses partitions many times)."""
+    """Edges spread over 7 (bigint) and 3 (string) partitions, so local
+    union-find leaves a boundary graph for the min-label merge (a path in
+    random order crosses partitions many times). The merge, not the graph
+    size, sets the runtime: 5-8 rounds at under a second each."""
     import random
 
     rng = random.Random(20240607)
-    ids = rng.sample(range(-(2**40), 2**40), 2000)
-    edges = _random_graph(rng, ids, 1600, 300)
+    ids = rng.sample(range(-(2**40), 2**40), 300)
+    edges = _random_graph(rng, ids, 240, 40)
     ndf = spark.createDataFrame([(i,) for i in ids], "node bigint")
     edf = spark.createDataFrame(edges, "a bigint, b bigint").repartition(7)
-    got = dict(canon.connected_components(ndf, edf).collect())
+    got = _labels(canon.connected_components(ndf, edf))
     assert got == _reference_components(ids, edges)
 
-    names = sorted({"".join(rng.choices("aZé中_0", k=4)) for _ in range(400)})
-    sedges = _random_graph(rng, names, 250, 60)
+    names = sorted({"".join(rng.choices("aZé中_0", k=4)) for _ in range(60)})
+    sedges = _random_graph(rng, names, 40, 12)
     ndf = spark.createDataFrame([(n,) for n in names], "node string")
-    edf = spark.createDataFrame(sedges, "a string, b string").repartition(7)
-    got = dict(canon.connected_components(ndf, edf).collect())
+    edf = spark.createDataFrame(sedges, "a string, b string").repartition(3)
+    got = _labels(canon.connected_components(ndf, edf))
     assert got == _reference_components(names, sedges)
 
 
@@ -156,7 +177,7 @@ def test_cc_single_partition_job_budget(spark):
     group = "test-cc-job-budget"
     sc.setJobGroup(group, group)
     try:
-        comp = dict(canon.connected_components(ndf, edf).collect())
+        comp = _labels(canon.connected_components(ndf, edf))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert comp == _reference_components(nodes, edges)
