@@ -26,9 +26,11 @@ assign_canonical_names_simple.py:94-124) as distributed primitives:
    (reference cycle guard -> `changed == 0`), and relabels the local
    roots. Distinct mention surfaces are vocabulary-sized and arrive in one
    partition, which has no boundary, so no merge job runs. Hash-partitioned
-   edges put most nodes of degree >= 2 on the boundary; the merge then
-   gains from each partition's components being stars (fewer rounds), not
-   from a small boundary.
+   edges put most nodes of degree >= 2 on the boundary. The merge's rounds
+   track the boundary graph's diameter, not log n: the loop never hooks a
+   local minimum to a smaller root (Shiloach-Vishkin does), so a smaller
+   label reaches a minimum one neighbour hop per round. Each partition's
+   components collapsing to stars shortens that diameter.
    Head-entity skew ("Canada" on 35% of pages) never reaches this step at
    page-cardinality: CC runs over *distinct surfaces*; a star inside a
    partition costs the union-find one pass, and a star across partitions
@@ -60,6 +62,7 @@ JACCARD_SAMEAS = 0.5
 LEV_RATIO_SAMEAS = 0.7  # reference OCR-variant band is sim 60-95 (fix_ocr_errors.py:183-187)
 AVG_SIM_GATE = 70.0
 MIN_SIM_GATE = 60.0
+MAX_ITER = 25  # merge rounds before connected_components raises
 
 
 def _shingles(col: str, n: int = 3):
@@ -232,7 +235,7 @@ def _without_size_estimate(df: DataFrame) -> DataFrame:
     )
 
 
-def _min_label_loop(edges: DataFrame, max_iter: int) -> DataFrame | None:
+def _min_label_loop(edges: DataFrame) -> DataFrame | None:
     """Pointer-doubled min-label propagation over the graph `edges` (a, b).
 
     Returns (node, component) for every endpoint, or None when there are
@@ -264,7 +267,7 @@ def _min_label_loop(edges: DataFrame, max_iter: int) -> DataFrame | None:
     )
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        for _ in range(max_iter):
+        for _ in range(MAX_ITER):
             # step 1 — neighbor min: m(v) = min(label(v), labels of neighbors)
             neighbor_labels = (
                 sym.join(labels.withColumnRenamed("node", "dst"), "dst")
@@ -279,10 +282,12 @@ def _min_label_loop(edges: DataFrame, max_iter: int) -> DataFrame | None:
                 F.col("component").alias("prev_component"),
             )
             # step 2 — pointer doubling, twice: component(v) :=
-            # component(component(v)). Neighbor-min alone moves labels one
-            # hop per round (O(diameter)); each label-of-label jump doubles
-            # the distance, so a round covers 4x and the loop needs
-            # O(log n) rounds. Doubling at the fixpoint is a no-op.
+            # component(component(v)). It shortcuts chains of labels that
+            # already point at each other, but a node that is its own label
+            # (a local minimum) is never hooked to a smaller root, so a
+            # smaller label still reaches it one neighbour hop per round:
+            # the round count tracks the diameter, not log n (5-8 rounds
+            # on a 120-node graph). Doubling at the fixpoint is a no-op.
             doubled = stepped
             for _jump in range(2):
                 parent = doubled.select(
@@ -311,8 +316,8 @@ def _min_label_loop(edges: DataFrame, max_iter: int) -> DataFrame | None:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} iterations "
-        "(graph diameter too large?) — raise max_iter; silent mislabeling "
+        f"connected_components did not converge in {MAX_ITER} iterations "
+        "(graph diameter too large?) — raise MAX_ITER; silent mislabeling "
         "is not an option"
     )
 
@@ -321,7 +326,6 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     node_col: str = "node",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components of the graph `edges` (a, b), labelled for every
     distinct value of `nodes[node_col]`.
@@ -354,7 +358,7 @@ def connected_components(
       labelled by an id that is not in `nodes`. The engine's callers take
       their edges from their nodes.
 
-    Raises RuntimeError if the merge does not converge in `max_iter`
+    Raises RuntimeError if the merge does not converge in `MAX_ITER`
     rounds — silent mislabeling is not an option."""
     node_type = nodes.schema[node_col].dataType
     local = (
@@ -386,7 +390,7 @@ def connected_components(
             .select(F.col("node").alias("a"), F.explode("roots").alias("b"))
             .where(F.col("a") != F.col("b"))
         )
-        merged = _min_label_loop(boundary, max_iter)
+        merged = _min_label_loop(boundary)
         if merged is not None:
             node_root = node_root.join(
                 merged.select(

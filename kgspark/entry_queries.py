@@ -2997,7 +2997,8 @@ QUERIES["kg_pipeline_triples"] = kg_pipeline_triples
 # when-chains), json_extract_events (§2.8 extraction: melt/observations),
 # mode_event_type (A4: kg_pipeline_consensus mode window), unpivot_lineitem
 # (R1: melt_observations_part), dedup_simhash (dedup_simhash_hamming),
-# ann_lsh_bucketed (ann_lsh_banded), dedup_minhash_lsh_fast (no_oracle by
+# ann_lsh_bucketed (its 16-bucket srp_bucket blocking is gated inside
+# dedup_embedding_cosine), dedup_minhash_lsh_fast (no_oracle by
 # design — rows-only row spent a gate slot; twin-pinned vs dedup_minhash_lsh
 # in pytest). Round 6 demotes four more relational warm-ups (all green in
 # CORRECTNESS_r05, so each has a hard-signal record) to gate the four new
@@ -3006,9 +3007,11 @@ QUERIES["kg_pipeline_triples"] = kg_pipeline_triples
 # inside bloom_incremental_dedup's is_new screen), q3_top_revenue_orders
 # (J4 enrichment join — same shape gated in provenance_entities_docs),
 # window_top_order_per_customer (W1/W2 argmax window — same shape gated in
-# text_tfidf_topk and sample_stratified rank windows), ann_lsh_banded (the
-# banded-SRP machinery is also gated inside dedup_embedding_cosine, and the
-# ANN family keeps brute-force + IVF rows in-window), text_langid (its
+# text_tfidf_topk and sample_stratified rank windows), ann_lsh_banded (no
+# gated query runs banded SRP: dedup_embedding_cosine uses the 16-bucket
+# simsearch.embedding_dup_pairs, and lsh_banded_topk and
+# embedding_dup_pairs_banded are pinned only in pytest; the ANN family
+# keeps brute-force + IVF rows in-window), text_langid (its
 # lexicon-hits argmax is re-exercised verbatim inside corpus_c4_filter's
 # lang gate; r5+r6 driver greens + the local sweep record).
 _DEMOTED = [

@@ -15,7 +15,6 @@ MERGE-style idempotent rewrite are preserved).
 
 from __future__ import annotations
 
-import json
 import shutil
 from pathlib import Path
 from typing import Callable
@@ -37,8 +36,7 @@ class CheckpointRegistry:
     def exists(self, name: str) -> bool:
         return (self._path(name) / MARKER).exists()
 
-    def write(self, name: str, df: DataFrame, partition_by: list[str] | None = None,
-              meta: dict | None = None) -> None:
+    def write(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
         p = self._path(name)
         if p.exists():
             shutil.rmtree(p)
@@ -46,7 +44,7 @@ class CheckpointRegistry:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(str(p))
-        (p / MARKER).write_text(json.dumps(meta or {}))
+        (p / MARKER).write_text("{}")
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(str(self._path(name)))

@@ -570,9 +570,7 @@ def near_dup_clusters(
         n_hashes=n_hashes, n_bands=n_bands, shingle_n=shingle_n,
     )
     nodes = docs.select(F.col(id_col).alias("node"))
-    comp = connected_components(
-        nodes, pairs.select(F.col("a"), F.col("b")), max_iter=25
-    )
+    comp = connected_components(nodes, pairs.select(F.col("a"), F.col("b")))
     w_sz = F.count("*").over(Window.partitionBy("component"))
     return (
         comp.select(F.col("node").alias(id_col), "component")

@@ -49,10 +49,10 @@ def pagerank(
     window's exchange — and the partitioning is reused every round], sum
     shares by dst [map-side combined — a billion-in-degree hub reduces
     before the wire], left join back to nodes. Lineage is cut each round
-    with a LAZY localCheckpoint (r7): the eager per-round checkpoints ran
-    one synchronous job per iteration; lazy ones materialize inside the
-    consumer's single job while still truncating lineage and computing
-    each round once (ranks has two consumers per round).
+    with localCheckpoint(eager=False) (r7), so each round is computed once
+    (ranks has two consumers per round). It is not lazy under AQE: the
+    call runs the round's shuffle stages at once, and only the stage after
+    the last exchange waits for the next consumer.
 
     Degree attaches as a COUNT window over src rather than an aggregate +
     join-back (r7): the old form made Catalyst compute the whole
@@ -110,7 +110,8 @@ def pagerank(
                 .localCheckpoint(eager=False)
             )
         # materialize the last round while the loop's partitioning conf is
-        # still in force (the lazy checkpoints execute on first action)
+        # still in force (each checkpoint call ran its round's shuffles;
+        # the stage after the last exchange waits for an action)
         ranks = ranks.localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
@@ -153,8 +154,8 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
     lower_first = F.struct(F.col("deg_a"), F.col("a")) < F.struct(F.col("deg_b"), F.col("b"))
     # the oriented edge table feeds all three wedge-join branches: cut the
-    # lineage once (lazy, materializes on first use) so the edge scan +
-    # degree joins run once, not three times
+    # lineage once so the edge scan + degree joins run once, not three
+    # times (under AQE this call already runs the degree joins' shuffles)
     o = withdeg.select(
         F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("src"),
         F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("dst"),

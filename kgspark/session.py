@@ -84,9 +84,10 @@ def get_spark(
 def unpersist_all(spark: SparkSession) -> int:
     """Drop every persisted RDD/DataFrame (incl. localCheckpoint storage).
 
-    run_pipeline localCheckpoints each stage; in a long-lived session
-    (benchmark loops, notebooks) those persist until dropped and eventually
-    GC-thrash the JVM. Call between independent pipeline runs."""
+    Without a checkpoint dir, run_pipeline localCheckpoints each shared
+    stage it builds (one read by two or more stages); in a long-lived
+    session (benchmark loops, notebooks) those persist until dropped and
+    eventually GC-thrash the JVM. Call between independent pipeline runs."""
     spark.catalog.clearCache()
     jrdds = spark.sparkContext._jsc.getPersistentRDDs()
     rdds = list(jrdds.values())

@@ -47,7 +47,7 @@ def test_cc_long_chain_converges(spark):
 
 
 def test_cc_very_long_chain_pointer_doubling(spark):
-    """60-node path: plain min-propagation needs 60 rounds (> max_iter=25);
+    """60-node path: plain min-propagation needs 60 rounds (> MAX_ITER=25);
     pointer doubling must converge within the budget or raise — never
     silently mislabel."""
     nodes = [f"n{i:02d}" for i in range(60)]

@@ -3,6 +3,8 @@ bar), determinism across parallelism levels, and checkpoint resume."""
 
 from __future__ import annotations
 
+import time
+
 from kgspark import fixtures
 from kgspark.evaluate import precision_recall
 from kgspark.pipeline import run_pipeline
@@ -52,11 +54,39 @@ def test_partial_resume(tmp_path, spark):
     assert second["triples"].count() == n1
 
 
-def test_stages_mapping_builds_lazily(tmp_path, spark):
-    """The returned mapping lists every stage without building one; derived
-    tables are built (and, checkpointed, written) on first item access."""
-    from pathlib import Path
+def test_run_pipeline_call_builds_nothing(tmp_path, spark):
+    """The call only declares the run: with or without a checkpoint dir it
+    runs no Spark job (not even the gazetteer collect) and writes no stage."""
+    from kgspark.io import MARKER
 
+    pages = fixtures.gen_pages(spark, 40)
+    aliases = fixtures.gen_alias_index(spark)
+    ckdir = tmp_path / "ck_call"
+    sc = spark.sparkContext
+    group = "test-run-pipeline-call"
+    sc.setJobGroup(group, group)
+    try:
+        run_pipeline(spark, pages, aliases)
+        run_pipeline(spark, pages, aliases, checkpoint_dir=str(ckdir))
+        # sentinel: the listener bus reports job starts in order, so once
+        # this job is seen every job the calls ran is seen too
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = []
+    for _ in range(200):
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        if jobs:
+            break
+        time.sleep(0.05)
+    assert len(jobs) == 1, jobs
+    assert not list(ckdir.glob(f"*/{MARKER}"))
+
+
+def test_stages_mapping_builds_lazily(tmp_path, spark):
+    """The returned mapping lists every stage without building one; a stage
+    is built (and, checkpointed, written) on first item access, after the
+    stages it reads and none other."""
     from kgspark.io import MARKER
 
     pages = fixtures.gen_pages(spark, 40)
@@ -70,13 +100,15 @@ def test_stages_mapping_builds_lazily(tmp_path, spark):
         "entity_snapshots", "entity_timeline",
     }
     assert "entities" in out and len(out) == 18
-    done = Path(ckdir) / "entities" / MARKER
     out["triples"]
-    assert not done.exists()
-    # annotate reads html directly: extract is written only when asked for
-    assert not (Path(ckdir) / "extracted" / MARKER).exists()
+    # triples and its inputs only: not canonical_map, and not extracted
+    # (annotate reads html directly)
+    assert {p.parent.name for p in ckdir.glob(f"*/{MARKER}")} == {
+        "annotated", "mentions", "relations", "links", "surfaces", "surface_entity",
+        "components", "resolved_surfaces", "triples",
+    }
     out["entities"]
-    assert done.exists()
+    assert (ckdir / "entities" / MARKER).exists()
 
 
 def test_bulk_paragraphs_draw_identical_to_choice_loop():

@@ -78,9 +78,10 @@ def main() -> None:
             splits[stage] = round(time.time() - t0, 2)
         print(json.dumps({"master": master, "pages": n_pages, "stage_sec": splits}))
     else:
-        # The timed section covers the WHOLE job — plan construction, the
-        # canonicalization loop (which executes inside run_pipeline), and
-        # the final materialization.
+        # The timed section covers the WHOLE job: run_pipeline only
+        # declares the stages; reading `triples` builds them (shared
+        # stages run their shuffles as they are built, canonicalization
+        # included) and count() runs the rest.
         n_triples = out["triples"].count()
         dt = time.time() - t0
         print(json.dumps({"master": master, "pages": n_pages, "triples": n_triples,
