@@ -15,27 +15,22 @@ assign_canonical_names_simple.py:94-124) as distributed primitives:
    link_csd_years_spatial_v2.py:135-165 shape: block -> exact verify ->
    threshold classify). Surfaces that linked to the same entity id are
    SAME_AS by construction (the reference's SAME_AS/iou>=0.999 chains).
-3. **Connected components** in one vectorized pass plus a boundary
-   merge: a numpy union-find runs over each edge partition where it
+3. **Connected components** by a vectorized union-find over halving
+   partitions: a numpy union-find runs over each edge partition where it
    lands (one `mapInPandas`, no exchange) and labels every node with its
    local root, the smallest node of its local component. Only nodes seen
    in more than one partition form the boundary graph, edges (node,
-   local root); pointer-doubled min-label propagation with
-   `localCheckpoint()` per frontier (the north rule's "checkpointed
-   frontiers") runs on that graph alone, with convergence detection
-   (reference cycle guard -> `changed == 0`), and relabels the local
-   roots. Distinct mention surfaces are vocabulary-sized and arrive in one
-   partition, which has no boundary, so no merge job runs. Hash-partitioned
-   edges put most nodes of degree >= 2 on the boundary. The merge's rounds
-   track the boundary graph's diameter, not log n: the loop never hooks a
-   local minimum to a smaller root (Shiloach-Vishkin does), so a smaller
-   label reaches a minimum one neighbour hop per round. Each partition's
-   components collapsing to stars shortens that diameter.
+   local root); that graph goes through the same step over half as many
+   partitions, and its labels relabel the local roots. A level with one
+   partition has no boundary, so P edge partitions take at most
+   floor(log2 P) + 1 levels, whatever the graph's diameter (the
+   reference's cycle guard has no analog: union-find cannot loop).
+   Distinct mention surfaces are vocabulary-sized and arrive in one
+   partition, so only the first level runs.
    Head-entity skew ("Canada" on 35% of pages) never reaches this step at
    page-cardinality: CC runs over *distinct surfaces*; a star inside a
    partition costs the union-find one pass, and a star across partitions
-   leaves one boundary edge per partition for the merge's map-side
-   combined min().
+   leaves at most one boundary edge per partition.
 4. **Consensus canonical form**: occurrence-weighted mode per component
    (reference A4) gated by avg/min similarity >= 70/60 (reference
    assign_canonical_names_simple.py:117-124) so true renames
@@ -51,8 +46,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from .link import normalize_surface  # noqa: F401  (re-exported for callers)
-
 N_HASHES = 12  # r=1 banding: any colliding minhash makes a candidate pair.
 # Mention surfaces are short (1-4 words), so 3-gram Jaccard of true OCR
 # variants can be as low as ~0.25; r=1 keeps blocking recall ~1-(1-j)^K
@@ -62,7 +55,6 @@ JACCARD_SAMEAS = 0.5
 LEV_RATIO_SAMEAS = 0.7  # reference OCR-variant band is sim 60-95 (fix_ocr_errors.py:183-187)
 AVG_SIM_GATE = 70.0
 MIN_SIM_GATE = 60.0
-MAX_ITER = 25  # merge rounds before connected_components raises
 
 
 def _shingles(col: str, n: int = 3):
@@ -218,107 +210,47 @@ def _local_union_find(batches):
     })
 
 
-def _without_size_estimate(df: DataFrame) -> DataFrame:
-    """`df` as a plan leaf that carries no size estimate.
-
-    A checkpoint keeps the size estimate of the plan it cut, and Catalyst
-    estimates a join as the product of its inputs. A round joins the
-    labels with themselves several times, so the estimate carried from
-    round to round gains digits geometrically: a 10-round merge of a
-    2,000-node graph took two minutes, nearly all of it planning in
-    BigInt arithmetic, instead of under twenty seconds. Rebuilding
-    the DataFrame from its rows (JVM-side, no Python) drops the
-    estimate; AQE still plans joins from measured shuffle sizes."""
-    spark = df.sparkSession
-    return DataFrame(
-        spark._jsparkSession.createDataFrame(df._jdf.javaRDD(), df._jdf.schema()), spark
+def _union_find_levels(edges: DataFrame) -> DataFrame:
+    """(node, component) for every endpoint of the non-null edges (a, b):
+    one level of `connected_components`, which recurses on the boundary."""
+    node_type = edges.schema["a"].dataType
+    local = edges.mapInPandas(
+        _local_union_find,
+        StructType([
+            StructField("pid", IntegerType(), False),
+            StructField("node", node_type, False),
+            StructField("root", node_type, False),
+        ]),
+    ).localCheckpoint(eager=False)
+    node_root = local.select("node", F.col("root").alias("component"))
+    n_parts = local.rdd.getNumPartitions()
+    # one edge partition: every node has exactly one row and no node can
+    # cross into a second partition, so there is nothing to merge
+    if n_parts <= 1:
+        return node_root
+    boundary = (
+        local.groupBy("node")
+        .agg(
+            (F.min("pid") != F.max("pid")).alias("crosses"),
+            F.collect_set("root").alias("roots"),
+        )
+        .where("crosses")
+        .select(F.col("node").alias("a"), F.explode("roots").alias("b"))
+        .where(F.col("a") != F.col("b"))
     )
-
-
-def _min_label_loop(edges: DataFrame) -> DataFrame | None:
-    """Pointer-doubled min-label propagation over the graph `edges` (a, b).
-
-    Returns (node, component) for every endpoint, or None when there are
-    no edges. The frontier is sized adaptively: iteration jobs run over
-    ~max(1, n_edges/500k) partitions, so a small graph pays single-task
-    job latency instead of full-width shuffles. The per-iteration min()
-    aggregate is partially (map-side) combined, so a hub feeding many
-    neighbours reduces before the shuffle; AQE skew-join handles the join
-    side."""
-    sym = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    merged = _union_find_levels(boundary.coalesce(n_parts // 2))
+    # a node has one row per partition it appears in, all with the same
+    # label once its local roots take their merged label (even a node that
+    # is its own local root everywhere, like a hub below all its spokes,
+    # and so makes no boundary edge)
+    return (
+        node_root.join(
+            merged.select(F.col("node").alias("component"), F.col("component").alias("merged")),
+            "component",
+            "left",
+        )
+        .select("node", F.coalesce("merged", "component").alias("component"))
         .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n_edges = sym.count()
-    if n_edges == 0:
-        return None
-    n_parts = max(1, min(n_edges // 500_000, 1024))
-    spark = edges.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    sym = sym.repartition(n_parts, "dst").localCheckpoint(eager=False)
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .repartition(n_parts, "node")
-        .localCheckpoint(eager=False)
-    )
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        for _ in range(MAX_ITER):
-            # step 1 — neighbor min: m(v) = min(label(v), labels of neighbors)
-            neighbor_labels = (
-                sym.join(labels.withColumnRenamed("node", "dst"), "dst")
-                .groupBy(F.col("src").alias("node"))
-                .agg(F.min("component").alias("nbr_component"))
-            )
-            stepped = labels.join(neighbor_labels, "node", "left").select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_component", "component")
-                ).alias("component"),
-                F.col("component").alias("prev_component"),
-            )
-            # step 2 — pointer doubling, twice: component(v) :=
-            # component(component(v)). It shortcuts chains of labels that
-            # already point at each other, but a node that is its own label
-            # (a local minimum) is never hooked to a smaller root, so a
-            # smaller label still reaches it one neighbour hop per round:
-            # the round count tracks the diameter, not log n (5-8 rounds
-            # on a 120-node graph). Doubling at the fixpoint is a no-op.
-            doubled = stepped
-            for _jump in range(2):
-                parent = doubled.select(
-                    F.col("node").alias("component"), F.col("component").alias("grand")
-                )
-                doubled = doubled.join(parent, "component", "left").select(
-                    "node",
-                    F.least(F.coalesce("grand", "component"), F.col("component")).alias(
-                        "component"
-                    ),
-                    "prev_component",
-                )
-            # one action per round: the previous label rides through the
-            # frontier (no join against the old labels). Under AQE the
-            # checkpoint call itself runs the round's shuffle stages; the
-            # convergence count touches every partition (no limit-1 short
-            # circuit), so the checkpoint is complete before the next
-            # round builds on it
-            new_labels = _without_size_estimate(doubled.localCheckpoint(eager=False))
-            changed = new_labels.where(
-                F.col("component") != F.col("prev_component")
-            ).count()
-            labels = new_labels.select("node", "component")
-            if changed == 0:
-                return labels
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    raise RuntimeError(
-        f"connected_components did not converge in {MAX_ITER} iterations "
-        "(graph diameter too large?) — raise MAX_ITER; silent mislabeling "
-        "is not an option"
     )
 
 
@@ -332,18 +264,21 @@ def connected_components(
 
     Returns (node, component) where component = the smallest node id in
     the node's component (reference cycle-guard analog,
-    assign_canonical_names.py:146-151). Three steps:
+    assign_canonical_names.py:146-151). Each level has two steps:
 
     1. **Local union-find.** One mapInPandas pass runs a vectorized numpy
        union-find over each edge partition where it already is (no
        exchange), emitting (pid, node, local root).
     2. **Boundary graph.** Nodes seen in more than one partition (one
        groupBy: min(pid) != max(pid)) link each of their local roots:
-       boundary edges (node, local root).
-    3. **Merge.** Pointer-doubled min-label propagation runs on the
-       boundary graph only, then each local root takes its merged label.
-       Vocabulary-sized graphs arrive in one partition, which has no
-       boundary, so the merge is skipped and runs no job.
+       boundary edges (node, local root). These are coalesced to half as
+       many partitions and labelled by the next level; each local root
+       then takes its merged label.
+
+    A level with one partition has no boundary, so at most
+    floor(log2 P) + 1 levels run for P edge partitions, whatever the
+    graph's diameter. Vocabulary-sized graphs arrive in one partition, so
+    only the first level runs.
 
     Input contract:
 
@@ -356,54 +291,13 @@ def connected_components(
       the components are those of the graph over nodes and edge
       endpoints, restricted to `nodes` on output, so a component can be
       labelled by an id that is not in `nodes`. The engine's callers take
-      their edges from their nodes.
-
-    Raises RuntimeError if the merge does not converge in `MAX_ITER`
-    rounds — silent mislabeling is not an option."""
+      their edges from their nodes."""
     node_type = nodes.schema[node_col].dataType
-    local = (
+    node_root = _union_find_levels(
         edges.select(
             F.col("a").cast(node_type).alias("a"), F.col("b").cast(node_type).alias("b")
-        )
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .mapInPandas(
-            _local_union_find,
-            StructType([
-                StructField("pid", IntegerType(), False),
-                StructField("node", node_type, False),
-                StructField("root", node_type, False),
-            ]),
-        )
-        .localCheckpoint(eager=False)
+        ).where(F.col("a").isNotNull() & F.col("b").isNotNull())
     )
-    node_root = local.select("node", F.col("root").alias("component"))
-    # one edge partition: every node has exactly one row and no node can
-    # cross into a second partition, so there is nothing to merge
-    if local.rdd.getNumPartitions() > 1:
-        boundary = (
-            local.groupBy("node")
-            .agg(
-                (F.min("pid") != F.max("pid")).alias("crosses"),
-                F.collect_set("root").alias("roots"),
-            )
-            .where("crosses")
-            .select(F.col("node").alias("a"), F.explode("roots").alias("b"))
-            .where(F.col("a") != F.col("b"))
-        )
-        merged = _min_label_loop(boundary)
-        if merged is not None:
-            node_root = node_root.join(
-                merged.select(
-                    F.col("node").alias("component"), F.col("component").alias("merged")
-                ),
-                "component",
-                "left",
-            ).select("node", F.coalesce("merged", "component").alias("component"))
-        # a node has one row per partition it appears in, all with the same
-        # label by now (even with no merge: a node that is its own local
-        # root everywhere, like a hub below all its spokes, makes no
-        # boundary edge)
-        node_root = node_root.distinct()
     return (
         nodes.select(F.col(node_col).alias("node"))
         .distinct()

@@ -556,11 +556,12 @@ def near_dup_clusters(
 
     Scale shape: pairs are the banded equi-join (minhash_lsh_pairs);
     components are a per-partition union-find over the pairs where they
-    land, then pointer-doubled min-label propagation over the boundary
-    graph only (docs that appear in pairs of 2+ partitions, linked to
-    their local roots). Pairs that arrive in one partition (all 7,993 of
-    them at sf0.1) are settled by the union-find alone; docs in no pair
-    come back as their own cluster."""
+    land, then the same union-find over the boundary graph only (docs
+    that appear in pairs of 2+ partitions, linked to their local roots)
+    on half as many partitions, until one partition is left. Pairs that
+    arrive in one partition (all 7,993 of them at sf0.1) are settled by
+    the first union-find alone; docs in no pair come back as their own
+    cluster."""
     from pyspark.sql import Window
 
     from ..canonicalize import connected_components

@@ -46,10 +46,10 @@ def test_cc_long_chain_converges(spark):
     assert set(comp.values()) == {"n00"}
 
 
-def test_cc_very_long_chain_pointer_doubling(spark):
-    """60-node path: plain min-propagation needs 60 rounds (> MAX_ITER=25);
-    pointer doubling must converge within the budget or raise — never
-    silently mislabel."""
+def test_cc_very_long_chain_across_partitions(spark):
+    """60-node path over the session's default partitions: plain
+    min-label propagation would need 60 rounds; the union-find levels
+    are bounded by the partition count, not the path length."""
     nodes = [f"n{i:02d}" for i in range(60)]
     edges = [(nodes[i], nodes[i + 1]) for i in range(59)]
     comp = _cc(spark, nodes, edges)
@@ -142,11 +142,23 @@ def _random_graph(rng, ids, n_edges, path_len):
     return edges + list(zip(path, path[1:]))
 
 
+def _job_count(spark, group, run):
+    """run() under job group `group`; returns (its result, Spark jobs run)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_cc_random_graphs_match_union_find(spark):
-    """Edges spread over 7 (bigint) and 3 (string) partitions, so local
-    union-find leaves a boundary graph for the min-label merge (a path in
-    random order crosses partitions many times). The merge, not the graph
-    size, sets the runtime: 5-8 rounds at under a second each."""
+    """Edges spread over 7 (bigint), 3 (string) and 8 (bigint)
+    partitions, so local union-find leaves a boundary graph for the next
+    level (a path in random order crosses partitions many times). A
+    300-id path over 8 partitions has a long boundary graph; the level
+    count, and so the job count, stays bounded by the partition count."""
     import random
 
     rng = random.Random(20240607)
@@ -164,6 +176,28 @@ def test_cc_random_graphs_match_union_find(spark):
     got = _labels(canon.connected_components(ndf, edf))
     assert got == _reference_components(names, sedges)
 
+    ndf = spark.createDataFrame([(i,) for i in ids], "node bigint")
+    path = rng.sample(ids, len(ids))
+    pedges = list(zip(path, path[1:]))
+    edf = spark.createDataFrame(pedges, "a bigint, b bigint").repartition(8)
+    got, n_jobs = _job_count(
+        spark, "test-cc-path-jobs", lambda: _labels(canon.connected_components(ndf, edf))
+    )
+    assert got == _reference_components(ids, pedges)
+    assert n_jobs <= 15, n_jobs
+
+    # AQE coalesces a small boundary into one partition, so the second
+    # level is the last; with coalescing off the boundary keeps its
+    # shuffle partitions and all floor(log2 8) + 1 = 4 levels run
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = _labels(canon.connected_components(ndf, edf))
+    finally:
+        spark.conf.set(key, old)
+    assert got == _reference_components(ids, pedges)
+
 
 def test_cc_single_partition_job_budget(spark):
     """A vocabulary-sized graph in one partition: local union-find settles
@@ -173,15 +207,10 @@ def test_cc_single_partition_job_budget(spark):
     edges = [(nodes[6 * p + i], nodes[6 * p + i + 1]) for p in range(10) for i in range(5)]
     ndf = spark.createDataFrame([(n,) for n in nodes], "node string").coalesce(1)
     edf = spark.createDataFrame(edges, "a string, b string").coalesce(1)
-    sc = spark.sparkContext
-    group = "test-cc-job-budget"
-    sc.setJobGroup(group, group)
-    try:
-        comp = _labels(canon.connected_components(ndf, edf))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    comp, n_jobs = _job_count(
+        spark, "test-cc-job-budget", lambda: _labels(canon.connected_components(ndf, edf))
+    )
     assert comp == _reference_components(nodes, edges)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n_jobs <= 9, n_jobs
 
 

@@ -1,4 +1,4 @@
-"""Mention detection, blocked fuzzy linking, top-1 window, routing."""
+"""Mention detection, blocked fuzzy linking, top-1 aggregate, routing."""
 
 from __future__ import annotations
 
