@@ -9,12 +9,13 @@ the cost is O(vocab) per executor lifetime, and each page scan is
 O(len(text) + hits) regardless of vocabulary size.
 
 Semantics contract: `scan(text)` returns exactly the surfaces the
-regex scan returns — leftmost-longest, non-overlapping, word-boundary
-(\\b) delimited. The longest-first alternation regex over distinct literal
-aliases implements leftmost-longest non-overlapping matching; we reproduce
-it by collecting ALL boundary-valid matches and sweeping (start asc,
-length desc), which tests pin against the regex on adversarial overlapping
-vocabularies (tests/test_mentions_link.py).
+regex scan returns — leftmost-longest, non-overlapping, with no word
+character on either side (`(?<!\\w)` / `(?!\\w)`, so an alias that ends
+in punctuation, "N.W.T.", still matches before a space). The longest-first
+alternation regex over distinct literal aliases implements leftmost-longest
+non-overlapping matching; we reproduce it by collecting ALL boundary-valid
+matches and sweeping (start asc, length desc), which tests pin against the
+regex on adversarial overlapping vocabularies (tests/test_mentions_link.py).
 """
 
 from __future__ import annotations
@@ -77,8 +78,9 @@ class AhoCorasick:
         return hits
 
     def scan(self, text: str) -> list[tuple[int, int]]:
-        """Leftmost-longest non-overlapping word-boundary matches — the
-        exact semantics of `\\b(longest|...|shortest)\\b`.finditer."""
+        """Leftmost-longest non-overlapping matches with no word character
+        on either side — the exact semantics of
+        `(?<!\\w)(longest|...|shortest)(?!\\w)`.finditer."""
         n = len(text)
         valid = [
             (s, e)

@@ -66,37 +66,37 @@ def _shingles(col: str, n: int = 3):
     )
 
 
-def candidate_pairs_lsh(surfaces: DataFrame, surface_col: str = "norm_surface") -> DataFrame:
+def candidate_pairs_lsh(surfaces: DataFrame) -> DataFrame:
     """Distinct surfaces -> candidate (a, b) pairs via MinHash-LSH banding.
 
-    surfaces: one row per distinct normalized surface.
+    surfaces: one row per distinct normalized surface (`norm_surface`).
     Returns pairs with a < b and their exact shingle Jaccard.
     """
-    sh = surfaces.select(surface_col).distinct().withColumn("sh", _shingles(surface_col))
+    sh = surfaces.select("norm_surface").distinct().withColumn("sh", _shingles("norm_surface"))
     # K minhashes, JVM-side: min over xxhash64(shingle, k)
     minhash_cols = [
         F.array_min(F.expr(f"transform(sh, s -> xxhash64(s, {k}))")).alias(f"mh{k}")
         for k in range(N_HASHES)
     ]
-    sig = sh.select(surface_col, "sh", *minhash_cols)
+    sig = sh.select("norm_surface", "sh", *minhash_cols)
     # r=1 banding: one (band, key) row per minhash, via a single explode
     # (no N-way union -> one scan, one shuffle)
     banded = sig.select(
-        surface_col,
+        "norm_surface",
         F.posexplode(F.array(*[F.col(f"mh{k}") for k in range(N_HASHES)])).alias(
             "band", "band_key"
         ),
     )
     # deterministic safety-net block: (3-char prefix, first-token count)
     prefix = sh.select(
-        surface_col,
+        "norm_surface",
         F.lit(-1).alias("band"),
-        F.xxhash64(F.substring(surface_col, 1, 3)).alias("band_key"),
+        F.xxhash64(F.substring("norm_surface", 1, 3)).alias("band_key"),
     )
     banded = banded.unionByName(prefix)
 
-    left = banded.select(F.col(surface_col).alias("a"), "band", "band_key")
-    right = banded.select(F.col(surface_col).alias("b"), "band", "band_key")
+    left = banded.select(F.col("norm_surface").alias("a"), "band", "band_key")
+    right = banded.select(F.col("norm_surface").alias("b"), "band", "band_key")
     pairs = (
         left.join(right, ["band", "band_key"])
         .where(F.col("a") < F.col("b"))  # symmetric dedup (reference O4)
@@ -104,8 +104,8 @@ def candidate_pairs_lsh(surfaces: DataFrame, surface_col: str = "norm_surface") 
         .distinct()
     )
     # exact verify: shingle Jaccard, JVM-side
-    sh_a = sh.select(F.col(surface_col).alias("a"), F.col("sh").alias("sh_a"))
-    sh_b = sh.select(F.col(surface_col).alias("b"), F.col("sh").alias("sh_b"))
+    sh_a = sh.select(F.col("norm_surface").alias("a"), F.col("sh").alias("sh_a"))
+    sh_b = sh.select(F.col("norm_surface").alias("b"), F.col("sh").alias("sh_b"))
     return (
         pairs.join(sh_a, "a")
         .join(sh_b, "b")
@@ -121,11 +121,7 @@ def candidate_pairs_lsh(surfaces: DataFrame, surface_col: str = "norm_surface") 
     )
 
 
-def same_as_edges(
-    surfaces: DataFrame,
-    surface_to_entity: DataFrame | None = None,
-    jaccard_threshold: float = JACCARD_SAMEAS,
-) -> DataFrame:
+def same_as_edges(surfaces: DataFrame, surface_to_entity: DataFrame) -> DataFrame:
     """SAME_AS edge list over distinct surfaces: LSH candidates verified by
     shingle Jaccard OR Levenshtein ratio (the OCR-variant band), plus pairs
     that entity-linked to the same id. Pairs whose two sides linked to
@@ -140,13 +136,11 @@ def same_as_edges(
             ),
         )
         .where(
-            (F.col("jaccard") >= jaccard_threshold)
+            (F.col("jaccard") >= JACCARD_SAMEAS)
             | (F.col("lev_ratio") >= LEV_RATIO_SAMEAS)
         )
         .select("a", "b")
     )
-    if surface_to_entity is None:
-        return lsh.distinct()
     ent_a = surface_to_entity.select(F.col("norm_surface").alias("a"), F.col("entity_id").alias("ent_a"))
     ent_b = surface_to_entity.select(F.col("norm_surface").alias("b"), F.col("entity_id").alias("ent_b"))
     lsh = (
@@ -254,13 +248,9 @@ def _union_find_levels(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "node",
-) -> DataFrame:
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Connected components of the graph `edges` (a, b), labelled for every
-    distinct value of `nodes[node_col]`.
+    distinct value of `nodes["node"]`.
 
     Returns (node, component) where component = the smallest node id in
     the node's component (reference cycle-guard analog,
@@ -282,7 +272,7 @@ def connected_components(
 
     Input contract:
 
-    - `edges` endpoints are cast to the type of `nodes[node_col]`, which
+    - `edges` endpoints are cast to the type of `nodes["node"]`, which
       the output keeps (string and bigint are both used).
     - An edge with a null endpoint is ignored.
     - A null node comes back as its own component: (null, null).
@@ -292,14 +282,14 @@ def connected_components(
       endpoints, restricted to `nodes` on output, so a component can be
       labelled by an id that is not in `nodes`. The engine's callers take
       their edges from their nodes."""
-    node_type = nodes.schema[node_col].dataType
+    node_type = nodes.schema["node"].dataType
     node_root = _union_find_levels(
         edges.select(
             F.col("a").cast(node_type).alias("a"), F.col("b").cast(node_type).alias("b")
         ).where(F.col("a").isNotNull() & F.col("b").isNotNull())
     )
     return (
-        nodes.select(F.col(node_col).alias("node"))
+        nodes.select("node")
         .distinct()
         .join(node_root, "node", "left")
         .select("node", F.coalesce("component", "node").alias("component"))

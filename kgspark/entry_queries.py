@@ -2872,7 +2872,8 @@ def kg_pipeline_relation_triples(spark, sf_dir):
         "entity_type string, admin_region string",
     )
     links = link_mentions(ments, alias_index)
-    return resolve_triples(rels, links)
+    no_fallback = spark.createDataFrame([], "norm_surface string, entity_id string")
+    return resolve_triples(rels, links, no_fallback)
 
 
 @q(

@@ -24,7 +24,7 @@ import html as _htmlmod
 import re
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -111,6 +111,6 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_text_bytes)
 
 
-def with_extracted_text(df, html_col: str = "html", out_col: str = "text") -> "Column":
-    """pages(html binary, ...) -> pages + extracted ``out_col``."""
-    return df.withColumn(out_col, extract_text_udf(F.col(html_col)))
+def with_extracted_text(df: DataFrame) -> DataFrame:
+    """pages(html binary, ...) -> pages + extracted ``text``."""
+    return df.withColumn("text", extract_text_udf(F.col("html")))

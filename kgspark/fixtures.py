@@ -23,7 +23,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .extract import extract_text_bytes
 

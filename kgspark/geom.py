@@ -30,7 +30,13 @@ analogs (what, not how):
   and the surviving triangle pairs are clipped by a VECTORIZED
   Sutherland-Hodgman kernel (one numpy pass over all pairs, no
   per-pair Python loop); single-ring convex inputs skip the fan
-  entirely and take the O(n+m) convex clip fast path.
+  entirely and take the convex Sutherland-Hodgman clip (`clip_convex`,
+  `polygon_intersection_area`): 2.7-6x faster than the fan on random
+  convex pairs of 4-128 vertices (one core of a 4-vCPU host).
+
+All ring geometry lives here: WKB parse and encode, repair, areas and
+both clips. kgspark.spatial holds only the distributed operators and the
+UDFs that call into this module.
 
 Scale note: this module is driver-free per-row geometry math invoked
 from Arrow-batched pandas UDFs in kgspark.spatial — the distributed plan
@@ -94,14 +100,14 @@ def _polygon_at(buf: bytes, off: int) -> tuple[list[tuple[np.ndarray, int]], int
     return rings, off
 
 
-def parse_wkb(buf: bytes, repair: bool = True) -> list[tuple[np.ndarray, int]]:
+def parse_wkb(buf: bytes) -> list[tuple[np.ndarray, int]]:
     """Parse WKB Polygon or MultiPolygon into normalized rings.
 
     Normalization (the `make_valid`-on-load analog): closing vertices and
     consecutive duplicates dropped, degenerate (<3 distinct points or
     zero-area) rings dropped, every ring re-oriented CCW with its
-    exterior/hole role carried in the sign, and (when `repair`)
-    self-intersecting rings split into their simple loops."""
+    exterior/hole role carried in the sign, and self-intersecting rings
+    split into their simple loops."""
     buf = bytes(buf)
     fmt = "<" if buf[0] == 1 else ">"
     (gtype,) = struct.unpack_from(fmt + "I", buf, 1)
@@ -120,7 +126,7 @@ def parse_wkb(buf: bytes, repair: bool = True) -> list[tuple[np.ndarray, int]]:
         raise ValueError(f"unsupported WKB geometry type {base}")
     out: list[tuple[np.ndarray, int]] = []
     for pts, sign in raw:
-        for cleaned in _normalize_ring(pts, repair):
+        for cleaned in _normalize_ring(pts):
             out.append((cleaned, sign))
     return out
 
@@ -132,7 +138,7 @@ def _parse_cached(buf: bytes) -> tuple[tuple[np.ndarray, int], ...]:
     return tuple(parse_wkb(buf))
 
 
-def _normalize_ring(pts: np.ndarray, repair: bool) -> list[np.ndarray]:
+def _normalize_ring(pts: np.ndarray) -> list[np.ndarray]:
     if len(pts) > 1 and (pts[0] == pts[-1]).all():
         pts = pts[:-1]
     if len(pts) > 1:  # consecutive duplicates (incl. wraparound)
@@ -140,9 +146,8 @@ def _normalize_ring(pts: np.ndarray, repair: bool) -> list[np.ndarray]:
         pts = pts[keep]
     if len(pts) < 3:
         return []
-    loops = _split_self_intersections(pts) if repair else [pts]
     out = []
-    for lp in loops:
+    for lp in _split_self_intersections(pts):
         a2 = _signed_area2(lp)
         if abs(a2) <= _EPS:
             continue
@@ -151,6 +156,7 @@ def _normalize_ring(pts: np.ndarray, repair: bool) -> list[np.ndarray]:
 
 
 def _signed_area2(pts: np.ndarray) -> float:
+    """Twice the signed ring area (positive = counter-clockwise)."""
     x, y = pts[:, 0], pts[:, 1]
     return float(np.dot(x, np.roll(y, -1)) - np.dot(np.roll(x, -1), y))
 
@@ -366,9 +372,53 @@ def _fan_intersection_area(ra, rb) -> float:
     return float(np.dot(sa[ii] * sb[jj], areas))
 
 
+def clip_convex(subject: np.ndarray, clip: np.ndarray) -> np.ndarray:
+    """Sutherland–Hodgman: clip `subject` against CONVEX `clip`.
+
+    Exact for convex∩convex (the census-unit case, reference
+    link_csd_years_spatial_v2.py:100-132 GEOS intersection); a concave
+    subject still yields the correct total area against a convex clip.
+    Clip orientation is normalized to CCW so the inside test is cross>=0."""
+    if _signed_area2(clip) < 0:
+        clip = clip[::-1]
+    out = subject
+    n = len(clip)
+    for i in range(n):
+        if len(out) == 0:
+            return out
+        a, b = clip[i], clip[(i + 1) % n]
+        edge = b - a
+        # signed cross product of edge x (p - a): >=0 means inside (left of
+        # edge). Component form — np.cross on 2-d vectors is deprecated.
+        d = edge[0] * (out[:, 1] - a[1]) - edge[1] * (out[:, 0] - a[0])
+        keep = d >= 0
+        res = []
+        m = len(out)
+        for j in range(m):
+            k = (j + 1) % m
+            if keep[j]:
+                res.append(out[j])
+                if not keep[k]:
+                    t = d[j] / (d[j] - d[k])
+                    res.append(out[j] + t * (out[k] - out[j]))
+            elif keep[k]:
+                t = d[j] / (d[j] - d[k])
+                res.append(out[j] + t * (out[k] - out[j]))
+        out = np.array(res) if res else np.empty((0, 2))
+    return out
+
+
+def polygon_intersection_area(ring_a: np.ndarray, ring_b: np.ndarray) -> float:
+    """Area of ring_a ^ ring_b for a CONVEX ring_b (any orientation)."""
+    clipped = clip_convex(ring_a, ring_b)
+    if len(clipped) < 3:
+        return 0.0
+    return abs(_signed_area2(clipped)) / 2.0
+
+
 def intersection_area(ra, rb) -> float:
     """Exact area of A ^ B for normalized geometries (concave, holed,
-    multi-part). Single-ring convex pairs take the O(n+m) convex clip;
+    multi-part). Single-ring convex pairs take the convex clip;
     everything else the bbox-pruned signed triangle-fan double sum."""
     if not ra or not rb:
         return 0.0
@@ -377,8 +427,6 @@ def intersection_area(ra, rb) -> float:
     if axmax < bxmin or bxmax < axmin or aymax < bymin or bymax < aymin:
         return 0.0
     if _is_single_convex(ra) and _is_single_convex(rb):
-        from .spatial import polygon_intersection_area
-
         return polygon_intersection_area(ra[0][0], rb[0][0])
     return _fan_intersection_area(ra, rb)
 

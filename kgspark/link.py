@@ -14,22 +14,24 @@ as relational plans:
    the same prefilter-then-verify shape as the reference's R-tree bbox probe
    (O1), done JVM-side with built-ins (no Python in the hot path).
 3. **score**: 0.5*name_sim + 0.3*context(admin region seen on page) +
-   0.2*match prior; **top-1 per (url, surface)** via a row_number window with
-   a total order (score desc, name_sim desc, entity_id asc) so results are
-   identical at any parallelism (determinism precondition for the scaling
-   bench, SURVEY.md §7.4.4).
+   0.2*match prior; **top-1 per (url, surface)** as a min-of-struct
+   aggregate over a total order (score desc, name_sim desc, entity_id asc)
+   so results are identical at any parallelism (determinism precondition
+   for the scaling bench, SURVEY.md §7.4.4).
 4. **routing**: high-confidence vs ambiguous, mirroring the reference's
    confidence split (link_csd_years_spatial_v2.py:252-260).
 
-Scale: the alias index is broadcast (north rule); the only shuffle is the
-distinct on unmatched surfaces — a tiny set because exact matching absorbs
-the head of the distribution. Skewed surfaces ("Canada" on 35% of pages) hit
-the *broadcast* join, so no shuffle skew arises here at all.
+Scale: the alias index is broadcast (north rule). Mention data is shuffled
+by the distincts over unmatched surfaces and their fuzzy candidates — a tiny
+set because exact matching absorbs the head of the distribution — and by the
+(url, surface) top-1 aggregate, which combines map-side before its
+exchange. Skewed surfaces ("Canada" on 35% of pages) hit the *broadcast*
+join, and the top-1 key is per page, so no shuffle skew arises here.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCORE_ACCEPT = 0.6

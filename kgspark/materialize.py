@@ -9,11 +9,13 @@ tables — the (subj, pred, obj) triple store itself:
            latitude, longitude, geonames_id, inception_date, n_mentions)
   edges(subj, pred, obj, src_url)        partitioned by pred
 
-plus `lineage` (per-partition counters, metrics.py). Partitioning by `pred`
-mirrors the reference's one-CSV-per-edge-type layout and gives partition
-pruning on the query side (every reference Cypher test filters on a single
-relationship type). `mentions` edges (page -> entity) carry the provenance
-dimension the reference models as P70_documents.
+plus `lineage` (per-partition counters, metrics.py). This module builds the
+tables; io.CheckpointRegistry writes them (pipeline.STAGES,
+tools/submit_pipeline.py). Partitioning by `pred` mirrors the reference's
+one-CSV-per-edge-type layout and gives partition pruning on the query side
+(every reference Cypher test filters on a single relationship type).
+`mentions` edges (page -> entity) carry the provenance dimension the
+reference models as P70_documents.
 """
 
 from __future__ import annotations
@@ -66,9 +68,3 @@ def build_edges(relation_triples: DataFrame, mention_edges: DataFrame) -> DataFr
     cols = ["subj", "pred", "obj", "src_url"]
     return relation_triples.select(cols).unionByName(mention_edges.select(cols))
 
-
-def write_graph(registry, entities: DataFrame, edges: DataFrame, lineage: DataFrame | None = None) -> None:
-    registry.write("entities", entities)
-    registry.write("edges", edges, partition_by=["pred"])
-    if lineage is not None:
-        registry.write("lineage", lineage)

@@ -19,7 +19,8 @@ gazetteer scan auto-switches strategy on vocabulary size: alternation regex
 below AC_THRESHOLD aliases (C-speed for small vocabularies), Aho-Corasick
 automaton above it (ac.py — O(text) per page at ANY vocabulary size, built
 once per executor and cached). Both produce identical leftmost-longest
-non-overlapping word-boundary matches (pinned by test).
+non-overlapping matches with no word character on either side, so aliases
+that end in punctuation ("N.W.T.") match too (pinned by test).
 """
 
 from __future__ import annotations
@@ -102,9 +103,9 @@ AC_THRESHOLD = 2048
 #    entire content is "of" ('\n' matched by \s, "of", '\n' matched by \s,
 #    TOKEN on the line after), which _has_of_line detects and routes to the
 #    full-text scan;
-#  - \b context at run edges is preserved: runs cover whole lines, so the
-#    character before/after a run is '\n' (a non-word char) exactly like the
-#    string boundary the sliced scan sees.
+#  - word-boundary context at run edges is preserved: runs cover whole
+#    lines, so the character before/after a run is '\n' (a non-word char)
+#    exactly like the string boundary the sliced scan sees.
 _ACTIVE_PROBE = re.compile(r"[A-Z]|\d")
 
 import numpy as _np
@@ -217,7 +218,7 @@ def _build_scanner(gazetteer: list[str], regions: list[str], use_ac: bool | None
     else:
         gaz_sorted = sorted(set(gazetteer), key=len, reverse=True)
         gaz_re = re.compile(
-            r"\b(" + "|".join(re.escape(g) for g in gaz_sorted) + r")\b"
+            r"(?<!\w)(" + "|".join(re.escape(g) for g in gaz_sorted) + r")(?!\w)"
         )
 
         def gaz_scan(text: str) -> set[str]:

@@ -28,7 +28,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, mime string, "

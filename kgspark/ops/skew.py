@@ -21,8 +21,6 @@ corpus (the SURVEY §5.6 scale/skew test).
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 

@@ -40,10 +40,10 @@ def _safe(col) -> F.Column:
     return F.regexp_replace(col, r"[^0-9A-Za-z_.-]", "_")
 
 
-def source_domains(triples: DataFrame, url_col: str = "src_url") -> DataFrame:
+def source_domains(triples: DataFrame) -> DataFrame:
     """(domain, n_triples, n_entities) — one row per source domain."""
     return (
-        triples.withColumn("domain", _domain(F.col(url_col)))
+        triples.withColumn("domain", _domain(F.col("src_url")))
         .groupBy("domain")
         .agg(
             F.count(F.lit(1)).alias("n_triples"),
@@ -52,11 +52,11 @@ def source_domains(triples: DataFrame, url_col: str = "src_url") -> DataFrame:
     )
 
 
-def provenance_entities(triples: DataFrame, url_col: str = "src_url") -> DataFrame:
+def provenance_entities(triples: DataFrame) -> DataFrame:
     """Three dimension rows (source, publisher actor, rights) per domain,
     in the pipeline's entity-table shape (entity_id, entity_type,
     canonical_name, n_mentions)."""
-    doms = source_domains(triples, url_col).select(
+    doms = source_domains(triples).select(
         "domain", F.col("n_triples").alias("n_mentions")
     )
     sid = F.concat(F.lit(SOURCE_PREFIX), _safe(F.col("domain")))
@@ -83,11 +83,11 @@ def provenance_entities(triples: DataFrame, url_col: str = "src_url") -> DataFra
     return src.unionByName(actor).unionByName(rights)
 
 
-def provenance_edges(triples: DataFrame, url_col: str = "src_url") -> DataFrame:
+def provenance_edges(triples: DataFrame) -> DataFrame:
     """Dimension-internal edges (published_by, has_rights) plus one
     documented_in edge per (graph entity, domain) carrying the evidence
     count as weight — (subj, pred, obj, weight)."""
-    with_dom = triples.withColumn("domain", _domain(F.col(url_col)))
+    with_dom = triples.withColumn("domain", _domain(F.col("src_url")))
     doms = with_dom.select("domain").distinct()
     sid = F.concat(F.lit(SOURCE_PREFIX), _safe(F.col("domain")))
     aid = F.concat(F.lit(ACTOR_PREFIX), _safe(F.col("domain")))

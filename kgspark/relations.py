@@ -26,13 +26,14 @@ from pyspark.sql import functions as F
 from . import link as linkmod
 
 
-def resolve_triples(relations: DataFrame, links: DataFrame, resolved_surfaces: DataFrame | None = None) -> DataFrame:
+def resolve_triples(relations: DataFrame, links: DataFrame, resolved_surfaces: DataFrame) -> DataFrame:
     """relations(url, subj_surface, pred, obj_surface) x links -> id triples.
 
     ``links``: output of link.link_mentions (one row per url, surface).
-    ``resolved_surfaces``: optional canonicalization fallback map
-    (norm_surface -> entity_id) used for surfaces whose per-page link was
-    ambiguous/missing — the recall-recovery path for OCR-corrupted forms.
+    ``resolved_surfaces``: canonicalization fallback map (norm_surface ->
+    entity_id) used for surfaces whose per-page link was ambiguous/missing
+    — the recall-recovery path for OCR-corrupted forms. With an empty map
+    every surface keeps its link id.
     """
     link_slim = links.select(
         "url",
@@ -64,28 +65,27 @@ def resolve_triples(relations: DataFrame, links: DataFrame, resolved_surfaces: D
              "norm_surface": f"{out_col}_norm"}
         )
         df = df.join(side, ["url", surf_col], "left")
-        if resolved_surfaces is not None:
-            fb = resolved_surfaces.select(
-                F.col("norm_surface").alias(f"{out_col}_norm"),
-                F.col("entity_id").alias(f"{out_col}_fallback"),
-            )
-            # A surface with NO link row at all has a NULL links-derived norm
-            # key; normalize the raw surface so those (the very forms the
-            # recall-recovery path exists for) can still hit the fallback map.
-            df = df.withColumn(
-                f"{out_col}_norm",
-                F.coalesce(
-                    F.col(f"{out_col}_norm"),
-                    linkmod.normalize_surface(F.col(surf_col)),
-                ),
-            )
-            df = df.join(F.broadcast(fb), f"{out_col}_norm", "left").withColumn(
-                f"{out_col}_id",
-                F.when(
-                    (F.col(f"{out_col}_conf") == "high") & F.col(f"{out_col}_id").isNotNull(),
-                    F.col(f"{out_col}_id"),
-                ).otherwise(F.coalesce(F.col(f"{out_col}_fallback"), F.col(f"{out_col}_id"))),
-            ).drop(f"{out_col}_fallback")
+        fb = resolved_surfaces.select(
+            F.col("norm_surface").alias(f"{out_col}_norm"),
+            F.col("entity_id").alias(f"{out_col}_fallback"),
+        )
+        # A surface with NO link row at all has a NULL links-derived norm
+        # key; normalize the raw surface so those (the very forms the
+        # recall-recovery path exists for) can still hit the fallback map.
+        df = df.withColumn(
+            f"{out_col}_norm",
+            F.coalesce(
+                F.col(f"{out_col}_norm"),
+                linkmod.normalize_surface(F.col(surf_col)),
+            ),
+        )
+        df = df.join(F.broadcast(fb), f"{out_col}_norm", "left").withColumn(
+            f"{out_col}_id",
+            F.when(
+                (F.col(f"{out_col}_conf") == "high") & F.col(f"{out_col}_id").isNotNull(),
+                F.col(f"{out_col}_id"),
+            ).otherwise(F.coalesce(F.col(f"{out_col}_fallback"), F.col(f"{out_col}_id"))),
+        ).drop(f"{out_col}_fallback")
         return df
 
     out = attach(relations, "subj_surface", "subj")

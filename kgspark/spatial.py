@@ -19,15 +19,18 @@ Reference analogs (what, not how):
 Representation: geometry rides as columns, not objects.
 - ``bbox``: struct<xmin,ymin,xmax,ymax> (doubles) — the blocking key
   carrier and, for the axis-aligned synthetic fixtures, the exact geometry.
-- WKB: Polygon (with holes) / MultiPolygon <-> bbox codec implemented as
-  Arrow-batched pandas UDFs (numpy byte slicing — no per-row Python), so
-  real-world WKB columns (what an Iceberg gazetteer table would carry) plug
-  into the same operators. Geometry is repaired on load (kgspark.geom: the
+- WKB: Polygon (with holes) / MultiPolygon columns are summarized to a
+  bbox and exact net area by an Arrow-batched pandas UDF (`wkb_summary`),
+  so real-world WKB columns (what an Iceberg gazetteer table would carry)
+  plug into the same operators. Geometry is repaired on load (the
   reference's make_valid / buffer(0) analog) and polygon-polygon
   intersection areas are EXACT for arbitrary simple geometry — concave,
-  holed, multi-part — via the signed triangle-fan decomposition in
-  kgspark.geom, with a pure-numpy Sutherland–Hodgman convex-clip fast path
-  for single-ring convex pairs. No GEOS needed.
+  holed, multi-part — via a signed triangle-fan decomposition, with a
+  pure-numpy Sutherland–Hodgman convex-clip fast path for single-ring
+  convex pairs. No GEOS needed. All of this ring math (WKB parse and
+  encode, repair, areas, the fan and the convex clip) lives in
+  kgspark.geom; this module holds only the distributed operators and the
+  UDFs that call into kgspark.geom.
 
 Dedup without distinct: a pair of bboxes can share many grid cells. The
 join emits a pair only from the ONE cell containing the intersection's
@@ -43,15 +46,15 @@ integer-valued synthetic coordinates both engines evaluate it bit-identically
 
 from __future__ import annotations
 
-import struct
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+
+from . import geom
 
 
 # ---------------------------------------------------------------------------
@@ -247,132 +250,39 @@ def dissolve(
 
 
 # ---------------------------------------------------------------------------
-# WKB codec + shoelace area (Arrow-batched; no per-row Python)
+# WKB columns (Arrow-batched UDFs over the kgspark.geom ring math)
 # ---------------------------------------------------------------------------
-
-_WKB_POLYGON = 3
-
-
-def encode_polygon_wkb(points) -> bytes:
-    """Little-endian ISO WKB Polygon from an open ring of (x, y) points."""
-    ring = [tuple(p) for p in points]
-    if ring[0] != ring[-1]:
-        ring.append(ring[0])
-    out = struct.pack("<BII", 1, _WKB_POLYGON, 1) + struct.pack("<I", len(ring))
-    for x, y in ring:
-        out += struct.pack("<dd", float(x), float(y))
-    return out
-
-
-def _encode_rect(xmin: float, ymin: float, xmax: float, ymax: float) -> bytes:
-    return encode_polygon_wkb(
-        [(xmin, ymin), (xmax, ymin), (xmax, ymax), (xmin, ymax)]
-    )
-
 
 # DataType objects (not DDL strings): string DDL is parsed against the
 # active session, which need not exist at import time.
-@pandas_udf(T.BinaryType())
-def rect_to_wkb(
-    xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series
-) -> pd.Series:
-    return pd.Series(
-        [
-            _encode_rect(a, b, c, d)
-            for a, b, c, d in zip(xmin, ymin, xmax, ymax)
-        ]
-    )
-
-
-def _parse_wkb(buf: bytes) -> tuple[float, float, float, float, float]:
-    """(xmin, ymin, xmax, ymax, area) of a WKB geometry — Polygon (with
-    holes), MultiPolygon, either endianness, repaired on load
-    (kgspark.geom: the reference's make_valid-on-load analog,
-    link_csd_years_spatial_v2.py:55-59). Area is the exact NET area:
-    exterior rings minus holes, summed over parts."""
-    from . import geom
-
-    rings = list(geom._parse_cached(bytes(buf)))
-    xmin, ymin, xmax, ymax = geom.geometry_bbox(rings)
-    return xmin, ymin, xmax, ymax, geom.geometry_area(rings)
-
-
 @pandas_udf(
     T.StructType(
         [T.StructField(f, T.DoubleType()) for f in ("xmin", "ymin", "xmax", "ymax", "area")]
     )
 )
 def wkb_summary(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    """(xmin, ymin, xmax, ymax, area) of each WKB geometry — Polygon (with
+    holes), MultiPolygon, either endianness, repaired on load
+    (kgspark.geom: the reference's make_valid-on-load analog,
+    link_csd_years_spatial_v2.py:55-59). Area is the exact NET area:
+    exterior rings minus holes, summed over parts."""
     for s in it:
-        rows = [_parse_wkb(b) for b in s]
+        rows = []
+        for b in s:
+            rings = geom._parse_cached(bytes(b))
+            rows.append((*geom.geometry_bbox(rings), geom.geometry_area(rings)))
         yield pd.DataFrame(
             rows, columns=["xmin", "ymin", "xmax", "ymax", "area"]
         )
-
-
-# ---------------------------------------------------------------------------
-# Exact convex polygon intersection (Sutherland–Hodgman, pure numpy)
-# ---------------------------------------------------------------------------
-
-
-def _signed_area2(pts: np.ndarray) -> float:
-    """Twice the signed ring area (positive = counter-clockwise)."""
-    x, y = pts[:, 0], pts[:, 1]
-    return float(np.dot(x, np.roll(y, -1)) - np.dot(np.roll(x, -1), y))
-
-
-def clip_convex(subject: np.ndarray, clip: np.ndarray) -> np.ndarray:
-    """Sutherland–Hodgman: clip `subject` against CONVEX `clip`.
-
-    Exact for convex∩convex (the census-unit case, reference
-    link_csd_years_spatial_v2.py:100-132 GEOS intersection); a concave
-    subject still yields the correct total area against a convex clip.
-    Clip orientation is normalized to CCW so the inside test is cross>=0."""
-    if _signed_area2(clip) < 0:
-        clip = clip[::-1]
-    out = subject
-    n = len(clip)
-    for i in range(n):
-        if len(out) == 0:
-            return out
-        a, b = clip[i], clip[(i + 1) % n]
-        edge = b - a
-        # signed cross product of edge x (p - a): >=0 means inside (left of
-        # edge). Component form — np.cross on 2-d vectors is deprecated.
-        d = edge[0] * (out[:, 1] - a[1]) - edge[1] * (out[:, 0] - a[0])
-        keep = d >= 0
-        res = []
-        m = len(out)
-        for j in range(m):
-            k = (j + 1) % m
-            if keep[j]:
-                res.append(out[j])
-                if not keep[k]:
-                    t = d[j] / (d[j] - d[k])
-                    res.append(out[j] + t * (out[k] - out[j]))
-            elif keep[k]:
-                t = d[j] / (d[j] - d[k])
-                res.append(out[j] + t * (out[k] - out[j]))
-        out = np.array(res) if res else np.empty((0, 2))
-    return out
-
-
-def polygon_intersection_area(ring_a: np.ndarray, ring_b: np.ndarray) -> float:
-    clipped = clip_convex(ring_a, ring_b)
-    if len(clipped) < 3:
-        return 0.0
-    return abs(_signed_area2(clipped)) / 2.0
 
 
 @pandas_udf(T.DoubleType())
 def wkb_intersection_area(wa: pd.Series, wb: pd.Series) -> pd.Series:
     """Exact intersection area of two WKB geometries — concave, holed, and
     multi-part included (kgspark.geom signed triangle-fan; convex pairs
-    take the O(n+m) convex-clip fast path). Arrow-batched, parse-cached
+    take the convex-clip fast path). Arrow-batched, parse-cached
     per executor: blocking emits the same geometry in many candidate
     pairs."""
-    from . import geom
-
     return pd.Series(
         [geom.wkb_intersection_area_py(a, b) for a, b in zip(wa, wb)]
     )

@@ -29,9 +29,9 @@ def test_extract_none_and_empty():
 
 def test_extract_byte_identical_per_url(spark):
     """UDF output must equal the golden `text` column byte-for-byte."""
-    pages = fixtures.gen_pages(spark, 120)
-    redone = with_extracted_text(pages, out_col="text2")
-    mismatches = redone.where(~F.col("text").eqNullSafe(F.col("text2"))).count()
+    pages = fixtures.gen_pages(spark, 120).withColumnRenamed("text", "golden")
+    redone = with_extracted_text(pages)
+    mismatches = redone.where(~F.col("golden").eqNullSafe(F.col("text"))).count()
     assert mismatches == 0
 
 

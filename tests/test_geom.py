@@ -133,7 +133,7 @@ def test_fan_matches_convex_clip_fuzz():
 
     for _ in range(60):
         pa, pb = rand_convex(), rand_convex()
-        want = spatial.polygon_intersection_area(pa, pb)
+        want = geom.polygon_intersection_area(pa, pb)
         got = geom._fan_intersection_area([(pa, 1)], [(pb, 1)])
         assert got == pytest.approx(want, abs=1e-7)
 

@@ -101,7 +101,7 @@ def test_aho_corasick_matches_regex_semantics():
         texts.append(" ".join(rng.choice(words) for _ in range(rng.randint(1, 40))))
 
     gaz_sorted = sorted(set(vocab), key=len, reverse=True)
-    rx = re.compile(r"\b(" + "|".join(re.escape(g) for g in gaz_sorted) + r")\b")
+    rx = re.compile(r"(?<!\w)(" + "|".join(re.escape(g) for g in gaz_sorted) + r")(?!\w)")
     ac = automaton(vocab)
     for t in texts:
         want = [(m.start(), m.end()) for m in rx.finditer(t)]
@@ -112,12 +112,16 @@ def test_aho_corasick_matches_regex_semantics():
 def test_scanner_ac_and_regex_paths_agree():
     from kgspark.mentions import _build_scanner
 
-    gaz = ["Canada", "Ottawa", "Upper Canada", "Treaty 7"]
+    gaz = ["Canada", "Ottawa", "Upper Canada", "Treaty 7", "N.W.T.", "Sask."]
     regions = ["on", "qc"]
-    text = "Upper Canada and Ottawa. Canada signed Treaty 7."
-    m1 = _build_scanner(gaz, regions, use_ac=False)(text)
-    m2 = _build_scanner(gaz, regions, use_ac=True)(text)
-    assert m1 == m2
+    for text in (
+        "Upper Canada and Ottawa. Canada signed Treaty 7.",
+        # aliases that end in punctuation, followed by a space
+        "They reached the N.W.T. in 1880. Later Ottawa and Sask. were named.",
+    ):
+        m1 = _build_scanner(gaz, regions, use_ac=False)(text)
+        m2 = _build_scanner(gaz, regions, use_ac=True)(text)
+        assert m1 == m2
 
 
 def test_fused_relation_scan_matches_per_pattern():

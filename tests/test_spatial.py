@@ -7,7 +7,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from kgspark import spatial
+from kgspark import geom, spatial
 
 
 def _mk_units(spark, rects):
@@ -110,15 +110,13 @@ def test_dissolve_extent_and_area(spark):
 
 
 def test_wkb_roundtrip_and_shoelace(spark):
-    df = spark.createDataFrame(
-        [(1, 2.0, 3.0, 7.0, 11.0), (2, -5.0, -5.0, 0.0, 0.0)],
-        "gid int, xmin double, ymin double, xmax double, ymax double",
-    )
-    wkb = df.select(
-        "gid",
-        spatial.rect_to_wkb(
-            F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax")
-        ).alias("wkb"),
+    rects = {1: (2.0, 3.0, 7.0, 11.0), 2: (-5.0, -5.0, 0.0, 0.0)}
+    wkb = spark.createDataFrame(
+        [
+            (gid, bytearray(geom.encode_polygon_wkb([[(a, b), (c, b), (c, d), (a, d)]])))
+            for gid, (a, b, c, d) in rects.items()
+        ],
+        "gid int, wkb binary",
     )
     parsed = spatial.with_wkb_geometry(wkb)
     rows = {r["gid"]: r for r in parsed.collect()}
@@ -158,14 +156,14 @@ def test_convex_clip_analytic():
     import numpy as np
 
     sq = np.array([[0, 0], [2, 0], [2, 2], [0, 2]], float)
-    assert spatial.polygon_intersection_area(sq, sq) == 4.0
+    assert geom.polygon_intersection_area(sq, sq) == 4.0
     s2 = math.sqrt(2)
     diamond = np.array([[1 + s2, 1], [1, 1 + s2], [1 - s2, 1], [1, 1 - s2]])
-    got = spatial.polygon_intersection_area(sq, diamond)
+    got = geom.polygon_intersection_area(sq, diamond)
     assert abs(got - (8 * s2 - 8)) < 1e-9
     # orientation-insensitive; disjoint is zero
-    assert abs(spatial.polygon_intersection_area(sq[::-1], diamond[::-1]) - got) < 1e-12
-    assert spatial.polygon_intersection_area(sq, sq + 10.0) == 0.0
+    assert abs(geom.polygon_intersection_area(sq[::-1], diamond[::-1]) - got) < 1e-12
+    assert geom.polygon_intersection_area(sq, sq + 10.0) == 0.0
 
 
 def test_overlap_join_wkb_rotated_rings(spark):
@@ -186,7 +184,7 @@ def test_overlap_join_wkb_rotated_rings(spark):
         right_rings.append(_rot_rect(cx, cy, rng.uniform(4, 20), rng.uniform(4, 20), rng.uniform(0, math.pi)))
 
     mk = lambda rings: spark.createDataFrame(
-        [(i, bytearray(spatial.encode_polygon_wkb(r))) for i, r in enumerate(rings)],
+        [(i, bytearray(geom.encode_polygon_wkb([r]))) for i, r in enumerate(rings)],
         "unit_id bigint, wkb binary",
     )
     got = {
@@ -199,11 +197,11 @@ def test_overlap_join_wkb_rotated_rings(spark):
     want = {}
     for i, ra in enumerate(left_rings):
         pa = np.array(ra)
-        area_a = abs(spatial._signed_area2(pa)) / 2
+        area_a = abs(geom._signed_area2(pa)) / 2
         for j, rb in enumerate(right_rings):
             pb = np.array(rb)
-            area_b = abs(spatial._signed_area2(pb)) / 2
-            inter = spatial.polygon_intersection_area(pa, pb)
+            area_b = abs(geom._signed_area2(pb)) / 2
+            inter = geom.polygon_intersection_area(pa, pb)
             union = area_a + area_b - inter
             iou_e6 = int(math.floor(1e6 * inter / union)) if union > 0 else 0
             if iou_e6 >= 10000:

@@ -41,7 +41,6 @@ def main() -> None:
 
     from kgspark import fixtures
     from kgspark.io import CheckpointRegistry
-    from kgspark.materialize import write_graph
     from kgspark.pipeline import run_pipeline
     from kgspark.session import get_spark
 
@@ -59,7 +58,9 @@ def main() -> None:
     t0 = time.time()
     out = run_pipeline(spark, pages, aliases, checkpoint_dir=args.checkpoint_dir)
     reg = CheckpointRegistry(spark, args.out)
-    write_graph(reg, out["entities"], out["edges"], out["lineage"])
+    reg.write("entities", out["entities"])
+    reg.write("edges", out["edges"], partition_by=["pred"])
+    reg.write("lineage", out["lineage"])
     n_edges = reg.read("edges").count()
     print(json.dumps({
         "edges": n_edges,
