@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
+from .link import char_ngrams
+
 N_HASHES = 12  # r=1 banding: any colliding minhash makes a candidate pair.
 # Mention surfaces are short (1-4 words), so 3-gram Jaccard of true OCR
 # variants can be as low as ~0.25; r=1 keeps blocking recall ~1-(1-j)^K
@@ -57,22 +59,13 @@ AVG_SIM_GATE = 70.0
 MIN_SIM_GATE = 60.0
 
 
-def _shingles(col: str, n: int = 3):
-    return F.array_distinct(
-        F.expr(
-            f"transform(sequence(0, greatest(length({col}) - {n}, 0)), "
-            f"i -> substring({col}, i + 1, {n}))"
-        )
-    )
-
-
 def candidate_pairs_lsh(surfaces: DataFrame) -> DataFrame:
     """Distinct surfaces -> candidate (a, b) pairs via MinHash-LSH banding.
 
     surfaces: one row per distinct normalized surface (`norm_surface`).
     Returns pairs with a < b and their exact shingle Jaccard.
     """
-    sh = surfaces.select("norm_surface").distinct().withColumn("sh", _shingles("norm_surface"))
+    sh = surfaces.select("norm_surface").distinct().withColumn("sh", char_ngrams("norm_surface", 3))
     # K minhashes, JVM-side: min over xxhash64(shingle, k)
     minhash_cols = [
         F.array_min(F.expr(f"transform(sh, s -> xxhash64(s, {k}))")).alias(f"mh{k}")

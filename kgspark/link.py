@@ -66,11 +66,14 @@ def build_alias_table(alias_index: DataFrame) -> DataFrame:
     )
 
 
-def _char_ngrams(col, n: int = 2):
-    """Character n-gram array, JVM-side (blocking key for the fuzzy join)."""
-    return F.expr(
-        f"transform(sequence(0, greatest(length({col}) - {n}, 0)), "
-        f"i -> substring({col}, i + 1, {n}))"
+def char_ngrams(col: str, n: int):
+    """Distinct character n-grams of a string column, JVM-side: the fuzzy
+    join's blocking key here and the surface shingles in canonicalize."""
+    return F.array_distinct(
+        F.expr(
+            f"transform(sequence(0, greatest(length({col}) - {n}, 0)), "
+            f"i -> substring({col}, i + 1, {n}))"
+        )
     )
 
 
@@ -102,11 +105,11 @@ def link_mentions(mentions: DataFrame, alias_index: DataFrame) -> DataFrame:
         .distinct()
     )
     surf_grams = missed.select(
-        "norm_surface", F.explode(F.array_distinct(_char_ngrams("norm_surface"))).alias("gram")
+        "norm_surface", F.explode(char_ngrams("norm_surface", 2)).alias("gram")
     )
     alias_grams = aliases.select(
         "entity_id", "norm_alias",
-        F.explode(F.array_distinct(_char_ngrams("norm_alias"))).alias("gram"),
+        F.explode(char_ngrams("norm_alias", 2)).alias("gram"),
     )
     fuzzy_pairs = (
         surf_grams.join(F.broadcast(alias_grams), "gram")

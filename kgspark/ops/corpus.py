@@ -164,11 +164,12 @@ def c4_filter(
     Returns (id, n_tokens, pred_lang, dup_2gram_frac_e6, quality_e6,
     kept, drop_reason).
 
-    Signal formulas are IDENTICAL to textstats.quality_score /
-    textstats.langid_heuristic / webtext.repetition_stats (pinned by a
-    parity test), so a doc's composite verdict is exactly the conjunction
-    of the individually-oracled signals."""
-    from .textstats import STOPWORDS_EN, _LANG_LEXICON
+    The quality and repetition formulas are IDENTICAL to
+    textstats.quality_score / webtext.repetition_stats, and the language
+    label is textstats.lang_argmax, the expression langid_heuristic uses
+    (all pinned by a parity test), so a doc's composite verdict is exactly
+    the conjunction of the individual signals."""
+    from .textstats import STOPWORDS_EN, lang_argmax
 
     toks = word_tokens(text_col)
     n_tokens = F.size(toks)
@@ -188,20 +189,7 @@ def c4_filter(
     total = F.greatest(F.size(grams), F.lit(1))
     dup2_e6 = _e6(F.size(grams) - F.size(F.array_distinct(grams)), total)
     run = _max_run(toks)
-    # langid_heuristic argmax with the same alphabetical tie-break
-    langs = sorted(_LANG_LEXICON)
-
-    def _hits(words):
-        # closure factory, NOT a default-arg lambda: a 2-param lambda is
-        # read by Spark as (element, index) and the default is shadowed
-        arr = F.array(*[F.lit(w) for w in words])
-        return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-
-    hits = {lg: _hits(_LANG_LEXICON[lg]) for lg in langs}
-    best = F.greatest(*[hits[lg] for lg in langs])
-    pred = F.lit("und")
-    for lg in reversed(langs):
-        pred = F.when((hits[lg] == best) & (best > 0), F.lit(lg)).otherwise(pred)
+    pred, _ = lang_argmax(toks)
 
     reason = (
         F.when(n_tokens < min_tokens, F.lit("too_short"))

@@ -16,11 +16,11 @@ Scale notes per operator:
 - ngram-jaccard: candidate generation via shared *rare* shingles (document
   frequency cap) — the blocking trick that keeps the self-join linear-ish;
   verify with exact Jaccard on shingle sets.
-- simhash: 16-bit majority-vote signature; near-dup = equal signature, or
-  Hamming<=k retrieval via nibble banding (`simhash_hamming_pairs`): with
-  the 16 bits split into 4 bands, any pair within Hamming distance 3 shares
-  at least one whole band (pigeonhole), so one equi-join on (band, nibble)
-  retrieves ALL such pairs — exact recall, no cross-join.
+- simhash: n-bit majority-vote signature; near-dup = Hamming<=k retrieval
+  via nibble banding (`simhash_hamming_pairs`): with the 16 bits split into
+  4 bands, any pair within Hamming distance 3 shares at least one whole
+  band (pigeonhole), so one equi-join on (band, nibble) retrieves ALL such
+  pairs — exact recall, no cross-join.
 - embedding cosine: see simsearch.py (shares the blocked-pair machinery).
 """
 
@@ -367,21 +367,6 @@ def simhash_bits(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
         term = F.when(F.col(f"s{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
         sig = term if sig is None else sig + term
     return agg.select(F.col(id_col), sig.cast("long").alias("simhash"))
-
-
-def simhash16(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """16-bit SimHash (the oracle-paired width)."""
-    return simhash_bits(docs, id_col, text_col, n_bits=16)
-
-
-def simhash_dup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Groups of documents with identical 16-bit simhash (near-dup buckets)."""
-    return (
-        simhash16(docs, id_col, text_col)
-        .groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("canonical_id"))
-        .where(F.col("n_docs") > 1)
-    )
 
 
 def simhash_hamming_pairs(docs: DataFrame, id_col: str = "doc_id",

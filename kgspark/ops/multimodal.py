@@ -39,8 +39,6 @@ DECODED_IMAGE_SCHEMA = (
     "mean_luma double, decode_ok boolean, luma_src string"
 )
 
-FRAME_SAMPLE_SCHEMA = "media_id string, frame_idx int, frame_ts double, frame_hash string"
-
 # PNG color type -> sample channels (grayscale, rgb, palette, gray+alpha, rgba)
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
@@ -279,31 +277,6 @@ def decode_images(media: DataFrame) -> DataFrame:
             )
 
     return media.select("media_id", "payload").mapInPandas(run, DECODED_IMAGE_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_n_seconds: float = 1.0, duration_key: str = "duration_s") -> DataFrame:
-    """Video frame sampling plumbing: one row per sampled frame.
-
-    Frame extraction is stubbed (hash of payload+idx stands in for pixel
-    data); the fan-out shape — binary blob -> N typed rows — is the real
-    contract (UDTF-shaped, SURVEY.md §2.12)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {"media_id": [], "frame_idx": [], "frame_ts": [], "frame_hash": []}
-            for mid, payload, meta in zip(b["media_id"], b["payload"], b["meta"]):
-                dur = float((meta or {}).get(duration_key, "0") or 0)
-                n = max(int(dur / every_n_seconds), 1) if payload is not None else 0
-                for i in range(n):
-                    rows["media_id"].append(mid)
-                    rows["frame_idx"].append(i)
-                    rows["frame_ts"].append(round(i * every_n_seconds, 6))
-                    rows["frame_hash"].append(
-                        hashlib.sha256((payload or b"") + str(i).encode()).hexdigest()[:16]
-                    )
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "payload", "meta").mapInPandas(run, FRAME_SAMPLE_SCHEMA)
 
 
 def make_png_bytes(width: int, height: int, pixels, filter_type: int = 0) -> bytes:

@@ -1,15 +1,17 @@
 """Similarity search over embedding columns (array<float>).
 
-Two strategies:
+Two top-k strategies:
 - **brute-force cosine top-k** — the correctness baseline: broadcast the
   (small) query set, JVM-side dot product via `zip_with` + `aggregate`,
   per-query top-k via a row_number window with a total order (score desc,
   id asc) so results are deterministic at any parallelism.
-- **LSH-bucketed** — the scale path: sign-random-projection buckets
-  (deterministic hyperplanes derived from fixed dims), equi-join within
-  bucket, then exact cosine verify. At 10^9 vectors the bucket join replaces
-  the O(N*Q) scan; the bucket id is also the natural partition key for a
-  pre-partitioned ANN index table.
+- **IVF** — the scale path: vectors are assigned to their max-cosine
+  centroid and a query exact-verifies only its nprobe nearest lists.
+
+Embedding near-duplicates (`embedding_dup_pairs`) block on a 16-bucket
+sign-random-projection key from fixed dims, then verify exact cosine. The
+self-join is quadratic within a bucket (~N^2/16 pairs at N vectors), so it
+is a fixture-scale operator, not a 10^9-vector one.
 
 No Python in the hot path: `zip_with`/`aggregate` are whole-stage-codegen
 expressions. A vectorized pandas-UDF + numpy path would win for very wide
@@ -19,16 +21,10 @@ Arrow transfer entirely.
 
 from __future__ import annotations
 
-import hashlib
-from functools import reduce
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _e6(col):
-    """floor(x*1e6) fixed-point (see textstats._e6): portable across engines."""
-    return F.floor(col * 1000000.0).cast("long")
+from .textstats import _e6
 
 
 def _dot(a, b):
@@ -87,200 +83,6 @@ def srp_bucket(vec_col: str, dims: tuple[int, ...] = (0, 1, 2, 3)):
     return expr.cast("int")
 
 
-def lsh_bucketed_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    dims: tuple[int, ...] = (0, 1, 2, 3),
-) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's SRP bucket,
-    then exact cosine + windowed top-k. Recall < 1 by design; the bucket
-    join is the 1000x-scale replacement for the cross join."""
-    v = vectors.withColumn("bucket", srp_bucket(vec_col, dims))
-    q = queries.withColumn("bucket", srp_bucket(query_vec_col, dims))
-    joined = v.join(F.broadcast(q), "bucket").where(F.col(id_col) != F.col(query_id_col))
-    scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        _e6(cosine(F.col(vec_col), F.col(query_vec_col))).alias("cosine_sim_e6"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim_e6"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).where(F.col("rank") <= k)
-
-
-# ---------------------------------------------------------------------------
-# Banded SRP — the 10^9-vector scale path.
-#
-# The fixed-dims srp_bucket above gives 2^len(dims) buckets total; at a
-# billion rows a 16-bucket self-join is ~N^2/16 — a cartesian bomb. Banded
-# SRP is the same shape as MinHash-LSH banding: n_bits sign-projection bits
-# split into bands of band_bits; each row lands in one bucket PER BAND
-# (2^band_bits values x n_bands tables), candidates are pairs sharing any
-# band bucket. Collision probability per band is (1 - theta/pi)^band_bits
-# (theta = angle), so near-neighbors survive while the candidate count per
-# bucket drops geometrically with band_bits.
-#
-# Hyperplanes are SPARSE +-1 projections (Achlioptas-style), with the
-# (dim, sign) pattern drawn from md5 of (seed, bit, i) — deterministic,
-# library-free, and cheap enough to embed as literals in an oracle SQL
-# string. All per-row math stays JVM-side (element_at chains).
-# ---------------------------------------------------------------------------
-
-
-def srp_hyperplanes(
-    n_bits: int, dim: int, nnz: int = 8, seed: int = 42
-) -> list[list[tuple[int, float]]]:
-    """n_bits sparse hyperplanes over `dim` dims: nnz distinct (dim, +-1.0)
-    pairs each, derived from md5 so every engine/run agrees."""
-    planes: list[list[tuple[int, float]]] = []
-    for j in range(n_bits):
-        pairs: dict[int, float] = {}
-        i = 0
-        while len(pairs) < min(nnz, dim):
-            h = hashlib.md5(f"{seed}:{j}:{i}".encode()).hexdigest()
-            d = int(h[:8], 16) % dim
-            if d not in pairs:
-                pairs[d] = 1.0 if int(h[8], 16) % 2 == 0 else -1.0
-            i += 1
-        planes.append(list(pairs.items()))
-    return planes
-
-
-def _bit_expr(vec_col: str, plane: list[tuple[int, float]]):
-    proj = reduce(
-        lambda acc, t: acc + t,
-        [
-            F.lit(s) * F.element_at(F.col(vec_col), d + 1).cast("double")
-            for d, s in plane
-        ],
-    )
-    return F.when(proj > 0, F.lit(1)).otherwise(F.lit(0))
-
-
-def srp_band_buckets(
-    vec_col: str,
-    planes: list[list[tuple[int, float]]],
-    band_bits: int = 4,
-):
-    """Array column: one bucket id per band (bits packed little-endian)."""
-    n_bands = len(planes) // band_bits
-    bands = []
-    for b in range(n_bands):
-        v = F.lit(0)
-        for i in range(band_bits):
-            v = v + _bit_expr(vec_col, planes[b * band_bits + i]) * F.lit(1 << i)
-        bands.append(v.cast("int"))
-    return F.array(*bands)
-
-
-def srp_bit_sql(plane: list[list[tuple[int, float]]], vec_expr: str) -> str:
-    proj = " + ".join(f"{s:+.1f} * CAST({vec_expr}[{d + 1}] AS DOUBLE)" for d, s in plane)
-    return f"(CASE WHEN ({proj}) > 0 THEN 1 ELSE 0 END)"
-
-
-def srp_band_sql(
-    planes: list[list[tuple[int, float]]], band: int, band_bits: int, vec_expr: str
-) -> str:
-    """DuckDB expression for one band's bucket id — mirrors srp_band_buckets
-    term-for-term (same association order) so float comparisons agree."""
-    bits = [
-        f"{srp_bit_sql(planes[band * band_bits + i], vec_expr)} * {1 << i}"
-        for i in range(band_bits)
-    ]
-    return "(" + " + ".join(bits) + ")"
-
-
-def _banded_candidates(
-    vectors: DataFrame,
-    planes: list[list[tuple[int, float]]],
-    band_bits: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(id, band, bucket) — exploded banded index; the equi-join key table."""
-    return vectors.select(
-        F.col(id_col),
-        F.posexplode(srp_band_buckets(vec_col, planes, band_bits)).alias(
-            "band", "bucket"
-        ),
-    )
-
-
-def lsh_banded_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_bits: int = 16,
-    band_bits: int = 4,
-    nnz: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Approximate top-k with banded-SRP candidate generation: a vector is a
-    candidate if it shares ANY band bucket with the query. One equi-join on
-    (band, bucket) + a pair-distinct; recall rises with n_bands while
-    per-bucket join fan-out stays 2^band_bits-bounded."""
-    planes = srp_hyperplanes(n_bits, dim, nnz, seed)
-    vb = _banded_candidates(vectors, planes, band_bits, id_col, vec_col)
-    qb = _banded_candidates(queries, planes, band_bits, query_id_col, query_vec_col)
-    cand = (
-        vb.join(F.broadcast(qb), ["band", "bucket"])
-        .where(F.col(id_col) != F.col(query_id_col))
-        .select(id_col, query_id_col)
-        .distinct()
-    )
-    scored = (
-        cand.join(vectors, id_col)
-        .join(F.broadcast(queries), query_id_col)
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            _e6(cosine(F.col(vec_col), F.col(query_vec_col))).alias("cosine_sim_e6"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim_e6"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).where(
-        F.col("rank") <= k
-    )
-
-
-def embedding_dup_pairs_banded(
-    vectors: DataFrame,
-    threshold: float = 0.95,
-    n_bits: int = 16,
-    band_bits: int = 4,
-    nnz: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Near-duplicate pairs via banded-SRP self-join — the scale-safe
-    replacement for the 16-bucket embedding_dup_pairs: per-band buckets
-    bound the self-join fan-out, multiple bands keep recall."""
-    planes = srp_hyperplanes(n_bits, dim, nnz, seed)
-    idx = _banded_candidates(vectors, planes, band_bits, id_col, vec_col)
-    a = idx.select(F.col(id_col).alias("a"), "band", "bucket")
-    b = idx.select(F.col(id_col).alias("b"), "band", "bucket")
-    pairs = a.join(b, ["band", "bucket"]).where(F.col("a") < F.col("b")).select("a", "b").distinct()
-    va = vectors.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
-    vb_ = vectors.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
-    return (
-        pairs.join(va, "a")
-        .join(vb_, "b")
-        .select("a", "b", _e6(cosine(F.col("va"), F.col("vb"))).alias("cosine_sim_e6"))
-        .where(F.col("cosine_sim_e6") >= int(threshold * 1000000))
-    )
-
-
 def embedding_dup_pairs(
     vectors: DataFrame,
     threshold: float = 0.95,
@@ -311,28 +113,14 @@ def embedding_dup_pairs(
 # the scanned fraction is ~nprobe/K of the corpus instead of all of it. At
 # 10^9 vectors with K=sqrt(N) the centroid set is still broadcast-sized,
 # assignment is a map-only broadcast argmax, and centroid_id is the natural
-# partition/bucket key for a materialized index table (the same role the
-# band/bucket key plays for banded SRP — IVF wins when vectors cluster,
-# SRP when they don't).
+# partition/bucket key for a materialized index table.
 #
-# Determinism: seeding takes the n_centroids lowest-id vectors (the
-# SQL-replicable degenerate of k-means++ sampling), and the Lloyd trainer
-# runs a FIXED iteration count with fixed tie-breaks — same input, same
-# centroids, at any parallelism. nprobe = K degenerates to exact brute
-# force (test-pinned).
+# Determinism: the caller passes the centroids (ann_ivf_topk seeds them
+# with the 8 lowest-id vectors, which SQL can replicate), and assignment
+# uses fixed-point e6 scores with a (score desc, centroid_id asc) total
+# order, so the lists are the same at any parallelism. nprobe = K
+# degenerates to exact brute force (test-pinned).
 # ---------------------------------------------------------------------------
-
-
-def ivf_seed_centroids(vectors: DataFrame, n_centroids: int = 8,
-                       id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """(centroid_id, centroid_vec): the n_centroids lowest-id vectors."""
-    return (
-        vectors.orderBy(F.asc(id_col))
-        .limit(n_centroids)
-        .select(
-            F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("centroid_vec")
-        )
-    )
 
 
 def ivf_assign(vectors: DataFrame, centroids: DataFrame,
@@ -398,49 +186,3 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, centroids: DataFrame,
         .where(F.col("rank") <= k)
     )
 
-
-def ivf_train_centroids(vectors: DataFrame, n_centroids: int = 8, n_iters: int = 3,
-                        id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Lloyd-refined coarse centroids, pure DataFrame ops (no MLlib, no
-    driver-side vectors): assign (broadcast argmax) -> per-dimension mean
-    via posexplode + groupBy -> arrays rebuilt with array_sort/transform.
-    Deterministic: seeded from the lowest-id vectors, FIXED iteration
-    count, tie-free assignment; empty clusters keep their previous
-    centroid. The per-dimension mean sums per-row DECIMAL casts, not
-    doubles: double addition is accumulation-order dependent and shuffle
-    fetch order varies across runs/parallelism, so a double F.avg could
-    flip centroid bits (and downstream e6 assignments) between local[1]
-    and local[32]; decimal sums are exact, hence order-independent
-    (round-4 advice). Each iteration is one shuffle over (centroid, dim)
-    rows — at 10^9 vectors train on a sampled fraction, exactly like
-    FAISS."""
-    cents = ivf_seed_centroids(vectors, n_centroids, id_col, vec_col).localCheckpoint()
-    for _ in range(n_iters):
-        assign = ivf_assign(vectors, cents, id_col, vec_col)
-        means = (
-            vectors.join(assign, id_col)
-            .select("centroid_id", F.posexplode(F.col(vec_col)).alias("pos", "v"))
-            .groupBy("centroid_id", "pos")
-            .agg(
-                (
-                    F.sum(F.col("v").cast("double").cast("decimal(27,9)"))
-                    / F.count(F.lit(1))
-                ).alias("m")
-            )
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"].cast("float"),
-                ).alias("new_vec")
-            )
-        )
-        cents = (
-            cents.join(means, "centroid_id", "left")
-            .select(
-                "centroid_id",
-                F.coalesce(F.col("new_vec"), F.col("centroid_vec")).alias("centroid_vec"),
-            )
-            .localCheckpoint()  # cut the iteration lineage (tiny frame)
-        )
-    return cents

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import word_tokens
+
 STOPWORDS_EN = ["the", "a", "an", "and", "of", "to", "in", "is", "was", "it"]
 _LANG_LEXICON = {
     "en": ["the", "and", "of", "was", "is"],
@@ -25,10 +27,6 @@ _LANG_LEXICON = {
     "de": ["der", "die", "und", "von", "ist"],
     "es": ["el", "la", "y", "de", "es"],
 }
-
-
-def _tokens(text_col: str):
-    return F.split(F.lower(F.col(text_col)), r"\s+")
 
 
 def _e6(col):
@@ -40,7 +38,7 @@ def _e6(col):
 
 def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, n_tokens, n_chars, avg_token_len_e6, n_subwords)."""
-    toks = _tokens(text_col)
+    toks = word_tokens(text_col)
     n_tokens = F.size(toks)
     n_chars = F.length(F.col(text_col))
     # BPE-ish estimate: every ~4 chars of a word is a subword piece
@@ -59,7 +57,7 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, len_score_e6, punct_ratio_e6, stopword_ratio_e6, quality_e6) —
     fixed-point millionths in [0, 1e6]."""
-    toks = _tokens(text_col)
+    toks = word_tokens(text_col)
     n_tokens = F.size(toks)
     n_chars = F.length(F.col(text_col))
     n_punct = n_chars - F.length(F.regexp_replace(F.col(text_col), r"[^\w\s]", ""))
@@ -80,10 +78,9 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     )
 
 
-def langid_heuristic(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, pred_lang, lang_hits): argmax of per-language stopword hits,
-    tie-broken alphabetically ('und' when no lexicon word hits)."""
-    toks = _tokens(text_col)
+def lang_argmax(toks):
+    """(pred_lang, hits) columns over a token array: the language with the
+    most lexicon hits, tie-broken alphabetically ('und' when none hits)."""
 
     def _hits(words):
         # closure factory: a default-arg lambda would read as a 2-arg
@@ -91,17 +88,20 @@ def langid_heuristic(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
         arr = F.array(*[F.lit(w) for w in words])
         return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
-    hit_cols = [
-        _hits(words).alias(f"hits_{lang}") for lang, words in sorted(_LANG_LEXICON.items())
-    ]
-    scored = docs.select(F.col(id_col), *hit_cols)
     langs = sorted(_LANG_LEXICON)
-    best = F.greatest(*[F.col(f"hits_{l}") for l in langs])
+    hits = {lg: _hits(_LANG_LEXICON[lg]) for lg in langs}
+    best = F.greatest(*[hits[lg] for lg in langs])
     pred = F.lit("und")
     # first (alphabetical) language reaching the max wins the tie
-    for l in reversed(langs):
-        pred = F.when((F.col(f"hits_{l}") == best) & (best > 0), F.lit(l)).otherwise(pred)
-    return scored.select(
+    for lg in reversed(langs):
+        pred = F.when((hits[lg] == best) & (best > 0), F.lit(lg)).otherwise(pred)
+    return pred, best
+
+
+def langid_heuristic(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """(id, pred_lang, lang_hits): `lang_argmax` over the word tokens."""
+    pred, best = lang_argmax(word_tokens(text_col))
+    return docs.select(
         F.col(id_col), pred.alias("pred_lang"), best.cast("long").alias("lang_hits")
     )
 
@@ -110,7 +110,7 @@ def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     """(id, fp): md5 over the sorted token multiset."""
     return docs.select(
         F.col(id_col),
-        F.md5(F.array_join(F.array_sort(_tokens(text_col)), " ")).alias("fp"),
+        F.md5(F.array_join(F.array_sort(word_tokens(text_col)), " ")).alias("fp"),
     )
 
 
@@ -143,7 +143,7 @@ def tfidf_topk(
     from pyspark.sql import Window
 
     toks = docs.select(
-        F.col(id_col), F.explode(_tokens(text_col)).alias("term")
+        F.col(id_col), F.explode(word_tokens(text_col)).alias("term")
     ).where(F.col("term") != "")
     tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     tf = tf.withColumn(

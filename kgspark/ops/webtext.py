@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import word_tokens
+
 TRACKING_PARAMS = ("utm_", "fbclid", "gclid", "mc_eid")
 
 
@@ -114,7 +116,7 @@ def repetition_stats(
     - max_token_run: longest run of the SAME token repeated back-to-back
       (catches "buy buy buy ..." spam directly).
     """
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
+    toks = word_tokens(text_col)
     out = docs.select(F.col(id_col), toks.alias("_toks"))
     cols = [F.col(id_col)]
     for n in ns:

@@ -30,12 +30,13 @@ def page_years(pages: DataFrame) -> DataFrame:
 
 
 def entity_snapshots(links: DataFrame, pages: DataFrame) -> DataFrame:
-    """One row per (entity_id, snapshot_year): mention count, distinct-page
-    count, and the year's dominant surface form (count desc, surface asc)."""
+    """One row per (entity_id, snapshot_year): the high-confidence mention
+    count and the year's dominant surface form (count desc, surface asc).
+    `links` holds one row per (url, surface), so the count is also the
+    number of (page, surface) pairs."""
     l = links.where(F.col("confidence") == "high").join(page_years(pages), "url")
     per_surface = l.groupBy("entity_id", "snapshot_year", "surface").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("url").alias("n_pages_s"),
+        F.count(F.lit(1)).alias("n")
     )
     w = Window.partitionBy("entity_id", "snapshot_year").orderBy(
         F.desc("n"), F.asc("surface")
@@ -44,8 +45,7 @@ def entity_snapshots(links: DataFrame, pages: DataFrame) -> DataFrame:
         F.col("rn") == 1
     ).select("entity_id", "snapshot_year", F.col("surface").alias("top_surface"))
     totals = per_surface.groupBy("entity_id", "snapshot_year").agg(
-        F.sum("n").cast("long").alias("n_mentions"),
-        F.sum("n_pages_s").cast("long").alias("n_surface_pages"),
+        F.sum("n").cast("long").alias("n_mentions")
     )
     return totals.join(top, ["entity_id", "snapshot_year"])
 

@@ -42,10 +42,9 @@ def _fixture(spark):
 
 def test_entity_snapshots_topsurface_and_counts(spark):
     pages, links = _fixture(spark)
-    snaps = {
-        (r["entity_id"], r["snapshot_year"]): r
-        for r in temporal.entity_snapshots(links, pages).collect()
-    }
+    df = temporal.entity_snapshots(links, pages)
+    assert df.columns == ["entity_id", "snapshot_year", "n_mentions", "top_surface"]
+    snaps = {(r["entity_id"], r["snapshot_year"]): r for r in df.collect()}
     assert snaps[("E1", 1998)]["top_surface"] == "Bytown"
     assert snaps[("E1", 1998)]["n_mentions"] == 5  # 4 Bytown + 1 Ottawa (high only)
     assert snaps[("E1", 2000)]["top_surface"] == "Ottawa"
