@@ -65,7 +65,7 @@ def candidate_pairs_lsh(surfaces: DataFrame) -> DataFrame:
     surfaces: one row per distinct normalized surface (`norm_surface`).
     Returns pairs with a < b and their exact shingle Jaccard.
     """
-    sh = surfaces.select("norm_surface").distinct().withColumn("sh", char_ngrams("norm_surface", 3))
+    sh = surfaces.select("norm_surface", char_ngrams("norm_surface", 3).alias("sh"))
     # K minhashes, JVM-side: min over xxhash64(shingle, k)
     minhash_cols = [
         F.array_min(F.expr(f"transform(sh, s -> xxhash64(s, {k}))")).alias(f"mh{k}")
@@ -76,6 +76,7 @@ def candidate_pairs_lsh(surfaces: DataFrame) -> DataFrame:
     # (no N-way union -> one scan, one shuffle)
     banded = sig.select(
         "norm_surface",
+        "sh",
         F.posexplode(F.array(*[F.col(f"mh{k}") for k in range(N_HASHES)])).alias(
             "band", "band_key"
         ),
@@ -83,34 +84,29 @@ def candidate_pairs_lsh(surfaces: DataFrame) -> DataFrame:
     # deterministic safety-net block: (3-char prefix, first-token count)
     prefix = sh.select(
         "norm_surface",
+        "sh",
         F.lit(-1).alias("band"),
         F.xxhash64(F.substring("norm_surface", 1, 3)).alias("band_key"),
     )
     banded = banded.unionByName(prefix)
 
-    left = banded.select(F.col("norm_surface").alias("a"), "band", "band_key")
-    right = banded.select(F.col("norm_surface").alias("b"), "band", "band_key")
-    pairs = (
+    # the shingles ride the band join, so the exact verify (shingle
+    # Jaccard, JVM-side) needs no lookup of either side
+    left = banded.select(F.col("norm_surface").alias("a"), F.col("sh").alias("sh_a"), "band", "band_key")
+    right = banded.select(F.col("norm_surface").alias("b"), F.col("sh").alias("sh_b"), "band", "band_key")
+    return (
         left.join(right, ["band", "band_key"])
         .where(F.col("a") < F.col("b"))  # symmetric dedup (reference O4)
-        .select("a", "b")
-        .distinct()
-    )
-    # exact verify: shingle Jaccard, JVM-side
-    sh_a = sh.select(F.col("norm_surface").alias("a"), F.col("sh").alias("sh_a"))
-    sh_b = sh.select(F.col("norm_surface").alias("b"), F.col("sh").alias("sh_b"))
-    return (
-        pairs.join(sh_a, "a")
-        .join(sh_b, "b")
-        .withColumn(
-            "jaccard",
+        .select(
+            "a",
+            "b",
             F.round(
                 F.size(F.array_intersect("sh_a", "sh_b"))
                 / F.size(F.array_union("sh_a", "sh_b")),
                 6,
-            ),
+            ).alias("jaccard"),
         )
-        .select("a", "b", "jaccard")
+        .distinct()
     )
 
 
@@ -134,8 +130,9 @@ def same_as_edges(surfaces: DataFrame, surface_to_entity: DataFrame) -> DataFram
         )
         .select("a", "b")
     )
-    ent_a = surface_to_entity.select(F.col("norm_surface").alias("a"), F.col("entity_id").alias("ent_a"))
-    ent_b = surface_to_entity.select(F.col("norm_surface").alias("b"), F.col("entity_id").alias("ent_b"))
+    ent = surface_to_entity.select("norm_surface", "entity_id")
+    ent_a = ent.select(F.col("norm_surface").alias("a"), F.col("entity_id").alias("ent_a"))
+    ent_b = ent.select(F.col("norm_surface").alias("b"), F.col("entity_id").alias("ent_b"))
     lsh = (
         lsh.join(F.broadcast(ent_a), "a", "left")
         .join(F.broadcast(ent_b), "b", "left")
@@ -144,10 +141,15 @@ def same_as_edges(surfaces: DataFrame, surface_to_entity: DataFrame) -> DataFram
         )
         .select("a", "b")
     )
+    # every pair within an entity's surfaces, from one aggregate instead
+    # of a self-join of the map
     via_entity = (
-        ent_a.join(ent_b, ent_a.ent_a == ent_b.ent_b)
+        ent.where(F.col("entity_id").isNotNull())
+        .groupBy("entity_id")
+        .agg(F.collect_set("norm_surface").alias("s"))
+        .select(F.explode("s").alias("a"), "s")
+        .select("a", F.explode("s").alias("b"))
         .where(F.col("a") < F.col("b"))
-        .select("a", "b")
     )
     return lsh.unionByName(via_entity).distinct()
 
@@ -370,27 +372,15 @@ def resolve_unlinked_surfaces(
     components: DataFrame, surface_to_entity: DataFrame
 ) -> DataFrame:
     """Recall recovery: give unlinked surfaces the entity id of their
-    component (majority entity among linked members, tie-break min id)."""
+    component (majority entity among linked members, tie-break min id).
+
+    `components` holds one row per node, so the vote is one mode over a
+    window per component, on top of a broadcast lookup of each surface's
+    own link."""
     linked = components.withColumnRenamed("node", "norm_surface").join(
-        surface_to_entity.select("norm_surface", "entity_id"), "norm_surface", "left"
+        F.broadcast(surface_to_entity.select("norm_surface", "entity_id")), "norm_surface", "left"
     )
-    ent_counts = (
-        linked.where(F.col("entity_id").isNotNull())
-        .groupBy("component", "entity_id")
-        .count()
-    )
-    w = Window.partitionBy("component").orderBy(F.desc("count"), F.asc("entity_id"))
-    comp_entity = (
-        ent_counts.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("component", F.col("entity_id").alias("comp_entity"))
-    )
-    return (
-        linked.join(comp_entity, "component", "left")
-        .select(
-            "norm_surface",
-            F.coalesce("entity_id", "comp_entity").alias("entity_id"),
-        )
-        .where(F.col("entity_id").isNotNull())
-        .dropDuplicates(["norm_surface"])
-    )
+    comp_entity = F.mode("entity_id", deterministic=True).over(Window.partitionBy("component"))
+    return linked.select(
+        "norm_surface", F.coalesce("entity_id", comp_entity).alias("entity_id")
+    ).where(F.col("entity_id").isNotNull())

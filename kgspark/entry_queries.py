@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .io import spread
 from .ops import dedup, simsearch, textstats
 
 GAZ = ["spark", "join", "table", "window", "filter", "merge", "sort", "hash", "stream", "vector"]
@@ -32,34 +33,6 @@ _GAZ_SQL = "(" + ", ".join(f"'{g}'" for g in GAZ) + ")"
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Ensure the DataFrame has at least default-parallelism partitions.
-
-    The small single-file test parquets arrive as ONE input partition
-    (file size << maxPartitionBytes), which serializes every downstream
-    map stage onto one core — measured 3x on the shingle explode. At
-    cluster scale inputs already carry >= cores partitions and this is a
-    no-op; the repartition only fires (and only shuffles) on
-    under-partitioned small inputs.
-
-    The under-partitioning probe counts INPUT FILES — pure catalog
-    metadata. The previous df.rdd.getNumPartitions() forced full analysis
-    plus a Py4J RDD conversion on every query build (round-4 advice); a
-    single file larger than maxPartitionBytes would now be under-counted
-    as 1 and repartitioned needlessly, but the test inputs are small
-    single files and cluster-scale tables are many-file, so the miscount
-    costs at most one extra shuffle on an input shape that doesn't occur.
-
-    Non-file inputs (createDataFrame, views, post-shuffle frames) report
-    ZERO input files — that is "no information", not "one partition", so
-    they pass through untouched rather than eating an unconditional
-    repartition shuffle (round-5 advice)."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if 0 < len(df.inputFiles()) < parallelism:
-        return df.repartition(parallelism)
-    return df
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -93,7 +66,7 @@ def q(name: str, oracle: str | None = None):
 def kg_mention_detect(spark, sf_dir):
     """Gazetteer mention detection: token-explode + vocabulary filter
     (SURVEY.md §2 mention scan; map-side only up to the final groupBy)."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     return (
         docs.select("doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("term"))
         .where(F.col("term").isin(GAZ))
@@ -114,7 +87,7 @@ def kg_mention_detect(spark, sf_dir):
 def kg_mention_topk(spark, sf_dir):
     """Reference TEST-6 analog: top-10 entities by page count
     (groupBy + countDistinct + TakeOrderedAndProject)."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     return (
         docs.select("doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("term"))
         .where(F.col("term").isin(GAZ))
@@ -142,7 +115,7 @@ def kg_mention_topk(spark, sf_dir):
 def kg_cooccurrence_edges(spark, sf_dir):
     """Triple materialization analog: co-mention self-join with symmetric
     dedup (a < b, reference O4) -> weighted (subj, pred, obj) edges."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     m = (
         docs.select("doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("term"))
         .where(F.col("term").isin(GAZ))
@@ -183,7 +156,7 @@ def kg_cooccurrence_edges(spark, sf_dir):
 def kg_link_fuzzy(spark, sf_dir):
     """Fuzzy entity linking analog: distinct vocabulary vs broadcast
     gazetteer, levenshtein<=1 verify, top-1 window (reference J6/J7/W1)."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     toks = (
         docs.select(F.explode(F.split(F.lower("text"), r"\s+")).alias("tok"))
         .where(F.length("tok") >= 3)
@@ -261,7 +234,7 @@ def kg_multihop_shared_terms(spark, sf_dir):
     at 5,000 docs — flat), at the cost of only surfacing the max_df
     lowest-id docs per term, the same bounded-adjacency contract a Neo4j
     index lookup gives the reference's TEST-6 2-hop."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     m = (
         docs.select("doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("term"))
         .where(F.col("term").isin(GAZ))
@@ -553,7 +526,7 @@ def events_sessionize(spark, sf_dir):
     """,
 )
 def dedup_exact(spark, sf_dir):
-    return dedup.exact_dedup(_spread(_t(spark, sf_dir, "documents")))
+    return dedup.exact_dedup(spread(_t(spark, sf_dir, "documents")))
 
 
 # For near-dup demos the corpus has no real duplicates, so each query builds
@@ -581,7 +554,7 @@ def _with_twins(docs: DataFrame) -> DataFrame:
     # the corpus once instead of corpus + twin (ReusedExchange serves the
     # twin branch), and lower() is applied before the twin's tokenizer
     # (idempotent, so the twin text is unchanged).
-    base = _spread(docs.select("doc_id", F.lower("text").alias("text")))
+    base = spread(docs.select("doc_id", F.lower("text").alias("text")))
     toks = F.split(F.col("text"), r"\s+")
     twin = base.select(
         (F.col("doc_id") + 10000000).alias("doc_id"),
@@ -685,7 +658,7 @@ def dedup_minhash_lsh_fast(spark, sf_dir):
     exact-duplicate pairs on the fixture corpus."""
     from .ops import dedup as _dedup
 
-    return _dedup.minhash_lsh_pairs_fast(_spread(_t(spark, sf_dir, "documents")))
+    return _dedup.minhash_lsh_pairs_fast(spread(_t(spark, sf_dir, "documents")))
 
 
 QUERIES["dedup_minhash_lsh_fast"] = dedup_minhash_lsh_fast
@@ -808,7 +781,7 @@ def corpus_span_dedup(spark, sf_dir):
 def dedup_simhash_hamming(spark, sf_dir):
     """Hamming<=3 simhash retrieval via exact-recall nibble banding."""
     return dedup.simhash_hamming_pairs(
-        _spread(_t(spark, sf_dir, "documents")), k=3, n_bands=4
+        spread(_t(spark, sf_dir, "documents")), k=3, n_bands=4
     )
 
 
@@ -825,7 +798,7 @@ def dedup_simhash_hamming(spark, sf_dir):
     """,
 )
 def text_token_stats(spark, sf_dir):
-    return textstats.token_stats(_spread(_t(spark, sf_dir, "documents")))
+    return textstats.token_stats(spread(_t(spark, sf_dir, "documents")))
 
 
 @q(
@@ -846,7 +819,7 @@ def text_token_stats(spark, sf_dir):
     """,
 )
 def text_quality_score(spark, sf_dir):
-    return textstats.quality_score(_spread(_t(spark, sf_dir, "documents")))
+    return textstats.quality_score(spread(_t(spark, sf_dir, "documents")))
 
 
 @q(
@@ -858,7 +831,7 @@ def text_quality_score(spark, sf_dir):
     """,
 )
 def text_fingerprint(spark, sf_dir):
-    return textstats.fingerprint(_spread(_t(spark, sf_dir, "documents")))
+    return textstats.fingerprint(spread(_t(spark, sf_dir, "documents")))
 
 
 @q(
@@ -910,7 +883,7 @@ def text_repetition_stats(spark, sf_dir):
     relationally (unnest -> group counts, gaps-islands for runs)."""
     from .ops.webtext import repetition_stats
 
-    return repetition_stats(_spread(_t(spark, sf_dir, "documents")))
+    return repetition_stats(spread(_t(spark, sf_dir, "documents")))
 
 
 @q(
@@ -963,7 +936,7 @@ def web_url_canonicalize(spark, sf_dir):
     DuckDB regexp + list lambdas."""
     from .ops.webtext import synth_urls, url_canonicalize
 
-    docs = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "source")
+    docs = spread(_t(spark, sf_dir, "documents")).select("doc_id", "source")
     return url_canonicalize(synth_urls(docs)).select(
         "doc_id", "url", "host", "reg_domain", "path_depth", "canonical_url"
     )
@@ -990,7 +963,7 @@ def asof_join_events(spark, sf_dir):
     tables at every sf, so <= semantics are deterministic."""
     from .ops.webtext import asof_join
 
-    ev = _spread(_t(spark, sf_dir, "events"))
+    ev = spread(_t(spark, sf_dir, "events"))
     left = ev.where(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
     )
@@ -1025,7 +998,7 @@ def interval_join_events(spark, sf_dir):
     a raw range predicate."""
     from .ops.webtext import interval_join
 
-    ev = _spread(_t(spark, sf_dir, "events"))
+    ev = spread(_t(spark, sf_dir, "events"))
     left = ev.where(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
         "user_id",
@@ -1085,7 +1058,7 @@ def text_redact_pii(spark, sf_dir):
     from .ops.webtext import redact_pii
 
     d = F.col("doc_id")
-    aug = _spread(_t(spark, sf_dir, "documents")).select(
+    aug = spread(_t(spark, sf_dir, "documents")).select(
         "doc_id",
         F.concat(
             F.col("text"),
@@ -1135,7 +1108,7 @@ def text_tfidf_topk(spark, sf_dir):
     textbook log-idf mode is pytest-pinned instead."""
     from .ops.textstats import tfidf_topk
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     out = tfidf_topk(docs, k=3, idf_mode="ratio_e6")
     return out.select("doc_id", "term", "tf", "df", "score_e6", "rank")
 
@@ -1159,7 +1132,7 @@ def sample_stratified(spark, sf_dir):
     engine."""
     from .ops.sampling import stratified_sample
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     return stratified_sample(docs, "source", k=20).select(
         "doc_id", "source", "sample_rank"
     )
@@ -1192,7 +1165,7 @@ def pack_sequences_docs(spark, sf_dir):
     cumsum the distributed form must equal exactly."""
     from .ops.sampling import pack_sequences
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     out = pack_sequences(docs, budget=256, block_size=64)
     # 'offset' is a reserved word on the DuckDB side
     return out.withColumnRenamed("offset", "tok_offset")
@@ -1248,7 +1221,7 @@ def bloom_incremental_dedup(spark, sf_dir):
     false negatives, pytest-pinned too)."""
     from .ops.webtext import bloom_build, bloom_might_contain
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     hist = docs.where(F.col("doc_id") < 250).select(F.md5("text").alias("key"))
     new = (
         docs.where(F.col("doc_id") >= 250)
@@ -1287,7 +1260,7 @@ def stats_group_quantiles(spark, sf_dir):
     conventions differ — so p50/p95 hash-match exactly."""
     from .ops.stats import group_quantiles
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     return group_quantiles(docs, "source", "n_chars", qs=(0.5, 0.95))
 
 
@@ -1317,7 +1290,7 @@ def stats_outliers(spark, sf_dir):
     from .ops.stats import outlier_zscore
 
     d = F.col("doc_id")
-    vals = _spread(_t(spark, sf_dir, "documents")).select(
+    vals = spread(_t(spark, sf_dir, "documents")).select(
         "doc_id",
         "source",
         (F.col("n_chars") * F.when(d % 97 == 0, 10).otherwise(1))
@@ -1375,7 +1348,7 @@ def graph_pagerank(spark, sf_dir):
     vector, not just the ordering."""
     from .ops.graph import pagerank
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     m = (
         docs.select("doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("term"))
         .where(F.col("term").isin(GAZ))
@@ -1435,7 +1408,7 @@ def graph_triangles(spark, sf_dir):
     vector hash-matches, not just the total."""
     from .ops.graph import triangle_counts
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     m = (
         docs.select("doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("term"))
         .where(F.col("term").isin(GAZ))
@@ -1483,7 +1456,7 @@ def corpus_decontaminate(spark, sf_dir):
     hash join over exploded corpus n-grams."""
     from .ops.corpus import decontaminate
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     evalset = docs.where(F.col("doc_id") % 37 == 0)
     return decontaminate(docs, evalset, n=5)
 
@@ -1518,7 +1491,7 @@ def corpus_bigram_lm(spark, sf_dir):
     the oracle hash-matches the full score vector."""
     from .ops.corpus import bigram_lm_score
 
-    return bigram_lm_score(_spread(_t(spark, sf_dir, "documents")))
+    return bigram_lm_score(spread(_t(spark, sf_dir, "documents")))
 
 
 @q(
@@ -1606,7 +1579,7 @@ def corpus_c4_filter(spark, sf_dir):
     composes those SQL fragments and replays the same gate order."""
     from .ops.corpus import c4_filter
 
-    return c4_filter(_spread(_t(spark, sf_dir, "documents")))
+    return c4_filter(spread(_t(spark, sf_dir, "documents")))
 
 
 @q(
@@ -1629,7 +1602,7 @@ def corpus_mixture_stats(spark, sf_dir):
     #sources-row aggregate, never via a corpus-wide single partition."""
     from .ops.corpus import mixture_stats
 
-    return mixture_stats(_spread(_t(spark, sf_dir, "documents")))
+    return mixture_stats(spread(_t(spark, sf_dir, "documents")))
 
 
 @q(
@@ -1758,7 +1731,7 @@ _COS_E6 = f"CAST(floor({_DOT_SQL} / ({_NORM_A} * {_NORM_Q}) * 1000000.0) AS BIGI
     """,
 )
 def ann_cosine_topk(spark, sf_dir):
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
+    emb = spread(_t(spark, sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -1823,7 +1796,7 @@ def ann_ivf_topk(spark, sf_dir):
     verifies inside them — the partitioned-index scale path. The seeds are
     the 8 lowest-id vectors, so the DuckDB oracle replicates the centroids
     exactly."""
-    emb = _spread(_t(spark, sf_dir, "embeddings"))
+    emb = spread(_t(spark, sf_dir, "embeddings"))
     cents = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")
     )
@@ -1851,7 +1824,7 @@ def ann_ivf_topk(spark, sf_dir):
 )
 def dedup_embedding_cosine(spark, sf_dir):
     return simsearch.embedding_dup_pairs(
-        _spread(_t(spark, sf_dir, "embeddings")), threshold=0.4
+        spread(_t(spark, sf_dir, "embeddings")), threshold=0.4
     )
 
 
@@ -2209,7 +2182,7 @@ def entity_timeline_changes(spark, sf_dir):
     """Temporal-evolution chain: per-entity, per-snapshot mention counts
     with lag deltas — the query shape of the reference's cross-year
     timeline (query_test_results.log:12-20) over the documents corpus."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     m = (
         docs.select(
             (F.lit(1867) + F.col("doc_id") % 5).alias("yr"),
@@ -2251,7 +2224,7 @@ def provenance_entities_docs(spark, sf_dir):
     source — the oracle-checkable face of kgspark/provenance.py."""
     from . import provenance
 
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
+    docs = spread(_t(spark, sf_dir, "documents")).select(
         "doc_id",
         F.lit("x").alias("subj"),
         F.col("source").alias("src_url"),  # plain token: domain == itself
@@ -2280,7 +2253,7 @@ def kg_pipeline_mention_triples(spark, sf_dir):
     just rows>0."""
     from .mentions import annotate_pages, explode_mentions
 
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
+    docs = spread(_t(spark, sf_dir, "documents")).select(
         F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias("url"),
         "text",
     )
@@ -2339,7 +2312,7 @@ def kg_pipeline_link_triples(spark, sf_dir):
     from .link import link_mentions
     from .mentions import annotate_pages, explode_mentions
 
-    docs = _spread(_t(spark, sf_dir, "documents")).select(
+    docs = spread(_t(spark, sf_dir, "documents")).select(
         F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias("url"),
         "text",
     )
@@ -2408,7 +2381,7 @@ def kg_pipeline_components(spark, sf_dir):
     edge builder is the LSH-blocked same_as_edges)."""
     from .canonicalize import connected_components
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     m = (
         docs.select(
             "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("term")
@@ -2501,7 +2474,7 @@ def kg_pipeline_consensus(spark, sf_dir):
     boundary)."""
     from .canonicalize import consensus_canonical
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     base = (
         docs.select(F.explode(F.split(F.lower("text"), r"\s+")).alias("term"))
         .where(F.col("term").isin(GAZ))
@@ -2581,7 +2554,7 @@ def kg_pipeline_relation_triples(spark, sf_dir):
     from .mentions import annotate_pages, explode_mentions, explode_relations
     from .relations import resolve_triples
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     terms = (
         docs.select(
             "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("term")

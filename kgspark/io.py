@@ -24,6 +24,26 @@ from pyspark.sql import DataFrame, SparkSession
 MARKER = "_KG_DONE"
 
 
+def spread(df: DataFrame) -> DataFrame:
+    """Repartition a file input with fewer files than default parallelism
+    to default-parallelism partitions; pass anything else through.
+
+    A small single-file input arrives as ONE input partition (file size
+    << maxPartitionBytes), and a file of one row group stays in one task
+    however Spark splits it, which serializes every downstream map stage
+    onto one core. At cluster scale inputs carry >= cores files and this
+    is a no-op.
+
+    The probe counts INPUT FILES, pure catalog metadata: no analysis, no
+    RDD conversion. Non-file inputs (createDataFrame, generated pages,
+    views, post-shuffle frames) report zero files, which is "no
+    information", not "one partition", so they pass through untouched."""
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    if 0 < len(df.inputFiles()) < parallelism:
+        return df.repartition(parallelism)
+    return df
+
+
 class CheckpointRegistry:
     def __init__(self, spark: SparkSession, root: str | Path):
         self.spark = spark

@@ -164,26 +164,17 @@ def c4_filter(
     Returns (id, n_tokens, pred_lang, dup_2gram_frac_e6, quality_e6,
     kept, drop_reason).
 
-    The quality and repetition formulas are IDENTICAL to
-    textstats.quality_score / webtext.repetition_stats, and the language
-    label is textstats.lang_argmax, the expression langid_heuristic uses
-    (all pinned by a parity test), so a doc's composite verdict is exactly
-    the conjunction of the individual signals."""
-    from .textstats import STOPWORDS_EN, lang_argmax
+    The quality score is textstats.quality_blend, the expression
+    quality_score uses, the language label is textstats.lang_argmax, the
+    one langid_heuristic uses, and the repetition formulas are IDENTICAL
+    to webtext.repetition_stats (all pinned by a parity test), so a doc's
+    composite verdict is exactly the conjunction of the individual
+    signals."""
+    from .textstats import lang_argmax, quality_blend
 
     toks = word_tokens(text_col)
     n_tokens = F.size(toks)
-    n_chars = F.length(F.col(text_col))
-    # quality_score formulas (divide-first e6, matching that op's oracle)
-    n_punct = n_chars - F.length(F.regexp_replace(F.col(text_col), r"[^\w\s]", ""))
-    punct_e6 = F.floor(n_punct / F.greatest(n_chars, F.lit(1)) * 1000000.0).cast("long")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
-    stop_e6 = F.floor(n_stop / F.greatest(n_tokens, F.lit(1)) * 1000000.0).cast("long")
-    len_e6 = F.floor(F.least(n_tokens / F.lit(100.0), F.lit(1.0)) * 1000000.0).cast("long")
-    quality_e6 = F.floor(
-        0.4 * len_e6 + 0.3 * (1000000 - punct_e6) + 0.3 * F.least(stop_e6 * 5, F.lit(1000000))
-    ).cast("long")
+    _, _, _, quality_e6 = quality_blend(text_col, toks)
     # repetition_stats formulas (multiply-first e6, matching that oracle)
     grams = F.array_sort(_ngrams(toks, 2))
     total = F.greatest(F.size(grams), F.lit(1))

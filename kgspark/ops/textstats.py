@@ -54,10 +54,10 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, len_score_e6, punct_ratio_e6, stopword_ratio_e6, quality_e6) —
-    fixed-point millionths in [0, 1e6]."""
-    toks = word_tokens(text_col)
+def quality_blend(text_col: str, toks):
+    """(len_e6, punct_e6, stop_e6, quality_e6) columns over a text column
+    and its token array: length, punctuation-ratio and stopword-ratio
+    scores in fixed-point millionths, and their 0.4/0.3/0.3 blend."""
     n_tokens = F.size(toks)
     n_chars = F.length(F.col(text_col))
     n_punct = n_chars - F.length(F.regexp_replace(F.col(text_col), r"[^\w\s]", ""))
@@ -69,6 +69,13 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     quality_e6 = F.floor(
         0.4 * len_e6 + 0.3 * (1000000 - punct_e6) + 0.3 * F.least(stop_e6 * 5, F.lit(1000000))
     ).cast("long")
+    return len_e6, punct_e6, stop_e6, quality_e6
+
+
+def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """(id, len_score_e6, punct_ratio_e6, stopword_ratio_e6, quality_e6) —
+    fixed-point millionths in [0, 1e6]: `quality_blend` per doc."""
+    len_e6, punct_e6, stop_e6, quality_e6 = quality_blend(text_col, word_tokens(text_col))
     return docs.select(
         F.col(id_col),
         len_e6.alias("len_score_e6"),

@@ -23,7 +23,7 @@ from . import metrics
 from . import provenance as prov
 from . import temporal
 from .extract import with_extracted_text
-from .io import CheckpointRegistry
+from .io import CheckpointRegistry, spread
 from .mentions import annotate_pages, explode_mentions, explode_relations
 from .relations import resolve_triples
 
@@ -43,8 +43,10 @@ def _annotated(s: _Stages) -> DataFrame:
     # 13KB-per-page text never crosses the JVM<->Python boundary twice
     # (guide §4.1). Byte-identical output: annotate_pages(from_html=True)
     # applies the same extract_text_bytes the `extracted` stage uses.
+    # A pages input of fewer files than cores is spread first, or the
+    # annotate pass runs in as few tasks as there are files.
     gaz, regions = gazetteer_from_alias_index(s.alias_index)
-    return annotate_pages(s.pages, gaz, regions, from_html=True)
+    return annotate_pages(spread(s.pages.select("url", "html")), gaz, regions, from_html=True)
 
 
 def _surfaces(s: _Stages) -> DataFrame:

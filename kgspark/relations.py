@@ -13,9 +13,10 @@ here the edge row additionally carries provenance (src_url — the analog of
 the reference's per-measurement P70_documents edge,
 build_census_observations_v2.py:329-333).
 
-Scale: two equi-joins against the per-page link table. Both sides are
-partitioned by url from the same upstream shuffle, so AQE plans these as
-co-partitioned sort-merge joins (or broadcasts when the link side is small).
+Scale: two equi-joins against the per-page link table. The relation stream
+is repartitioned by url once, and every later key contains url, so it is
+not shuffled again; AQE broadcasts the link side while it is small, and
+otherwise plans sort-merge joins that shuffle only the link side.
 """
 
 from __future__ import annotations

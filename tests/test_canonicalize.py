@@ -264,3 +264,24 @@ def test_same_as_edges_via_entity(spark):
     edges = canon.same_as_edges(surfaces, s2e)
     got = {(r["a"], r["b"]) for r in edges.collect()}
     assert ("bytown", "ottawa") in got
+
+
+def test_resolve_unlinked_majority_then_smallest_id(spark):
+    """An unlinked surface takes its component's majority entity, a count
+    tie going to the smallest id; linked surfaces keep their own link and
+    a component with no link resolves nothing."""
+    comps = spark.createDataFrame(
+        [("a", "a"), ("b", "a"), ("c", "a"), ("d", "a"),
+         ("h", "h"), ("i", "h"), ("j", "h"), ("k", "h"), ("g", "g")],
+        "node string, component string",
+    )
+    s2e = spark.createDataFrame(
+        [("a", "Q9"), ("b", "Q3"), ("h", "Q8"), ("i", "Q8"), ("j", "Q1")],
+        "norm_surface string, entity_id string",
+    )
+    got = canon.resolve_unlinked_surfaces(comps, s2e)
+    assert got.columns == ["norm_surface", "entity_id"]
+    assert sorted(map(tuple, got.collect())) == [
+        ("a", "Q9"), ("b", "Q3"), ("c", "Q3"), ("d", "Q3"),
+        ("h", "Q8"), ("i", "Q8"), ("j", "Q1"), ("k", "Q8"),
+    ]

@@ -277,14 +277,12 @@ def test_active_runs_numpy_matches_reference_impl():
         assert _active_runs(t) == _active_runs_re(t), repr(t[:80])
 
 
-def test_link_top1_aggregate_matches_window_reference(spark):
-    """r7 min-of-struct argmax in link_mentions == the row_number window it
-    replaced (row-identical), and the plan has no Window node left."""
+def test_link_top1_pick_matches_window_reference(spark):
+    """The per-row array_min pick over each distinct surface's candidates
+    == a row_number window over every (occurrence, alias) candidate,
+    row for row, exact and fuzzy arms alike; and the plan has no Window
+    and no sort-merge join of occurrence rows."""
     from pyspark.sql import Window
-
-    from kgspark import fixtures, link as linkmod
-    from kgspark.mentions import annotate_pages, explode_mentions
-    from kgspark.pipeline import gazetteer_from_alias_index
 
     aliases = fixtures.gen_alias_index(spark)
     gaz, regions = gazetteer_from_alias_index(aliases)
@@ -294,55 +292,61 @@ def test_link_top1_aggregate_matches_window_reference(spark):
     ).localCheckpoint()
     links = linkmod.link_mentions(mentions, aliases)
 
-    plan = links._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, "top-1 must stay an aggregate, not a window"
-
     got = sorted(map(tuple, links.collect()))
+    plan = links._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, "top-1 must stay a per-row pick, not a window"
+    assert "SortMergeJoin" not in plan
 
-    # reference: the window form, rebuilt from the same candidate set by
-    # re-running the aggregate-free part of link_mentions
-    m = mentions.withColumn(
+    # reference: every alias is a candidate of every occurrence; exact
+    # means equal normalized forms, and a surface with no exact alias
+    # takes the aliases within LEV_MAX that share a 2-gram with it
+    occ = mentions.select("url", "surface", "ctx_regions").distinct().withColumn(
         "norm_surface", linkmod.normalize_surface(F.col("surface"))
     )
-    al = linkmod.build_alias_table(aliases)
-    exact = (
-        m.join(F.broadcast(al), m.norm_surface == al.norm_alias, "inner")
-        .withColumn("name_sim", F.lit(1.0))
-        .withColumn("match_kind", F.lit("exact"))
+    pairs = occ.crossJoin(linkmod.build_alias_table(aliases)).withColumn(
+        "lev", F.levenshtein("norm_surface", "norm_alias")
     )
-    # fixture surfaces that miss exact all go through the fuzzy arm of the
-    # production path; easiest faithful reference is to reuse link_mentions
-    # up to scoring via its own internals — instead compare only the exact
-    # arm's top-1 agreement plus global row count vs production:
-    w = Window.partitionBy("url", "surface").orderBy(
-        F.desc("score"), F.desc("name_sim"), F.asc("entity_id")
+    per_pair = Window.partitionBy("url", "surface")
+    blocked = F.arrays_overlap(
+        linkmod.char_ngrams("norm_surface", 2), linkmod.char_ngrams("norm_alias", 2)
     )
-    cols = [
-        "url", "surface", "norm_surface", "ctx_regions", "entity_id",
-        "canonical_name", "entity_type", "admin_region", "name_sim",
-        "match_kind",
-    ]
-    cand = exact.select(*cols)
-    cand = cand.withColumn(
-        "ctx_score",
-        F.when(
-            F.array_contains(F.col("ctx_regions"), F.col("admin_region")), 1.0
-        ).otherwise(0.0),
-    ).withColumn(
-        "prior",
-        F.when(F.col("match_kind") == "exact", 1.0).otherwise(F.col("name_sim")),
-    ).withColumn(
-        "score",
-        F.round(
-            0.5 * F.col("name_sim") + 0.3 * F.col("ctx_score") + 0.2 * F.col("prior"),
-            6,
-        ),
+    cand = (
+        pairs.withColumn("has_exact", F.max((F.col("lev") == 0).cast("int")).over(per_pair))
+        .where(
+            (F.col("lev") == 0)
+            | ((F.col("has_exact") == 0) & (F.col("lev") <= linkmod.LEV_MAX) & blocked)
+        )
+        .withColumn("match_kind", F.when(F.col("lev") == 0, "exact").otherwise("fuzzy"))
+        .withColumn(
+            "name_sim",
+            F.when(F.col("lev") == 0, 1.0).otherwise(
+                F.round(
+                    1.0 - F.col("lev")
+                    / F.greatest(F.length("norm_surface"), F.length("norm_alias")),
+                    6,
+                )
+            ),
+        )
+        .withColumn(
+            "ctx_score",
+            F.when(
+                F.array_contains(F.col("ctx_regions"), F.col("admin_region")), 1.0
+            ).otherwise(0.0),
+        )
+        .withColumn(
+            "score",
+            F.round(
+                0.5 * F.col("name_sim")
+                + 0.3 * F.col("ctx_score")
+                + 0.2 * F.when(F.col("match_kind") == "exact", 1.0).otherwise(F.col("name_sim")),
+                6,
+            ),
+        )
     )
-    ref_exact = (
-        cand.drop("prior", "ctx_regions")
-        .withColumn("rn", F.row_number().over(w))
+    w = per_pair.orderBy(F.desc("score"), F.desc("name_sim"), F.asc("entity_id"))
+    ref = (
+        cand.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .drop("rn")
         .withColumn(
             "confidence",
             F.when(
@@ -351,7 +355,30 @@ def test_link_top1_aggregate_matches_window_reference(spark):
                 "high",
             ).otherwise("ambiguous"),
         )
+        .select(*links.columns)
     )
-    ref_rows = sorted(map(tuple, ref_exact.collect()))
-    got_exact = [t for t in got if t[8] == "exact"]
-    assert got_exact == ref_rows
+    want = sorted(map(tuple, ref.collect()))
+    assert {t[8] for t in want} == {"exact", "fuzzy"}
+    assert got == want
+
+
+def test_surface_to_entity_map_majority_then_smallest_id(spark):
+    """Majority of high-confidence links wins; a count tie goes to the
+    smallest entity_id; ambiguous links do not vote."""
+    rows = [
+        ("ottawa", "Q9", "high"), ("ottawa", "Q2", "high"),
+        ("ottawa", "Q5", "ambiguous"), ("ottawa", "Q5", "ambiguous"),
+        ("bytown", "Q7", "high"), ("bytown", "Q7", "high"), ("bytown", "Q1", "high"),
+        ("zzz", "Q3", "ambiguous"),
+    ]
+    links = spark.createDataFrame(
+        [(s, e, f"name {e}", "place", c) for s, e, c in rows],
+        "norm_surface string, entity_id string, canonical_name string, "
+        "entity_type string, confidence string",
+    )
+    got = linkmod.surface_to_entity_map(links)
+    assert got.columns == ["norm_surface", "entity_id", "canonical_name", "entity_type"]
+    assert sorted(map(tuple, got.collect())) == [
+        ("bytown", "Q7", "name Q7", "place"),
+        ("ottawa", "Q2", "name Q2", "place"),
+    ]

@@ -54,6 +54,23 @@ def test_partial_resume(tmp_path, spark):
     assert second["triples"].count() == n1
 
 
+def _group_jobs(sc, group: str) -> int:
+    """Jobs run under `group` so far. A sentinel job under a group of its
+    own marks the end: the listener bus reports job starts in order, so
+    once the sentinel is seen every earlier job is seen too."""
+    sentinel = f"{group}-sentinel"
+    sc.setJobGroup(sentinel, sentinel)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for _ in range(200):
+        if sc.statusTracker().getJobIdsForGroup(sentinel):
+            break
+        time.sleep(0.05)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_run_pipeline_call_builds_nothing(tmp_path, spark):
     """The call only declares the run: with or without a checkpoint dir it
     runs no Spark job (not even the gazetteer collect) and writes no stage."""
@@ -68,18 +85,9 @@ def test_run_pipeline_call_builds_nothing(tmp_path, spark):
     try:
         run_pipeline(spark, pages, aliases)
         run_pipeline(spark, pages, aliases, checkpoint_dir=str(ckdir))
-        # sentinel: the listener bus reports job starts in order, so once
-        # this job is seen every job the calls ran is seen too
-        sc.parallelize([0], 1).count()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = []
-    for _ in range(200):
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        if jobs:
-            break
-        time.sleep(0.05)
-    assert len(jobs) == 1, jobs
+    assert _group_jobs(sc, group) == 0
     assert not list(ckdir.glob(f"*/{MARKER}"))
 
 
@@ -155,3 +163,40 @@ def test_gen_pages_with_text_false_identical_pages(spark):
         assert "text" not in slim
         for k in ("url", "warc_ts", "html", "lang", "_mentions", "_triples"):
             assert full[k] == slim[k], k
+
+
+# Jobs to read the triples of an un-checkpointed run over one pages file.
+# Each surface-keyed step (link candidates, the surface map, the resolve
+# vote) runs once per distinct surface; keyed per occurrence, the same
+# read took 42 jobs.
+JOB_BUDGET = 25
+
+
+def test_single_file_run_job_budget(tmp_path, spark):
+    """A pages input in one Parquet file of one row group (a crawl table's
+    layout) is spread before annotate and reads its triples within
+    JOB_BUDGET jobs, with the triples of the same pages generated."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    recs = [fixtures.page_record(i, with_text=False) for i in range(N_PAGES)]
+    pq.write_table(
+        pa.table({k: [r[k] for r in recs] for k in ("url", "warc_ts", "html", "lang")}),
+        tmp_path / "pages.parquet",
+        row_group_size=len(recs),
+    )
+    pages = spark.read.parquet(str(tmp_path / "pages.parquet"))
+    aliases = fixtures.gen_alias_index(spark)
+    sc = spark.sparkContext
+    group = "test-single-file-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        triples = run_pipeline(spark, pages, aliases)["triples"].persist()
+        triples.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = _group_jobs(sc, group)
+    generated = run_pipeline(spark, fixtures.gen_pages(spark, N_PAGES), aliases)["triples"]
+    assert triples.exceptAll(generated).count() == 0 and generated.exceptAll(triples).count() == 0
+    triples.unpersist()
+    assert jobs <= JOB_BUDGET, jobs

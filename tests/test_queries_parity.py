@@ -24,6 +24,15 @@ def test_q1_lookup(graph):
     assert len(rows) == 1 and rows[0]["entity_id"] == "Q2"
 
 
+def test_q2_timeline_matches_python(graph):
+    edges = graph["edges"].collect()
+    want = sorted(tuple(r) for r in edges if "Q2" in (r["subj"], r["obj"]))
+    rows = queries.q2_entity_timeline(graph["edges"], "Q2").collect()
+    assert rows and sorted(tuple(r) for r in rows) == want
+    keys = [(r["pred"], r["src_url"]) for r in rows]
+    assert keys == sorted(keys)
+
+
 def test_q3_pred_census(graph):
     preds = {r["pred"] for r in queries.q3_count_by_pred(graph["edges"]).collect()}
     assert {"mentions", "born_in", "governed", "signed", "located_in",
@@ -51,6 +60,26 @@ def test_q7_region_rollup(graph):
     rows = queries.q7_aggregate_by_region(graph["edges"], graph["entities"]).collect()
     regions = {r["admin_region"] for r in rows}
     assert "Ontario" in regions and "Canada" in regions
+
+
+def test_q8_facts_per_source_matches_python(graph):
+    from collections import Counter
+
+    n = Counter(r["src_url"] for r in graph["edges"].collect() if r["pred"] != "mentions")
+    want = sorted(n.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
+    rows = queries.q8_provenance_per_source(graph["edges"]).collect()
+    assert len(want) == 10
+    assert [(r["src_url"], r["n_facts"]) for r in rows] == want
+
+
+def test_q9_pred_matrix_matches_python(graph):
+    from collections import Counter
+
+    etype = {r["entity_id"]: r["entity_type"] for r in graph["entities"].collect()}
+    want = Counter((r["pred"], etype.get(r["subj"])) for r in graph["edges"].collect())
+    rows = queries.q9_pred_matrix(graph["edges"], graph["entities"]).collect()
+    assert {(r["pred"], r["entity_type"]): r["n"] for r in rows} == dict(want)
+    assert len(rows) == len(want)
 
 
 def test_q10_window_argmax(graph):

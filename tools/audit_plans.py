@@ -82,6 +82,15 @@ CHECKS = {
         (r"(?s)\A(?!.*(CartesianProduct|BroadcastNestedLoopJoin))", "no cartesian wedge join"),
         (r"HashAggregate", "per-node counts partially aggregated"),
     ],
+    "kg_pipeline_link_triples": [
+        # each distinct surface's candidates are built once and broadcast
+        # back to the (url, surface) rows; occurrence rows are never
+        # shuffled into a join, and the top-1 is a narrow array pick
+        (r"\(\d+\) BroadcastExchange\nInput \[2\]: \[surface#\d+, cands#\d+\]",
+         "candidate arrays broadcast to the occurrence rows"),
+        (r"(?s)\A(?!.*SortMergeJoin)", "no sort-merge join of occurrence rows"),
+        (r"(?s)\A(?!.*Window)", "top-1 picked per row, not by a window"),
+    ],
     "ann_ivf_topk": [
         # the centroid set and the probe table must ride broadcasts — an
         # IVF whose assignment shuffles the corpus against K rows is wrong
