@@ -598,7 +598,7 @@ def _with_twins(docs: DataFrame) -> DataFrame:
 )
 def dedup_ngram_jaccard(spark, sf_dir):
     corpus = _with_twins(_t(spark, sf_dir, "documents"))
-    return dedup.ngram_jaccard_pairs(corpus, shingle_n=4, threshold=0.5, max_df=20)
+    return dedup.ngram_jaccard_pairs(corpus, shingle_n=4, threshold=0.5)
 
 
 # MinHash CTE chain (corpus -> candidate pairs), shared by the pair query
@@ -647,7 +647,7 @@ _MINHASH_CTES = """
 )
 def dedup_minhash_lsh(spark, sf_dir):
     corpus = _with_twins(_t(spark, sf_dir, "documents"))
-    return dedup.minhash_lsh_pairs(corpus, n_hashes=8, n_bands=4, shingle_n=3)
+    return dedup.minhash_lsh_pairs(corpus, shingle_n=3)
 
 
 def dedup_minhash_lsh_fast(spark, sf_dir):
@@ -656,9 +656,7 @@ def dedup_minhash_lsh_fast(spark, sf_dir):
     the md5 twin `dedup_minhash_lsh` is oracle-green with the identical
     banding plan, and pytest asserts the fast variant recovers the same
     exact-duplicate pairs on the fixture corpus."""
-    from .ops import dedup as _dedup
-
-    return _dedup.minhash_lsh_pairs_fast(spread(_t(spark, sf_dir, "documents")))
+    return dedup.minhash_lsh_pairs_fast(spread(_t(spark, sf_dir, "documents")))
 
 
 QUERIES["dedup_minhash_lsh_fast"] = dedup_minhash_lsh_fast
@@ -694,7 +692,7 @@ def dedup_cluster_keep(spark, sf_dir):
     flags are all hash-checked; singleton docs ride through as their own
     kept cluster."""
     corpus = _with_twins(_t(spark, sf_dir, "documents"))
-    out = dedup.near_dup_clusters(corpus, n_hashes=8, n_bands=4, shingle_n=3)
+    out = dedup.near_dup_clusters(corpus)
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("cluster"),
@@ -780,9 +778,7 @@ def corpus_span_dedup(spark, sf_dir):
 )
 def dedup_simhash_hamming(spark, sf_dir):
     """Hamming<=3 simhash retrieval via exact-recall nibble banding."""
-    return dedup.simhash_hamming_pairs(
-        spread(_t(spark, sf_dir, "documents")), k=3, n_bands=4
-    )
+    return dedup.simhash_hamming_pairs(spread(_t(spark, sf_dir, "documents")))
 
 
 @q(
@@ -970,7 +966,7 @@ def asof_join_events(spark, sf_dir):
     right = ev.where(F.col("event_type") == "error").select(
         "user_id", "ts", "value"
     )
-    out = asof_join(left, right, by="user_id", ts_col="ts")
+    out = asof_join(left, right, by="user_id")
     return out.select(
         "event_id", "user_id", "ts",
         F.floor(F.col("asof_value") * 100).cast("long").alias("asof_value_c2"),
@@ -1233,8 +1229,8 @@ def bloom_incremental_dedup(spark, sf_dir):
             )
         )
     )
-    bloom = bloom_build(hist, "key", k=3)
-    return bloom_might_contain(new, bloom, "key", k=3).select("doc_id", "maybe_seen")
+    bloom = bloom_build(hist, "key")
+    return bloom_might_contain(new, bloom, "key").select("doc_id", "maybe_seen")
 
 
 @q(
@@ -1297,7 +1293,7 @@ def stats_outliers(spark, sf_dir):
         .cast("long")
         .alias("x"),
     )
-    return outlier_zscore(vals, "source", "x", k=3).select("doc_id", "source", "x")
+    return outlier_zscore(vals, "source", "x").select("doc_id", "source", "x")
 
 
 def _pagerank_oracle_sql(n_iter: int = 5) -> str:
@@ -1803,7 +1799,7 @@ def ann_ivf_topk(spark, sf_dir):
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return simsearch.ivf_topk(emb, queries, cents, k=5, nprobe=2)
+    return simsearch.ivf_topk(emb, queries, cents, nprobe=2)
 
 
 @q(
@@ -1928,7 +1924,7 @@ def spatial_borders_q(spark, sf_dir):
     dedup via id ordering."""
     from . import spatial
 
-    return spatial.spatial_borders(_rects(spark, sf_dir, "a"), cell_size=16.0)
+    return spatial.spatial_borders(_rects(spark, sf_dir, "a"))
 
 
 @q(
@@ -2097,7 +2093,6 @@ def spatial_overlap_concave_q(spark, sf_dir):
     return spatial.spatial_overlap_join_wkb(
         _wkb_fixture(xy, "l"),
         _wkb_fixture(xy, "multi"),
-        cell_size=16.0,
         iou_threshold_e6=100000,
         area_round=6,
     )
@@ -2148,7 +2143,6 @@ def spatial_overlap_holes_q(spark, sf_dir):
     return spatial.spatial_overlap_join_wkb(
         _wkb_fixture(xy, "donut_a"),
         _wkb_fixture(xy, "donut_b"),
-        cell_size=16.0,
         iou_threshold_e6=100000,
         area_round=6,
     )

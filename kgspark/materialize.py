@@ -36,7 +36,6 @@ def build_entities(alias_index: DataFrame, links: DataFrame) -> DataFrame:
     mention_counts = salted_count(
         links.where(F.col("confidence") == "high"),
         ["entity_id"],
-        n_salts=16,
         identity_cols=["url", "surface"],
         count_col="n_mentions",
     )

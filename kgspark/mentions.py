@@ -313,7 +313,7 @@ def annotate_pages(
 
     ``from_html=True`` fuses text extraction into this same pass: the page
     html is decoded with the frozen extractor (extract.extract_text_bytes —
-    identical bytes to the ``extracted`` stage) and scanned without the text
+    identical bytes to extract.with_extracted_text) and scanned without the text
     ever crossing the JVM<->Python boundary in between. The pipeline always
     annotates this way (guide §4.1: one opaque pass instead of two chained
     Python evals); text mode serves callers that already hold page text."""

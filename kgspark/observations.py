@@ -40,8 +40,10 @@ UNIT_RULES = [
 ]
 
 
-def infer_unit(var_col: str = "variable"):
-    c = F.lower(F.col(var_col))
+def infer_unit():
+    """Unit of the `variable` column's measure, by the first UNIT_RULES
+    keyword it contains."""
+    c = F.lower(F.col("variable"))
     expr = F.lit("unknown")
     for kw, unit in reversed(UNIT_RULES):
         expr = F.when(c.contains(kw), F.lit(unit)).otherwise(expr)
@@ -94,11 +96,10 @@ def melt_observations(
     return out
 
 
-def observation_ids(obs: DataFrame, id_col: str, snapshot_col: str | None = None) -> DataFrame:
-    """Deterministic measurement ids MEAS_{id}_{snapshot}_{variable}
-    (reference build_census_observations_v2.py:147)."""
-    parts = [F.lit("MEAS"), F.col(id_col).cast("string")]
-    if snapshot_col:
-        parts.append(F.col(snapshot_col).cast("string"))
-    parts.append(F.col("variable"))
-    return obs.withColumn("measurement_id", F.concat_ws("_", *parts))
+def observation_ids(obs: DataFrame, id_col: str) -> DataFrame:
+    """Deterministic measurement ids MEAS_{id}_{variable} (reference
+    build_census_observations_v2.py:147, without its snapshot part)."""
+    return obs.withColumn(
+        "measurement_id",
+        F.concat_ws("_", F.lit("MEAS"), F.col(id_col).cast("string"), F.col("variable")),
+    )

@@ -35,19 +35,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import word_shingles, word_tokens
+from .dedup import word_shingles_from, word_tokens
 from .webtext import _e6, _max_run, _ngrams
 
+# c4_filter gates, in the order that defines drop_reason
+C4_MIN_TOKENS = 20
+C4_LANG = "en"
+C4_MAX_DUP_2GRAM_E6 = 100000
+C4_MAX_TOKEN_RUN = 5
+C4_MIN_QUALITY_E6 = 600000
 
-def decontaminate(
-    train: DataFrame,
-    evalset: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-) -> DataFrame:
+
+def _ngram_sets(docs: DataFrame, n: int, *keep: str) -> DataFrame:
+    """(*keep, ngrams): each doc's distinct word n-grams, tokenized in a
+    projection of its own first (see dedup.word_shingles_from)."""
+    return docs.select(*keep, word_tokens("text").alias("_toks")).select(
+        *keep, word_shingles_from(F.col("_toks"), n).alias("ngrams")
+    )
+
+
+def decontaminate(train: DataFrame, evalset: DataFrame, n: int = 5) -> DataFrame:
     """Flag training docs that share >=1 distinct word n-gram with the
-    eval set. Returns (id, n_hits, n_ngrams, hit_ratio_e6) for
+    eval set. Returns (doc_id, n_hits, n_ngrams, hit_ratio_e6) for
     contaminated docs only; n_hits counts the doc's DISTINCT n-grams seen
     in the eval set, n_ngrams its distinct n-gram total.
 
@@ -58,30 +67,20 @@ def decontaminate(
     so the only shuffle is the groupBy over the (rare) hit subset — the
     corpus-wide n-gram stream is never shuffled, neither on the n-gram
     key nor on doc_id, and there is no corpus-sized join-back."""
-    from .dedup import word_shingles_from
-
-    ev = (
-        evalset.select(F.explode(word_shingles(text_col, n)).alias("ngram"))
-        .distinct()
-    )
-    # word_shingles is array_distinct per doc, so the explode is already
+    ev = _ngram_sets(evalset, n).select(F.explode("ngrams").alias("ngram")).distinct()
+    # the shingles are array_distinct per doc, so the explode is already
     # one row per (doc, distinct n-gram) — no second distinct needed.
-    # Two-step tokenize->shingle (r7): see dedup.word_shingles_from.
-    tr = train.select(
-        F.col(id_col), word_tokens(text_col).alias("_toks")
-    ).select(
-        F.col(id_col), word_shingles_from(F.col("_toks"), n).alias("ngrams")
-    ).select(
-        id_col,
+    tr = _ngram_sets(train, n, "doc_id").select(
+        "doc_id",
         F.size("ngrams").cast("long").alias("n_ngrams"),
         F.explode("ngrams").alias("ngram"),
     )
     return (
         tr.join(F.broadcast(ev), "ngram")
-        .groupBy(id_col, "n_ngrams")
+        .groupBy("doc_id", "n_ngrams")
         .agg(F.count(F.lit(1)).alias("n_hits"))
         .select(
-            id_col,
+            "doc_id",
             "n_hits",
             "n_ngrams",
             _e6(F.col("n_hits"), F.col("n_ngrams")).alias("hit_ratio_e6"),
@@ -89,16 +88,14 @@ def decontaminate(
     )
 
 
-def bigram_lm_score(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def bigram_lm_score(docs: DataFrame) -> DataFrame:
     """Integer bigram-LM fluency score: for every bigram OCCURRENCE
     (w1 w2) in a doc, add (c(w1 w2) * 1e6) div c(w1) — exact int64
     integral division — where the counts are corpus-wide occurrence
     counts (the train-then-score self-pass of a CCNet-style perplexity
     filter, with integral conditional frequencies instead of log-space
     floats so the result is order-independent and engine-portable).
-    Returns (id, n_bigrams, lm_score_e6) where
+    Returns (doc_id, n_bigrams, lm_score_e6) where
     lm_score_e6 is the SUM of per-bigram e6 conditionals; docs with fewer
     than 2 tokens are absent.
 
@@ -116,9 +113,8 @@ def bigram_lm_score(
     join on bigram, join on w1, then groupBy). Plan shape pinned by
     tests/test_corpus.py: exactly one join touches the stream, and it is
     the outermost."""
-    toks = word_tokens(text_col)
-    t = docs.select(F.col(id_col), toks.alias("_toks"))
-    bg = t.select(F.col(id_col), F.explode(_ngrams(F.col("_toks"), 2)).alias("bigram"))
+    t = docs.select("doc_id", word_tokens("text").alias("_toks"))
+    bg = t.select("doc_id", F.explode(_ngrams(F.col("_toks"), 2)).alias("bigram"))
     uni = (
         t.select(F.explode(F.col("_toks")).alias("w1"))
         .groupBy("w1")
@@ -136,7 +132,7 @@ def bigram_lm_score(
     )
     return (
         bg.join(lookup, "bigram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.sum("score_e6").alias("lm_score_e6"),
@@ -144,24 +140,15 @@ def bigram_lm_score(
     )
 
 
-def c4_filter(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 20,
-    min_quality_e6: int = 600000,
-    max_dup_2gram_e6: int = 100000,
-    max_token_run: int = 5,
-    lang: str = "en",
-) -> DataFrame:
+def c4_filter(docs: DataFrame) -> DataFrame:
     """C4/Gopher-style keep-drop gate composing the curation signals in
     ONE map-only pass (no joins between signal frames — every signal is a
     column expression over the same scan, the shape the separate ops
     document individually). Gates, applied in a fixed order that defines
-    `drop_reason` (first failing gate wins): length >= min_tokens ->
-    language == lang -> dup-2-gram fraction <= max_dup_2gram_e6 ->
-    same-token run <= max_token_run -> quality_e6 >= min_quality_e6.
-    Returns (id, n_tokens, pred_lang, dup_2gram_frac_e6, quality_e6,
+    `drop_reason` (first failing gate wins): length >= C4_MIN_TOKENS ->
+    language == C4_LANG -> dup-2-gram fraction <= C4_MAX_DUP_2GRAM_E6 ->
+    same-token run <= C4_MAX_TOKEN_RUN -> quality_e6 >= C4_MIN_QUALITY_E6.
+    Returns (doc_id, n_tokens, pred_lang, dup_2gram_frac_e6, quality_e6,
     kept, drop_reason).
 
     The quality score is textstats.quality_blend, the expression
@@ -172,9 +159,9 @@ def c4_filter(
     signals."""
     from .textstats import lang_argmax, quality_blend
 
-    toks = word_tokens(text_col)
+    toks = word_tokens("text")
     n_tokens = F.size(toks)
-    _, _, _, quality_e6 = quality_blend(text_col, toks)
+    _, _, _, quality_e6 = quality_blend(toks)
     # repetition_stats formulas (multiply-first e6, matching that oracle)
     grams = F.array_sort(_ngrams(toks, 2))
     total = F.greatest(F.size(grams), F.lit(1))
@@ -183,15 +170,15 @@ def c4_filter(
     pred, _ = lang_argmax(toks)
 
     reason = (
-        F.when(n_tokens < min_tokens, F.lit("too_short"))
-        .when(pred != lang, F.lit("lang"))
-        .when(dup2_e6 > max_dup_2gram_e6, F.lit("repetitive"))
-        .when(run > max_token_run, F.lit("token_run"))
-        .when(quality_e6 < min_quality_e6, F.lit("low_quality"))
+        F.when(n_tokens < C4_MIN_TOKENS, F.lit("too_short"))
+        .when(pred != C4_LANG, F.lit("lang"))
+        .when(dup2_e6 > C4_MAX_DUP_2GRAM_E6, F.lit("repetitive"))
+        .when(run > C4_MAX_TOKEN_RUN, F.lit("token_run"))
+        .when(quality_e6 < C4_MIN_QUALITY_E6, F.lit("low_quality"))
         .otherwise(F.lit("kept"))
     )
     return docs.select(
-        F.col(id_col),
+        "doc_id",
         n_tokens.cast("long").alias("n_tokens"),
         pred.alias("pred_lang"),
         dup2_e6.alias("dup_2gram_frac_e6"),
@@ -201,12 +188,7 @@ def c4_filter(
     )
 
 
-def mixture_stats(
-    docs: DataFrame,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def mixture_stats(docs: DataFrame) -> DataFrame:
     """Per-source mixing table: (source, n_docs, n_tokens, weight_e6)
     where weight_e6 = floor(n_tokens * 1e6 / total_tokens). The corpus
     collapses map-side to one row per source; the grand total is computed
@@ -216,9 +198,9 @@ def mixture_stats(
     per source (int64 max 9.22e18) — past that, compute weights in
     DECIMAL(38,0). Documented here because weight math is the first
     thing to overflow in mixture tables."""
-    per_src = docs.groupBy(F.col(source_col).alias("source")).agg(
+    per_src = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(word_tokens(text_col))).alias("n_tokens"),
+        F.sum(F.size(word_tokens("text"))).alias("n_tokens"),
     )
     total = per_src.agg(F.sum("n_tokens").alias("total_tokens"))
     return per_src.crossJoin(F.broadcast(total)).select(

@@ -29,6 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Every operator reads a documents table of (doc_id, text).
+N_HASHES = 8  # MinHash families: two md5 calls per shingle give 8 slices
+N_BANDS = 4  # MinHash-LSH bands of N_HASHES // N_BANDS minhashes each
+SHINGLE_N = 3  # MinHash word n-gram width (the md5 signature's default)
+MAX_DF = 20  # n-gram Jaccard blocks only on shingles in <= MAX_DF docs
+SIMHASH_BANDS = 4  # simhash nibble bands
+SIMHASH_K = 3  # max Hamming distance; < SIMHASH_BANDS gives exact recall
+
 # --- shared shingling -------------------------------------------------------
 
 
@@ -36,28 +44,14 @@ def word_tokens(col: str):
     return F.split(F.lower(F.col(col)), r"\s+")
 
 
-def word_shingles(col: str, n: int = 5):
-    """Distinct word n-gram shingles as strings (space-joined).
-
-    NOTE (r7): prefer the two-step ``word_tokens`` projection +
-    ``word_shingles_from`` at call sites — inlined like this, Catalyst
-    re-evaluates the split() subtree for every transform element
-    (measured ~2x on the shingle build over the bench corpus)."""
-    toks = word_tokens(col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-        )
-    )
-
-
 def word_shingles_from(tokens_col, n: int = 5):
-    """word_shingles, but over a pre-split token array COLUMN: the same
-    expression tree with the split factored into its own projection, so it
+    """Distinct word n-gram shingles as strings (space-joined), over a
+    pre-split token array COLUMN: project `word_tokens` first, so the split
     is evaluated once per row (CollapseProject keeps the boundary because
-    the token column is referenced more than once). Output identical to
-    word_shingles by construction (shared lambda shape; pinned by test)."""
+    the token column is referenced more than once). Built inline over the
+    split expression instead, Catalyst re-evaluates the split() subtree for
+    every transform element (measured ~2x on the shingle build over the
+    bench corpus)."""
     return F.array_distinct(
         F.transform(
             F.sequence(F.lit(0), F.greatest(F.size(tokens_col) - n, F.lit(0))),
@@ -69,14 +63,14 @@ def word_shingles_from(tokens_col, n: int = 5):
 # --- exact dedup -------------------------------------------------------------
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct text with the
     canonical (min) id and the duplicate count."""
     return (
-        docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
+        docs.select("doc_id", F.md5("text").alias("text_hash"))
         .groupBy("text_hash")
         .agg(
-            F.min(id_col).alias("canonical_id"),
+            F.min("doc_id").alias("canonical_id"),
             F.count(F.lit(1)).alias("n_dups"),
         )
     )
@@ -85,14 +79,12 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 # --- MinHash-LSH -------------------------------------------------------------
 
 
-def minhash_signature(docs: DataFrame, id_col: str, text_col: str,
-                      n_hashes: int = 8, shingle_n: int = 3) -> DataFrame:
-    """(id, mh0..mhK-1): engine-portable minhash, mh as BIGINT.
+def minhash_signature(docs: DataFrame, shingle_n: int) -> DataFrame:
+    """(doc_id, mh0..mh7): engine-portable minhash, mh as BIGINT.
 
     Hash families are 8-hex-char substrings of md5(shingle) (families 0-3)
     and md5(shingle || '#') (families 4-7): two md5 invocations per shingle
     instead of eight, identical in DuckDB (`substring(md5(s), k*8+1, 8)`).
-    Capped at 8 families; widen with more salts if a caller ever asks.
 
     The 8-hex-char slice is parsed to a uint32-valued BIGINT before the
     min-aggregation (r7, guide §2.3 narrower types): parsing is bijective
@@ -102,8 +94,6 @@ def minhash_signature(docs: DataFrame, id_col: str, text_col: str,
     HashAggregate with partial map-side combine, where min(STRING) forced
     a SortAggregate with a full Sort of the exploded shingle stream on
     both sides of the shuffle (measured in the r6 plan)."""
-    if n_hashes > 8:
-        raise ValueError("portable signature supports n_hashes <= 8")
     # Null AND blank/whitespace-only docs are dropped here, NOT at the
     # banding join: they have no shingles (similarity undefined; empty-doc
     # dedup belongs to exact_dedup), and left in they collapse to one
@@ -114,9 +104,9 @@ def minhash_signature(docs: DataFrame, id_col: str, text_col: str,
     # a predicate on mh0 through the projection chain and re-evaluates the
     # shingle/hash expressions for the filter (measured on sf0.1).
     sh = (
-        docs.where(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.col(id_col), word_tokens(text_col).alias("_toks"))
-        .select(F.col(id_col), word_shingles_from(F.col("_toks"), shingle_n).alias("sh"))
+        docs.where(F.length(F.trim("text")) > 0)
+        .select("doc_id", word_tokens("text").alias("_toks"))
+        .select("doc_id", word_shingles_from(F.col("_toks"), shingle_n).alias("sh"))
     )
     # explode -> hash once per shingle row -> 8 map-side-combined mins.
     # An array-transform formulation keeps everything shuffle-free but
@@ -125,8 +115,8 @@ def minhash_signature(docs: DataFrame, id_col: str, text_col: str,
     # than the naive form); as separate projection columns the two md5s are
     # computed once per shingle, and the min-agg shuffle carries only
     # 8 x 8-hex-char strings per doc.
-    hashed = sh.select(F.col(id_col), F.explode(F.col("sh")).alias("s")).select(
-        F.col(id_col),
+    hashed = sh.select("doc_id", F.explode(F.col("sh")).alias("s")).select(
+        "doc_id",
         F.md5(F.col("s")).alias("h1"),
         F.md5(F.concat(F.col("s"), F.lit("#"))).alias("h2"),
     )
@@ -139,14 +129,13 @@ def minhash_signature(docs: DataFrame, id_col: str, text_col: str,
             .alias(f"v{k}")
         )
 
-    numeric = hashed.select(F.col(id_col), *[slot(k) for k in range(n_hashes)])
-    return numeric.groupBy(id_col).agg(
-        *[F.min(f"v{k}").alias(f"mh{k}") for k in range(n_hashes)]
+    numeric = hashed.select("doc_id", *[slot(k) for k in range(N_HASHES)])
+    return numeric.groupBy("doc_id").agg(
+        *[F.min(f"v{k}").alias(f"mh{k}") for k in range(N_HASHES)]
     )
 
 
-def minhash_signature_fast(docs: DataFrame, id_col: str, text_col: str,
-                           n_hashes: int = 8, shingle_n: int = 3) -> DataFrame:
+def minhash_signature_fast(docs: DataFrame) -> DataFrame:
     """Engine-native minhash — the signature the ENGINE should use at crawl
     scale. Not oracle-portable (DuckDB has no xxhash64), so the md5 variant
     stays as the oracle-paired query; near-dup recall properties are
@@ -156,19 +145,19 @@ def minhash_signature_fast(docs: DataFrame, id_col: str, text_col: str,
     - shingles are never materialized as strings: each word n-gram is
       hashed directly from its token columns (xxhash64 is variadic), so no
       slice/array_join allocations;
-    - the k hash families reuse the one string-level hash: family k is
+    - the 8 hash families reuse the one string-level hash: family k is
       xxhash64(shingle_hash, k) over a LONG, not a re-hash of the string.
     min() is duplicate-insensitive, so skipping array_distinct changes
     nothing. Null-text docs have no shingles and therefore NO signature
     row (similarity is undefined for them; empty-doc dedup belongs to
-    exact_dedup).
+    exact_dedup). Shingles are word SHINGLE_N-grams.
     """
-    toks = word_tokens(text_col)
+    toks = word_tokens("text")
     # F.get (0-based) returns null past the end instead of raising under
     # ANSI mode (docs shorter than the shingle width hash a null-padded
     # window — deterministic on both variants' terms)
     def window_hash(i):
-        return F.xxhash64(*[F.get(F.col("toks"), i + j) for j in range(shingle_n)])
+        return F.xxhash64(*[F.get(F.col("toks"), i + j) for j in range(SHINGLE_N)])
 
     # Null AND blank-text docs are dropped BEFORE the signature is built:
     # xxhash64 over an all-null window is a seed constant (and
@@ -180,13 +169,13 @@ def minhash_signature_fast(docs: DataFrame, id_col: str, text_col: str,
     # a F.when guard around the transform: a conditional branch defeats
     # common-subexpression elimination and recomputes the tokenizer split
     # for every F.get reference in the window hash (measured 10x slower).
-    base = docs.where(F.length(F.trim(F.col(text_col))) > 0).select(
-        F.col(id_col), toks.alias("toks")
+    base = docs.where(F.length(F.trim("text")) > 0).select(
+        "doc_id", toks.alias("toks")
     ).select(
-        F.col(id_col),
+        "doc_id",
         F.transform(
             F.sequence(
-                F.lit(0), F.greatest(F.size(F.col("toks")) - shingle_n, F.lit(0))
+                F.lit(0), F.greatest(F.size(F.col("toks")) - SHINGLE_N, F.lit(0))
             ),
             window_hash,
         ).alias("hs"),
@@ -198,32 +187,31 @@ def minhash_signature_fast(docs: DataFrame, id_col: str, text_col: str,
             F.transform(F.col("hs"), lambda h: F.xxhash64(h, seed))
         ).alias(f"mh{k}")
 
-    return base.select(F.col(id_col), *[mh(k) for k in range(n_hashes)])
+    return base.select("doc_id", *[mh(k) for k in range(N_HASHES)])
 
 
-def _banded_pairs_from_signature(sig: DataFrame, id_col: str, n_hashes: int,
-                                 n_bands: int) -> DataFrame:
-    """(a < b) candidate pairs from any mh0..mhK-1 signature frame: band
+def _banded_pairs_from_signature(sig: DataFrame) -> DataFrame:
+    """(a < b) candidate pairs from an mh0..mh7 signature frame: band
     keys combine R minhashes, one equi-join on (band, band_key)."""
-    r = n_hashes // n_bands
+    r = N_HASHES // N_BANDS
     # Precondition: `sig` carries no null mh columns (both signature
     # builders drop null-text docs upstream — xxhash64 SKIPS null inputs,
     # so null signatures here would all collapse to the identical
     # seed-only band key and emit O(n^2) spurious pairs; and filtering
     # HERE is 9x slower, see minhash_signature).
     banded = sig.select(
-        F.col(id_col),
+        "doc_id",
         F.posexplode(
             F.array(
                 *[
                     F.xxhash64(*[F.col(f"mh{b * r + i}") for i in range(r)])
-                    for b in range(n_bands)
+                    for b in range(N_BANDS)
                 ]
             )
         ).alias("band", "band_key"),
     )
-    left = banded.select(F.col(id_col).alias("a"), "band", "band_key")
-    right = banded.select(F.col(id_col).alias("b"), "band", "band_key")
+    left = banded.select(F.col("doc_id").alias("a"), "band", "band_key")
+    right = banded.select(F.col("doc_id").alias("b"), "band", "band_key")
     return (
         left.join(right, ["band", "band_key"])
         .where(F.col("a") < F.col("b"))
@@ -232,8 +220,7 @@ def _banded_pairs_from_signature(sig: DataFrame, id_col: str, n_hashes: int,
     )
 
 
-def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                      n_hashes: int = 8, n_bands: int = 4, shingle_n: int = 3) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, shingle_n: int = SHINGLE_N) -> DataFrame:
     """Candidate near-dup pairs (a < b) via banded MinHash-LSH (portable
     md5 signature — same pairs as the DuckDB oracle's md5 band keys).
 
@@ -248,25 +235,25 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
     are bounded (band keys combine R minhashes), so collect_list stays
     small; the where(size > 1) drops the singleton buckets (the vast
     majority) before any pair is generated."""
-    sig = minhash_signature(docs, id_col, text_col, n_hashes, shingle_n)
-    r = n_hashes // n_bands
+    sig = minhash_signature(docs, shingle_n)
+    r = N_HASHES // N_BANDS
     # null-text docs already dropped inside minhash_signature (see there)
     banded = sig.select(
-        F.col(id_col),
+        "doc_id",
         F.posexplode(
             F.array(
                 *[
                     F.struct(
                         *[F.col(f"mh{b * r + i}").alias(f"k{i}") for i in range(r)]
                     )
-                    for b in range(n_bands)
+                    for b in range(N_BANDS)
                 ]
             )
         ).alias("band", "band_key"),
     )
     buckets = (
         banded.groupBy("band", "band_key")
-        .agg(F.collect_list(F.col(id_col)).alias("ids"))
+        .agg(F.collect_list("doc_id").alias("ids"))
         .where(F.size("ids") > 1)
     )
     return (
@@ -278,48 +265,44 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
     )
 
 
-def minhash_lsh_pairs_fast(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", n_hashes: int = 8,
-                           n_bands: int = 4, shingle_n: int = 3) -> DataFrame:
+def minhash_lsh_pairs_fast(docs: DataFrame) -> DataFrame:
     """Candidate near-dup pairs via the xxhash64 signature — the crawl-scale
     fast path (same banding plan, integer band keys, no string md5)."""
-    sig = minhash_signature_fast(docs, id_col, text_col, n_hashes, shingle_n)
-    return _banded_pairs_from_signature(sig, id_col, n_hashes, n_bands)
+    return _banded_pairs_from_signature(minhash_signature_fast(docs))
 
 
 # --- n-gram Jaccard ----------------------------------------------------------
 
 
-def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                        shingle_n: int = 5, threshold: float = 0.5,
-                        max_df: int = 20) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, shingle_n: int = 5,
+                        threshold: float = 0.5) -> DataFrame:
     """Near-dup pairs by exact word-shingle Jaccard >= threshold.
 
     Candidate generation: self-join on shared shingles whose document
-    frequency <= max_df (rare-shingle blocking — drops boilerplate shingles
+    frequency <= MAX_DF (rare-shingle blocking — drops boilerplate shingles
     that would otherwise explode the join quadratically)."""
-    sh = docs.select(F.col(id_col), word_tokens(text_col).alias("_toks")).select(
-        F.col(id_col), word_shingles_from(F.col("_toks"), shingle_n).alias("sh")
+    sh = docs.select("doc_id", word_tokens("text").alias("_toks")).select(
+        "doc_id", word_shingles_from(F.col("_toks"), shingle_n).alias("sh")
     )
-    sizes = sh.select(F.col(id_col), F.size("sh").alias("n_sh"))
-    exploded = sh.select(F.col(id_col), F.explode("sh").alias("shingle"))
+    sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
+    exploded = sh.select("doc_id", F.explode("sh").alias("shingle"))
     rare = (
         exploded.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= max_df)
+        .where(F.col("df") <= MAX_DF)
         .select("shingle")
     )
     blocked = exploded.join(rare, "shingle")
-    l = blocked.select(F.col(id_col).alias("a"), "shingle")
-    rgt = blocked.select(F.col(id_col).alias("b"), "shingle")
+    l = blocked.select(F.col("doc_id").alias("a"), "shingle")
+    rgt = blocked.select(F.col("doc_id").alias("b"), "shingle")
     shared = (
         l.join(rgt, "shingle")
         .where(F.col("a") < F.col("b"))
         .groupBy("a", "b")
         .agg(F.countDistinct("shingle").alias("n_shared"))
     )
-    sz_a = sizes.select(F.col(id_col).alias("a"), F.col("n_sh").alias("n_a"))
-    sz_b = sizes.select(F.col(id_col).alias("b"), F.col("n_sh").alias("n_b"))
+    sz_a = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("n_a"))
+    sz_b = sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("n_b"))
     return (
         shared.join(sz_a, "a")
         .join(sz_b, "b")
@@ -337,8 +320,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str =
 # --- SimHash ------------------------------------------------------------------
 
 
-def simhash_bits(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                 n_bits: int = 16) -> DataFrame:
+def simhash_bits(docs: DataFrame, n_bits: int = 16) -> DataFrame:
     """n-bit SimHash over word tokens, engine-portable (n_bits <= 60).
 
     Bit j of token t = bit j of the first ceil(n/4) hex chars of md5(t);
@@ -350,7 +332,7 @@ def simhash_bits(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
         raise ValueError("n_bits <= 60 (positive BIGINT range in both engines)")
     hex_chars = (n_bits + 3) // 4
     toks = docs.select(
-        F.col(id_col), F.explode(F.array_distinct(word_tokens(text_col))).alias("tok")
+        "doc_id", F.explode(F.array_distinct(word_tokens("text"))).alias("tok")
     ).where(F.col("tok") != "")
     toks = toks.withColumn(
         "h", F.conv(F.substring(F.md5("tok"), 1, hex_chars), 16, 10).cast("long")
@@ -361,56 +343,52 @@ def simhash_bits(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
         ).alias(f"s{j}")
         for j in range(n_bits)
     ]
-    agg = toks.groupBy(id_col).agg(*bit_cols)
+    agg = toks.groupBy("doc_id").agg(*bit_cols)
     sig = None
     for j in range(n_bits):
         term = F.when(F.col(f"s{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
         sig = term if sig is None else sig + term
-    return agg.select(F.col(id_col), sig.cast("long").alias("simhash"))
+    return agg.select("doc_id", sig.cast("long").alias("simhash"))
 
 
-def simhash_hamming_pairs(docs: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text", k: int = 3,
-                          n_bands: int = 4, n_bits: int = 16) -> DataFrame:
-    """All pairs (a < b) with Hamming(simhash_a, simhash_b) <= k.
+def simhash_hamming_pairs(docs: DataFrame, n_bits: int = 16) -> DataFrame:
+    """All pairs (a < b) with Hamming(simhash_a, simhash_b) <= SIMHASH_K.
 
-    Banding on (n_bits/n_bands)-bit nibbles: a pair within Hamming distance
-    k < n_bands must agree exactly on >=1 band (pigeonhole), so the
-    (band, nibble) equi-join has EXACT recall — this is the CC-crawl-scale
-    plan (one shuffle, bucket fan-out bounded by band cardinality), not an
-    approximation. Verification is a JVM-side popcount on the XOR.
-    n_bits=16 is the oracle-paired toy width (its Hamming<=3 ball is loose,
-    so the output itself is large on a similar-topic corpus); a production
-    crawl dedup uses n_bits=60, n_bands=4 — 15-bit bands, tight ball, same
-    plan (test-pinned against brute force at both widths).
+    Banding on (n_bits/SIMHASH_BANDS)-bit nibbles: a pair within Hamming
+    distance SIMHASH_K < SIMHASH_BANDS must agree exactly on >=1 band
+    (pigeonhole), so the (band, nibble) equi-join has EXACT recall — this
+    is the CC-crawl-scale plan (one shuffle, bucket fan-out bounded by band
+    cardinality), not an approximation. Verification is a JVM-side popcount
+    on the XOR. n_bits=16 is the oracle-paired toy width (its Hamming<=3
+    ball is loose, so the output itself is large on a similar-topic
+    corpus); a production crawl dedup uses n_bits=60 — 15-bit bands, tight
+    ball, same plan (test-pinned against brute force at both widths).
 
     Reference analog (what, not how): duplicate-title collapse in the
     reference's entity merge (SURVEY.md §2 A-family); re-expressed as the
     standard simhash banding retrieval."""
-    if k >= n_bands:
-        raise ValueError("exact recall needs k < n_bands")
-    if n_bits % n_bands:
-        raise ValueError("n_bits must divide evenly into n_bands")
-    sig = simhash_bits(docs, id_col, text_col, n_bits=n_bits)
-    bits = n_bits // n_bands
+    if n_bits % SIMHASH_BANDS:
+        raise ValueError("n_bits must divide evenly into SIMHASH_BANDS")
+    sig = simhash_bits(docs, n_bits=n_bits)
+    bits = n_bits // SIMHASH_BANDS
     mask = (1 << bits) - 1
     banded = sig.select(
-        F.col(id_col),
+        "doc_id",
         "simhash",
         F.posexplode(
             F.array(
                 *[
                     F.shiftright(F.col("simhash"), b * bits).bitwiseAND(F.lit(mask))
-                    for b in range(n_bands)
+                    for b in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("band", "nib"),
     )
     left = banded.select(
-        F.col(id_col).alias("a"), F.col("simhash").alias("sig_a"), "band", "nib"
+        F.col("doc_id").alias("a"), F.col("simhash").alias("sig_a"), "band", "nib"
     )
     right = banded.select(
-        F.col(id_col).alias("b"), F.col("simhash").alias("sig_b"), "band", "nib"
+        F.col("doc_id").alias("b"), F.col("simhash").alias("sig_b"), "band", "nib"
     )
     return (
         left.join(right, ["band", "nib"])
@@ -424,19 +402,14 @@ def simhash_hamming_pairs(docs: DataFrame, id_col: str = "doc_id",
             .cast("int")
             .alias("hamming"),
         )
-        .where(F.col("hamming") <= k)
+        .where(F.col("hamming") <= SIMHASH_K)
     )
 
 
 # --- corpus-level span dedup (C4-style) --------------------------------------
 
 
-def span_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_tokens: int = 10,
-) -> DataFrame:
+def span_dedup(docs: DataFrame, chunk_tokens: int = 10) -> DataFrame:
     """Global span-level dedup, the C4 move (Raffel et al. 2020 discard
     repeated three-sentence spans corpus-wide; here the span unit is a
     fixed token window since the corpus has no sentence boundaries):
@@ -444,7 +417,7 @@ def span_dedup(
     only the FIRST occurrence of each distinct chunk corpus-wide (first =
     lowest (doc_id, chunk_idx)), and reassemble the surviving text.
 
-    Returns (id_col, n_chunks, n_kept, text_deduped).
+    Returns (doc_id, n_chunks, n_kept, text_deduped).
 
     Scale shape (r7, guide §8 "decide with small rows, move big rows
     once" — here ZERO times): the exploded stream that shuffles carries
@@ -465,17 +438,17 @@ def span_dedup(
     # re-evaluated for every transform element (see word_shingles_from)
     tc = F.col("_toks")
     n_chunks = F.ceil(F.size(tc) / F.lit(chunk_tokens)).cast("int")
-    base = docs.select(id_col, text_col).where(F.col(text_col).isNotNull())
+    base = docs.select("doc_id", "text").where(F.col("text").isNotNull())
     chunk_arr = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
         lambda i: F.array_join(F.slice(tc, i * chunk_tokens + 1, chunk_tokens), " "),
     )
     chunked = base.select(
-        id_col, F.split(F.col(text_col), r"\s+").alias("_toks")
+        "doc_id", F.split("text", r"\s+").alias("_toks")
     ).select(
-        id_col,
+        "doc_id",
         F.posexplode(chunk_arr).alias("chunk_idx", "chunk"),
-    ).select(id_col, "chunk_idx", F.md5(F.col("chunk")).alias("_h"))
+    ).select("doc_id", "chunk_idx", F.md5(F.col("chunk")).alias("_h"))
     # two consumers (winner agg + join back) share one Exchange(_h):
     # ReusedExchange computes the chunk build once. No localCheckpoint
     # here — cutting the lineage would also cut the REBUILD branch off the
@@ -483,15 +456,15 @@ def span_dedup(
     # a second time; with the plan intact, every branch reuses both the
     # corpus exchange and the _h exchange (verified in the committed plan).
     winners = chunked.groupBy("_h").agg(
-        F.min(F.struct(id_col, "chunk_idx")).alias("_first")
+        F.min(F.struct("doc_id", "chunk_idx")).alias("_first")
     )
     dropped = (
         chunked.join(winners, "_h")
         .where(
-            (F.col(f"_first.{id_col}") != F.col(id_col))
+            (F.col("_first.doc_id") != F.col("doc_id"))
             | (F.col("_first.chunk_idx") != F.col("chunk_idx"))
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_list("chunk_idx").alias("_dropped"))
     )
     # map-side rebuild: same chunk derivation as above (byte-identical by
@@ -499,14 +472,14 @@ def span_dedup(
     # filter's index lambda sees exactly the chunk_idx posexplode emitted
     drop_set = F.coalesce(F.col("_dropped"), F.expr("array()").cast("array<int>"))
     return (
-        base.join(dropped, id_col, "left")
+        base.join(dropped, "doc_id", "left")
         .select(
-            id_col,
-            F.split(F.col(text_col), r"\s+").alias("_toks"),
+            "doc_id",
+            F.split("text", r"\s+").alias("_toks"),
             drop_set.alias("_drop"),
         )
         .select(
-            id_col,
+            "doc_id",
             n_chunks.cast("long").alias("n_chunks"),
             (n_chunks.cast("long") - F.size("_drop")).alias("n_kept"),
             F.array_join(
@@ -520,14 +493,7 @@ def span_dedup(
     )
 
 
-def near_dup_clusters(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 8,
-    n_bands: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
+def near_dup_clusters(docs: DataFrame) -> DataFrame:
     """End-to-end near-dup resolution — the full training-data dedup
     pass, not just candidate pairs: MinHash-LSH pairs -> connected
     components over the near-dup graph -> one canonical survivor per
@@ -551,15 +517,12 @@ def near_dup_clusters(
 
     from ..canonicalize import connected_components
 
-    pairs = minhash_lsh_pairs(
-        docs, id_col=id_col, text_col=text_col,
-        n_hashes=n_hashes, n_bands=n_bands, shingle_n=shingle_n,
-    )
-    nodes = docs.select(F.col(id_col).alias("node"))
+    pairs = minhash_lsh_pairs(docs)
+    nodes = docs.select(F.col("doc_id").alias("node"))
     comp = connected_components(nodes, pairs.select(F.col("a"), F.col("b")))
     w_sz = F.count("*").over(Window.partitionBy("component"))
     return (
-        comp.select(F.col("node").alias(id_col), "component")
+        comp.select(F.col("node").alias("doc_id"), "component")
         .withColumn("cluster_size", w_sz.cast("long"))
-        .withColumn("keep", F.col(id_col) == F.col("component"))
+        .withColumn("keep", F.col("doc_id") == F.col("component"))
     )

@@ -23,13 +23,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000_000  # e12 fixed point
+DAMPING_E2 = 85  # PageRank damping factor d, in hundredths
 
 
 def pagerank(
     nodes: DataFrame,
     edges: DataFrame,
     n_iter: int = 5,
-    damping_e2: int = 85,
     mode: str = "e12",
 ) -> DataFrame:
     """Unnormalized PageRank, fixed iteration count (no convergence test —
@@ -39,7 +39,7 @@ def pagerank(
         rank_i+1(v) = SCALE*(100-d)//100
                       + sum over in-edges (u,v) of (rank_i(u)*d//100) // deg(u)
 
-    nodes: (node); edges: (src, dst) directed — pass both directions for
+    with d = DAMPING_E2. nodes: (node); edges: (src, dst) directed — pass both directions for
     an undirected graph. Dangling nodes (deg 0) keep the base mass and
     leak the rest, the usual simplification. Returns (node, rank_e12) in
     e12 mode, (node, rank) double otherwise.
@@ -77,14 +77,14 @@ def pagerank(
     spark = edges.sparkSession
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     if mode == "e12":
-        base = SCALE * (100 - damping_e2) // 100
+        base = SCALE * (100 - DAMPING_E2) // 100
         init = F.lit(SCALE).cast("long")
-        share = F.expr(f"(rank * {damping_e2}) div 100 div deg")
+        share = F.expr(f"(rank * {DAMPING_E2}) div 100 div deg")
         out_col = "rank_e12"
     else:
-        base = SCALE * (100 - damping_e2) / 100.0
+        base = SCALE * (100 - DAMPING_E2) / 100.0
         init = F.lit(float(SCALE))
-        share = F.col("rank") * (damping_e2 / 100.0) / F.col("deg")
+        share = F.col("rank") * (DAMPING_E2 / 100.0) / F.col("deg")
         out_col = "rank"
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))

@@ -20,10 +20,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def stratified_sample(
-    df: DataFrame, strata_col: str, k: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep the k rows per stratum with the lowest md5(id) — a uniform,
+def stratified_sample(df: DataFrame, strata_col: str, k: int) -> DataFrame:
+    """Keep the k rows per stratum with the lowest md5(doc_id) — a uniform,
     deterministic, engine-portable pseudo-random draw (md5 hex order is
     identical everywhere; no seed state, so a resumed job re-draws the
     same sample). Adds sample_rank (1..k within stratum).
@@ -32,7 +30,7 @@ def stratified_sample(
     crawl scale) are bounded by the same top-k window Spark turns into
     partial per-map-task sorts."""
     w = Window.partitionBy(strata_col).orderBy(
-        F.md5(F.col(id_col).cast("string")).asc(), F.col(id_col).asc()
+        F.md5(F.col("doc_id").cast("string")).asc(), F.col("doc_id").asc()
     )
     return (
         df.withColumn("sample_rank", F.row_number().over(w))
@@ -40,30 +38,24 @@ def stratified_sample(
     )
 
 
-def pack_sequences(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    budget: int = 256,
-    block_size: int = 1024,
-) -> DataFrame:
-    """(id, n_tokens, offset, seq_id, seq_offset, n_seqs_spanned): where
-    each doc lands when the corpus is concatenated in id order and cut
+def pack_sequences(docs: DataFrame, budget: int = 256, block_size: int = 1024) -> DataFrame:
+    """(doc_id, n_tokens, offset, seq_id, seq_offset, n_seqs_spanned):
+    where each doc lands when the corpus is concatenated in id order and cut
     into `budget`-token training sequences.
 
     Distributed prefix sum over the id ordering: docs are bucketed into
-    id-range blocks (floor(id / block_size)), per-block token subtotals
+    id-range blocks (floor(doc_id / block_size)), per-block token subtotals
     are cumsummed with a window over the BLOCK table (thousands of rows,
     not the corpus — the only single-partition step), the block prefix
     broadcasts back, and the within-block running sum is a window
     partitioned BY block, which parallelizes. At 10^12 docs the block
     table is ~10^9 rows — raise block_size so it stays window-able, or
     recurse the same trick one level; the per-doc stages never change."""
-    n_toks = F.size(F.split(F.col(text_col), r"\s+"))
+    n_toks = F.size(F.split("text", r"\s+"))
     base = docs.select(
-        F.col(id_col),
+        "doc_id",
         n_toks.cast("long").alias("n_tokens"),
-        F.floor(F.col(id_col) / block_size).alias("_blk"),
+        F.floor(F.col("doc_id") / block_size).alias("_blk"),
     )
     blocks = base.groupBy("_blk").agg(F.sum("n_tokens").alias("_blk_toks"))
     w_blk = Window.orderBy("_blk").rowsBetween(Window.unboundedPreceding, -1)
@@ -72,7 +64,7 @@ def pack_sequences(
     )
     w_in = (
         Window.partitionBy("_blk")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     out = (
@@ -84,7 +76,7 @@ def pack_sequences(
         .drop("_blk", "_blk_prefix")
     )
     return out.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "offset",
         F.floor(F.col("offset") / budget).cast("long").alias("seq_id"),

@@ -26,6 +26,10 @@ from pyspark.sql import functions as F
 
 from .textstats import _e6
 
+# Vectors are (vec_id, embedding) rows; queries are (query_id, query_vec).
+SRP_DIMS = (0, 1, 2, 3)  # embedding dims whose signs key the 16 SRP buckets
+IVF_K = 5  # neighbours kept per query by ivf_topk
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -45,55 +49,50 @@ def cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def brute_force_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Exact top-k neighbors per query by cosine similarity.
-
-    queries is broadcast (assumed small); vectors scanned once."""
-    joined = vectors.crossJoin(F.broadcast(queries)).where(
-        F.col(id_col) != F.col(query_id_col)
-    )
-    scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        _e6(cosine(F.col(vec_col), F.col(query_vec_col))).alias("cosine_sim_e6"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim_e6"), F.asc(id_col))
+def _top_per_query(scored: DataFrame, k: int) -> DataFrame:
+    """The k best (query_id, vec_id, cosine_sim_e6) rows per query, ranked
+    under the total order (score desc, vec_id asc)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim_e6"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= k)
     )
 
 
-def srp_bucket(vec_col: str, dims: tuple[int, ...] = (0, 1, 2, 3)):
+def _query_scores(pairs: DataFrame) -> DataFrame:
+    return pairs.select(
+        "query_id",
+        "vec_id",
+        _e6(cosine(F.col("embedding"), F.col("query_vec"))).alias("cosine_sim_e6"),
+    )
+
+
+def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """Exact top-k neighbors per query by cosine similarity.
+
+    queries is broadcast (assumed small); vectors scanned once."""
+    joined = vectors.crossJoin(F.broadcast(queries)).where(
+        F.col("vec_id") != F.col("query_id")
+    )
+    return _top_per_query(_query_scores(joined), k)
+
+
+def srp_bucket():
     """Sign-random-projection bucket id from fixed dims (deterministic,
-    engine-portable): bit i = sign(vec[dims[i]])."""
+    engine-portable): bit i = sign(embedding[SRP_DIMS[i]])."""
     expr = F.lit(0)
-    for i, d in enumerate(dims):
+    for i, d in enumerate(SRP_DIMS):
         expr = expr + F.when(
-            F.element_at(F.col(vec_col), d + 1).cast("double") > 0, F.lit(1 << i)
+            F.element_at(F.col("embedding"), d + 1).cast("double") > 0, F.lit(1 << i)
         ).otherwise(F.lit(0))
     return expr.cast("int")
 
 
-def embedding_dup_pairs(
-    vectors: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: tuple[int, ...] = (0, 1, 2, 3),
-) -> DataFrame:
+def embedding_dup_pairs(vectors: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, LSH-bucket-blocked self-join."""
-    v = vectors.withColumn("bucket", srp_bucket(vec_col, dims))
-    a = v.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"), "bucket")
-    b = v.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"), "bucket")
+    v = vectors.withColumn("bucket", srp_bucket())
+    a = v.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"), "bucket")
+    b = v.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"), "bucket")
     return (
         a.join(b, "bucket")
         .where(F.col("a") < F.col("b"))
@@ -123,66 +122,52 @@ def embedding_dup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def ivf_assign(vectors: DataFrame, centroids: DataFrame,
-               id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """(id, centroid_id): each vector to its max-cosine centroid.
+def ivf_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(vec_id, centroid_id): each vector to its max-cosine centroid.
 
     Map-only: centroids are broadcast; the argmax is a row_number window
     keyed by the vector id (perfectly spread — no skew possible). Fixed-
     point e6 scores + (score desc, centroid_id asc) total order make the
     assignment engine-portable and tie-free."""
     scored = vectors.crossJoin(F.broadcast(centroids)).select(
-        F.col(id_col),
-        F.col("centroid_id"),
-        _e6(cosine(F.col(vec_col), F.col("centroid_vec"))).alias("c_sim_e6"),
+        "vec_id",
+        "centroid_id",
+        _e6(cosine(F.col("embedding"), F.col("centroid_vec"))).alias("c_sim_e6"),
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("c_sim_e6"), F.asc("centroid_id"))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("c_sim_e6"), F.asc("centroid_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .select(id_col, "centroid_id")
+        .select("vec_id", "centroid_id")
     )
 
 
 def ivf_topk(vectors: DataFrame, queries: DataFrame, centroids: DataFrame,
-             k: int = 5, nprobe: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id", query_vec_col: str = "query_vec") -> DataFrame:
-    """IVF ANN top-k: probe the query's nprobe nearest inverted lists and
-    exact-cosine verify inside them. Candidates per query ~ nprobe/K of the
-    corpus; nprobe = n_centroids is exactly brute force."""
-    assign = ivf_assign(vectors, centroids, id_col, vec_col)
+             nprobe: int = 2) -> DataFrame:
+    """IVF ANN top-IVF_K: probe the query's nprobe nearest inverted lists
+    and exact-cosine verify inside them. Candidates per query ~ nprobe/K of
+    the corpus; nprobe = n_centroids is exactly brute force."""
+    assign = ivf_assign(vectors, centroids)
     q_scored = queries.crossJoin(F.broadcast(centroids)).select(
-        F.col(query_id_col),
-        F.col("centroid_id"),
-        _e6(cosine(F.col(query_vec_col), F.col("centroid_vec"))).alias("c_sim_e6"),
+        "query_id",
+        "centroid_id",
+        _e6(cosine(F.col("query_vec"), F.col("centroid_vec"))).alias("c_sim_e6"),
     )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.desc("c_sim_e6"), F.asc("centroid_id")
-    )
+    wq = Window.partitionBy("query_id").orderBy(F.desc("c_sim_e6"), F.asc("centroid_id"))
     probes = (
         q_scored.withColumn("rn", F.row_number().over(wq))
         .where(F.col("rn") <= nprobe)
-        .select(query_id_col, "centroid_id")
+        .select("query_id", "centroid_id")
     )
     cand = (
         F.broadcast(probes)
         .join(assign, "centroid_id")
-        .where(F.col(id_col) != F.col(query_id_col))
-        .select(query_id_col, id_col)
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id")
     )
-    scored = (
-        cand.join(vectors.select(F.col(id_col), F.col(vec_col)), id_col)
-        .join(F.broadcast(queries), query_id_col)
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            _e6(cosine(F.col(vec_col), F.col(query_vec_col))).alias("cosine_sim_e6"),
-        )
+    scored = _query_scores(
+        cand.join(vectors.select("vec_id", "embedding"), "vec_id")
+        .join(F.broadcast(queries), "query_id")
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim_e6"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-    )
+    return _top_per_query(scored, IVF_K)
 

@@ -7,7 +7,7 @@ skew"):
 
 1. **High-cardinality agg states on hot keys**: `collect_list`/`collect_set`
    per entity (e.g. surface variants) puts every row of a head entity in ONE
-   task's state. `salted_agg` splits each key into `n_salts` subkeys,
+   task's state. `salted_agg` splits each key into `N_SALTS` subkeys,
    aggregates partials, then merges — the classic two-phase salt.
 2. **Replicated broadcast-side joins** where the probe side is hot and the
    per-row work is heavy (e.g. geometry/embedding verify): `salt_column`
@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+N_SALTS = 16  # subkeys per key in the two-phase salted aggregates
+
 
 def salt_column(n_salts: int, *identity_cols: str) -> Column:
     """Deterministic uniform salt in [0, n_salts): hash of row identity.
@@ -36,17 +38,16 @@ def salt_column(n_salts: int, *identity_cols: str) -> Column:
 def salted_count(
     df: DataFrame,
     key_cols: list[str],
-    n_salts: int = 16,
     identity_cols: list[str] | None = None,
     count_col: str = "count",
 ) -> DataFrame:
     """Two-phase count: groupBy(key, salt) -> partial counts -> groupBy(key).
 
     Equivalent to `df.groupBy(key).count()` but no single task ever sees
-    more than ~1/n_salts of a head key's rows in phase one."""
+    more than ~1/N_SALTS of a head key's rows in phase one."""
     ident = identity_cols or df.columns
     partial = (
-        df.withColumn("_salt", salt_column(n_salts, *ident))
+        df.withColumn("_salt", salt_column(N_SALTS, *ident))
         .groupBy(*key_cols, "_salt")
         .agg(F.count(F.lit(1)).alias("_partial"))
     )
@@ -58,7 +59,6 @@ def salted_agg(
     key_cols: list[str],
     partial_aggs: list[Column],
     merge_aggs: list[Column],
-    n_salts: int = 16,
     identity_cols: list[str] | None = None,
 ) -> DataFrame:
     """General two-phase salted aggregation.
@@ -68,14 +68,14 @@ def salted_agg(
     max/collect_* with a flatten merge)."""
     ident = identity_cols or df.columns
     partial = (
-        df.withColumn("_salt", salt_column(n_salts, *ident))
+        df.withColumn("_salt", salt_column(N_SALTS, *ident))
         .groupBy(*key_cols, "_salt")
         .agg(*partial_aggs)
     )
     return partial.groupBy(*key_cols).agg(*merge_aggs)
 
 
-def salted_repartition(df: DataFrame, key_cols: list[str], n_salts: int = 16,
+def salted_repartition(df: DataFrame, key_cols: list[str], n_salts: int = N_SALTS,
                        identity_cols: list[str] | None = None,
                        num_partitions: int | None = None) -> DataFrame:
     """Repartition by (key, salt) so a hot key spreads over n_salts

@@ -36,17 +36,17 @@ def _e6(col):
     return F.floor(col * 1000000.0).cast("long")
 
 
-def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, n_tokens, n_chars, avg_token_len_e6, n_subwords)."""
-    toks = word_tokens(text_col)
+def token_stats(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, n_chars, avg_token_len_e6, n_subwords)."""
+    toks = word_tokens("text")
     n_tokens = F.size(toks)
-    n_chars = F.length(F.col(text_col))
+    n_chars = F.length("text")
     # BPE-ish estimate: every ~4 chars of a word is a subword piece
     n_subwords = F.aggregate(
         toks, F.lit(0), lambda acc, t: acc + F.ceil(F.length(t) / 4.0).cast("int")
     )
     return docs.select(
-        F.col(id_col),
+        "doc_id",
         n_tokens.cast("long").alias("n_tokens"),
         n_chars.cast("long").alias("n_chars"),
         _e6(n_chars / F.greatest(n_tokens, F.lit(1))).alias("avg_token_len_e6"),
@@ -54,13 +54,13 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def quality_blend(text_col: str, toks):
-    """(len_e6, punct_e6, stop_e6, quality_e6) columns over a text column
+def quality_blend(toks):
+    """(len_e6, punct_e6, stop_e6, quality_e6) columns over the text column
     and its token array: length, punctuation-ratio and stopword-ratio
     scores in fixed-point millionths, and their 0.4/0.3/0.3 blend."""
     n_tokens = F.size(toks)
-    n_chars = F.length(F.col(text_col))
-    n_punct = n_chars - F.length(F.regexp_replace(F.col(text_col), r"[^\w\s]", ""))
+    n_chars = F.length("text")
+    n_punct = n_chars - F.length(F.regexp_replace("text", r"[^\w\s]", ""))
     punct_e6 = _e6(n_punct / F.greatest(n_chars, F.lit(1)))
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
@@ -72,12 +72,12 @@ def quality_blend(text_col: str, toks):
     return len_e6, punct_e6, stop_e6, quality_e6
 
 
-def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, len_score_e6, punct_ratio_e6, stopword_ratio_e6, quality_e6) —
-    fixed-point millionths in [0, 1e6]: `quality_blend` per doc."""
-    len_e6, punct_e6, stop_e6, quality_e6 = quality_blend(text_col, word_tokens(text_col))
+def quality_score(docs: DataFrame) -> DataFrame:
+    """(doc_id, len_score_e6, punct_ratio_e6, stopword_ratio_e6, quality_e6)
+    — fixed-point millionths in [0, 1e6]: `quality_blend` per doc."""
+    len_e6, punct_e6, stop_e6, quality_e6 = quality_blend(word_tokens("text"))
     return docs.select(
-        F.col(id_col),
+        "doc_id",
         len_e6.alias("len_score_e6"),
         punct_e6.alias("punct_ratio_e6"),
         stop_e6.alias("stopword_ratio_e6"),
@@ -105,31 +105,22 @@ def lang_argmax(toks):
     return pred, best
 
 
-def langid_heuristic(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, pred_lang, lang_hits): `lang_argmax` over the word tokens."""
-    pred, best = lang_argmax(word_tokens(text_col))
+def langid_heuristic(docs: DataFrame) -> DataFrame:
+    """(doc_id, pred_lang, lang_hits): `lang_argmax` over the word tokens."""
+    pred, best = lang_argmax(word_tokens("text"))
+    return docs.select("doc_id", pred.alias("pred_lang"), best.cast("long").alias("lang_hits"))
+
+
+def fingerprint(docs: DataFrame) -> DataFrame:
+    """(doc_id, fp): md5 over the sorted token multiset."""
     return docs.select(
-        F.col(id_col), pred.alias("pred_lang"), best.cast("long").alias("lang_hits")
+        "doc_id", F.md5(F.array_join(F.array_sort(word_tokens("text")), " ")).alias("fp")
     )
 
 
-def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, fp): md5 over the sorted token multiset."""
-    return docs.select(
-        F.col(id_col),
-        F.md5(F.array_join(F.array_sort(word_tokens(text_col)), " ")).alias("fp"),
-    )
-
-
-def tfidf_topk(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    idf_mode: str = "log",
-) -> DataFrame:
+def tfidf_topk(docs: DataFrame, k: int = 3, idf_mode: str = "log") -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF:
-    (id, term, tf, df, score..., rank). Ties break on term asc so the
+    (doc_id, term, tf, df, score..., rank). Ties break on term asc so the
     result is total-ordered.
 
     idf_mode='log' (default): score = tf * ln(N/df) as double — the
@@ -150,13 +141,13 @@ def tfidf_topk(
     from pyspark.sql import Window
 
     toks = docs.select(
-        F.col(id_col), F.explode(word_tokens(text_col)).alias("term")
+        "doc_id", F.explode(word_tokens("text")).alias("term")
     ).where(F.col("term") != "")
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     tf = tf.withColumn(
         "df", F.count("*").over(Window.partitionBy("term")).cast("long")
     )
-    n = docs.agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
+    n = docs.agg(F.count_distinct("doc_id").alias("n_docs"))
     scored = tf.join(F.broadcast(n))
     if idf_mode == "ratio_e6":
         scored = scored.withColumn(
@@ -172,7 +163,7 @@ def tfidf_topk(
         order = [F.col("score").desc(), F.col("term").asc()]
     else:
         raise ValueError(f"unknown idf_mode {idf_mode!r}")
-    w = Window.partitionBy(id_col).orderBy(*order)
+    w = Window.partitionBy("doc_id").orderBy(*order)
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)

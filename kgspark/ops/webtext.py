@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from .dedup import word_tokens
 
 TRACKING_PARAMS = ("utm_", "fbclid", "gclid", "mc_eid")
+BLOOM_K = 3  # hash positions per key in a Bloom filter
 
 
 def _e6(num, den):
@@ -100,26 +101,23 @@ def _max_run(sorted_arr):
     return F.aggregate(sorted_arr, init, step, lambda acc: acc["best"])
 
 
-def repetition_stats(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    ns: tuple[int, ...] = (2, 3),
-) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document (Rae et al. 2021 §A1.1
     use duplicate-line/paragraph fractions and top-n-gram coverage as
     quality gates; the fixture corpus is single-line, so the line-level
     variants collapse into the n-gram ones):
 
-    - dup_{n}gram_frac_e6: fraction of n-grams occurring more than once
-      (1 - distinct/total) — high = internally repetitive boilerplate.
+    - dup_{n}gram_frac_e6 for n in 2, 3: fraction of n-grams occurring
+      more than once (1 - distinct/total) — high = internally repetitive
+      boilerplate.
     - top_{n}gram_frac_e6: coverage of the single most frequent n-gram
       (max multiplicity / total).
     - max_token_run: longest run of the SAME token repeated back-to-back
       (catches "buy buy buy ..." spam directly).
     """
-    toks = word_tokens(text_col)
-    out = docs.select(F.col(id_col), toks.alias("_toks"))
-    cols = [F.col(id_col)]
-    for n in ns:
+    out = docs.select("doc_id", word_tokens("text").alias("_toks"))
+    cols = [F.col("doc_id")]
+    for n in (2, 3):
         grams = F.array_sort(_ngrams(F.col("_toks"), n))
         total = F.greatest(F.size(grams), F.lit(1))
         cols.append(
@@ -139,14 +137,14 @@ def repetition_stats(
     return out.select(*cols)
 
 
-def synth_urls(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_urls(docs: DataFrame) -> DataFrame:
     """Deterministic messy-URL column derived from (doc_id, source) — the
     fixture corpus carries no crawl URLs, so both engines synthesize the
     SAME urls from the same table (the oracle still independently
     recomputes the normalization). Mess injected: mixed-case scheme+host,
     explicit default port, variable path depth, tracking params mixed
     with real ones."""
-    d = F.col(id_col)
+    d = F.col("doc_id")
     scheme = F.when(d % 5 == 0, F.lit("HTTPS")).otherwise(F.lit("https"))
     host = F.when(d % 4 == 0, F.concat(F.lit("WWW."), F.col("source"), F.lit(".Example.ORG"))).otherwise(
         F.concat(F.lit("www."), F.col("source"), F.lit(".example.org"))
@@ -163,10 +161,10 @@ def synth_urls(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def url_canonicalize(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Canonical URL + parsed components, pure regex/array column ops
-    (portable: identical regexes run in the DuckDB oracle — F.parse_url
-    exists but has no DuckDB twin):
+def url_canonicalize(df: DataFrame) -> DataFrame:
+    """Canonical URL + parsed components of the `url` column, pure
+    regex/array column ops (portable: identical regexes run in the DuckDB
+    oracle — F.parse_url exists but has no DuckDB twin):
 
     - host: lowercased authority minus port; reg_domain: last two labels
       (the PSL-less heuristic — a production swap-in point);
@@ -175,7 +173,7 @@ def url_canonicalize(df: DataFrame, url_col: str = "url") -> DataFrame:
       tracking params (utm_*, fbclid, gclid, mc_eid) removed, '?'
       dropped when nothing survives.
     """
-    u = F.col(url_col)
+    u = F.col("url")
     scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z]+)://", 1))
     authority = F.regexp_extract(u, r"^[A-Za-z]+://([^/?#]+)", 1)
     host = F.lower(F.regexp_extract(authority, r"^([^:]+)", 1))
@@ -210,29 +208,27 @@ PII_PATTERNS = {
 }
 
 
-def redact_pii(
-    docs: DataFrame, text_col: str = "text", patterns: dict[str, str] | None = None
-) -> DataFrame:
-    """Training-data PII scrub: replace each match class with a typed
-    placeholder token ('<EMAIL>'...) and count removals per class —
-    the standard pre-tokenization redaction pass (C4 and successors ship
-    exactly this shape). Pure regexp column ops, map-only; replacement
-    order follows the (ordered) dict, and each class counts/replaces on
+def redact_pii(docs: DataFrame) -> DataFrame:
+    """Training-data PII scrub of the `text` column into `text_redacted`:
+    replace each PII_PATTERNS match class with a typed placeholder token
+    ('<EMAIL>'...) and count removals per class — the standard
+    pre-tokenization redaction pass (C4 and successors ship exactly this
+    shape). Pure regexp column ops, map-only; replacement order follows
+    the (ordered) dict, and each class counts/replaces on
     the output of the previous one, so earlier classes win overlaps —
     e.g. phone before ipv4 keeps '555-867-5309' from feeding digit runs
     to later numeric patterns.
     """
-    pats = patterns or PII_PATTERNS
-    out = F.col(text_col)
+    out = F.col("text")
     counts = []
-    for name, pat in pats.items():
+    for name, pat in PII_PATTERNS.items():
         counts.append(
             F.size(F.regexp_extract_all(out, F.lit(pat), F.lit(0)))
             .cast("long")
             .alias(f"n_{name}")
         )
         out = F.regexp_replace(out, pat, f"<{name.upper()}>")
-    return docs.select("*", *counts).withColumn(f"{text_col}_redacted", out)
+    return docs.select("*", *counts).withColumn("text_redacted", out)
 
 
 def _micros(col):
@@ -279,17 +275,12 @@ def interval_join(
     return joined.drop("_bkt")
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    by: str,
-    ts_col: str = "ts",
-    value_cols: tuple[str, ...] = ("value",),
-) -> DataFrame:
-    """Point-in-time join: for every left row, attach the LATEST right row
-    with right.ts <= left.ts within the same `by` group (nulls when no
-    right row precedes). The operator Spark lacks natively; kdb asof /
-    DuckDB ASOF JOIN / pandas merge_asof semantics.
+def asof_join(left: DataFrame, right: DataFrame, by: str) -> DataFrame:
+    """Point-in-time join: for every left row, attach the `value` and `ts`
+    of the LATEST right row with right.ts <= left.ts within the same `by`
+    group, as asof_value and asof_ts (nulls when no right row precedes).
+    The operator Spark lacks natively; kdb asof / DuckDB ASOF JOIN /
+    pandas merge_asof semantics.
 
     Plan: tag sides, union on (by, ts, side), one window
     last(..., ignoreNulls) ordered by (ts, side) with right rows sorting
@@ -298,28 +289,25 @@ def asof_join(
     join (which Catalyst executes as per-key cartesian + filter)."""
     lcols = left.columns
     r = right.select(
-        F.col(by), F.col(ts_col), F.lit(0).alias("_side"),
-        *[F.col(c).alias(f"_r_{c}") for c in value_cols],
-        F.col(ts_col).alias("_r_ts"),
+        F.col(by), F.col("ts"), F.lit(0).alias("_side"),
+        F.col("value").alias("_r_value"), F.col("ts").alias("_r_ts"),
     )
+    types = dict(right.dtypes)
     l = left.select(
         *lcols, F.lit(1).alias("_side"),
-        *[F.lit(None).cast(dict(right.dtypes)[c]).alias(f"_r_{c}") for c in value_cols],
-        F.lit(None).cast(dict(right.dtypes)[ts_col]).alias("_r_ts"),
+        F.lit(None).cast(types["value"]).alias("_r_value"),
+        F.lit(None).cast(types["ts"]).alias("_r_ts"),
     )
     u = l.unionByName(r, allowMissingColumns=True)
     w = (
         Window.partitionBy(by)
-        .orderBy(F.col(ts_col).asc(), F.col("_side").asc())
+        .orderBy(F.col("ts").asc(), F.col("_side").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     filled = u.select(
         *[c for c in u.columns if not c.startswith("_")],
         F.col("_side"),
-        *[
-            F.last(f"_r_{c}", ignorenulls=True).over(w).alias(f"asof_{c}")
-            for c in value_cols
-        ],
+        F.last("_r_value", ignorenulls=True).over(w).alias("asof_value"),
         F.last("_r_ts", ignorenulls=True).over(w).alias("asof_ts"),
     )
     return filled.where(F.col("_side") == 1).drop("_side")
@@ -344,18 +332,18 @@ def _bloom_pos(key_col, salt: int):
     ).cast("long")
 
 
-def bloom_build(df: DataFrame, key_col: str, k: int = 3) -> DataFrame:
+def bloom_build(df: DataFrame, key_col: str) -> DataFrame:
     """Build a 65536-bit Bloom filter over key_col as a 2048-row
     (block, mask) table of 32-bit blocks (bit 63 stays clear: DuckDB's
     BIGINT << traps on 1<<63, so the oracle could not rebuild a 64-bit
-    layout). Per key, k 16-bit positions; bit_or the per-block masks.
+    layout). Per key, BLOOM_K 16-bit positions; bit_or the per-block masks.
     ONE map-side-combined shuffle on block (2048 groups); the
     result broadcasts anywhere. The classic incremental-crawl structure:
     yesterday's corpus compresses to 8 KiB that every executor can hold,
     so screening a new batch never joins the historical table."""
     pos = df.select(
         F.explode(
-            F.array(*[_bloom_pos(F.col(key_col), i) for i in range(k)])
+            F.array(*[_bloom_pos(F.col(key_col), i) for i in range(BLOOM_K)])
         ).alias("pos")
     )
     return pos.groupBy((F.col("pos") / 32).cast("long").alias("block")).agg(
@@ -365,16 +353,14 @@ def bloom_build(df: DataFrame, key_col: str, k: int = 3) -> DataFrame:
     )
 
 
-def bloom_might_contain(
-    df: DataFrame, bloom: DataFrame, key_col: str, k: int = 3,
-    out_col: str = "maybe_seen",
-) -> DataFrame:
-    """Screen df against a bloom_build table: k broadcast joins (map-only,
-    no shuffle of df) then an all-bits-set AND. False positives at the
-    standard (1 - e^{-kn/m})^k rate; false negatives never."""
+def bloom_might_contain(df: DataFrame, bloom: DataFrame, key_col: str) -> DataFrame:
+    """Screen df against a bloom_build table into a `maybe_seen` column:
+    BLOOM_K broadcast joins (map-only, no shuffle of df) then an
+    all-bits-set AND. False positives at the standard (1 - e^{-kn/m})^k
+    rate; false negatives never."""
     out = df
     cond = F.lit(True)
-    for i in range(k):
+    for i in range(BLOOM_K):
         b = bloom.select(
             F.col("block").alias(f"_blk{i}"), F.col("mask").alias(f"_mask{i}")
         )
@@ -386,5 +372,5 @@ def bloom_might_contain(
             F.expr(f"(shiftrightunsigned(_mask{i}, _bit{i}) & 1) = 1"),
             F.lit(False),
         )
-    out = out.withColumn(out_col, cond)
-    return out.drop(*[c for i in range(k) for c in (f"_blk{i}", f"_mask{i}", f"_bit{i}")])
+    out = out.withColumn("maybe_seen", cond)
+    return out.drop(*[c for i in range(BLOOM_K) for c in (f"_blk{i}", f"_mask{i}", f"_bit{i}")])

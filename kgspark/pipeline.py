@@ -22,7 +22,6 @@ from . import materialize as mat
 from . import metrics
 from . import provenance as prov
 from . import temporal
-from .extract import with_extracted_text
 from .io import CheckpointRegistry, spread
 from .mentions import annotate_pages, explode_mentions, explode_relations
 from .relations import resolve_triples
@@ -42,7 +41,7 @@ def _annotated(s: _Stages) -> DataFrame:
     # The frozen extractor is fused into the annotation pass so the
     # 13KB-per-page text never crosses the JVM<->Python boundary twice
     # (guide §4.1). Byte-identical output: annotate_pages(from_html=True)
-    # applies the same extract_text_bytes the `extracted` stage uses.
+    # applies the same extract_text_bytes as extract.with_extracted_text.
     # A pages input of fewer files than cores is spread first, or the
     # annotate pass runs in as few tasks as there are files.
     gaz, regions = gazetteer_from_alias_index(s.alias_index)
@@ -82,7 +81,6 @@ class Stage(NamedTuple):
 # DataFrames that Catalyst fuses into their consumer (fewer jobs: job
 # launch latency is the serial floor at small scale).
 STAGES: dict[str, Stage] = {
-    "extracted": Stage(lambda s: with_extracted_text(s.pages.drop("text"))),
     "annotated": Stage(_annotated, shared=True),
     "mentions": Stage(lambda s: explode_mentions(s["annotated"])),
     "relations": Stage(lambda s: explode_relations(s["annotated"])),

@@ -14,10 +14,10 @@ dimension from the triple store's `src_url` provenance column:
 - a ``documented_in`` edge per (entity, domain) with an evidence count —
   the E65-ish link from graph content back to where it was read.
 
-Everything is built-in column expressions over one groupBy of the triple
-store — the dimension is domain-cardinality (tiny vs the store), and the
-edges aggregate map-side, so a head domain (half the corpus from one host)
-costs no more than any other.
+Each table is built-in column expressions over one aggregate of the triple
+store and one explode of its rows — the dimension is domain-cardinality
+(tiny vs the store), and the edges aggregate map-side, so a head domain
+(half the corpus from one host) costs no more than any other.
 """
 
 from __future__ import annotations
@@ -30,85 +30,67 @@ ACTOR_PREFIX = "PUB_"
 RIGHTS_PREFIX = "RGT_"
 
 
-def _domain(url_col) -> F.Column:
-    # scheme://host/... -> host; bad urls fall back to the raw string
-    host = F.regexp_extract(url_col, r"^[a-z][a-z0-9+.-]*://([^/]+)", 1)
-    return F.when(host != "", host).otherwise(url_col)
+def _domain() -> F.Column:
+    # scheme://host/... of src_url -> host; bad urls fall back to the raw string
+    host = F.regexp_extract("src_url", r"^[a-z][a-z0-9+.-]*://([^/]+)", 1)
+    return F.when(host != "", host).otherwise(F.col("src_url"))
 
 
-def _safe(col) -> F.Column:
-    return F.regexp_replace(col, r"[^0-9A-Za-z_.-]", "_")
-
-
-def source_domains(triples: DataFrame) -> DataFrame:
-    """(domain, n_triples, n_entities) — one row per source domain."""
-    return (
-        triples.withColumn("domain", _domain(F.col("src_url")))
-        .groupBy("domain")
-        .agg(
-            F.count(F.lit(1)).alias("n_triples"),
-            F.approx_count_distinct("subj").alias("n_entities"),
-        )
-    )
+def _dim_id(prefix: str) -> F.Column:
+    """Dimension entity id of the row's `domain`: prefix + a safe token."""
+    return F.concat(F.lit(prefix), F.regexp_replace("domain", r"[^0-9A-Za-z_.-]", "_"))
 
 
 def provenance_entities(triples: DataFrame) -> DataFrame:
     """Three dimension rows (source, publisher actor, rights) per domain,
     in the pipeline's entity-table shape (entity_id, entity_type,
     canonical_name, n_mentions)."""
-    doms = source_domains(triples).select(
-        "domain", F.col("n_triples").alias("n_mentions")
+    doms = triples.groupBy(_domain().alias("domain")).agg(
+        F.count(F.lit(1)).alias("n_mentions")
     )
-    sid = F.concat(F.lit(SOURCE_PREFIX), _safe(F.col("domain")))
-    aid = F.concat(F.lit(ACTOR_PREFIX), _safe(F.col("domain")))
-    rid = F.concat(F.lit(RIGHTS_PREFIX), _safe(F.col("domain")))
-    src = doms.select(
-        sid.alias("entity_id"),
-        F.lit("web_source").alias("entity_type"),
-        F.col("domain").alias("canonical_name"),
-        "n_mentions",
+
+    def row(prefix, entity_type, name):
+        return F.struct(
+            _dim_id(prefix).alias("entity_id"),
+            F.lit(entity_type).alias("entity_type"),
+            name.alias("canonical_name"),
+        )
+
+    rows = F.array(
+        row(SOURCE_PREFIX, "web_source", F.col("domain")),
+        row(ACTOR_PREFIX, "publisher", F.col("domain")),
+        row(RIGHTS_PREFIX, "rights", F.concat(F.lit("implied-copyright:"), "domain")),
     )
-    actor = doms.select(
-        aid.alias("entity_id"),
-        F.lit("publisher").alias("entity_type"),
-        F.col("domain").alias("canonical_name"),
-        "n_mentions",
-    )
-    rights = doms.select(
-        rid.alias("entity_id"),
-        F.lit("rights").alias("entity_type"),
-        F.concat(F.lit("implied-copyright:"), F.col("domain")).alias("canonical_name"),
-        "n_mentions",
-    )
-    return src.unionByName(actor).unionByName(rights)
+    return doms.select(F.explode(rows).alias("_e"), "n_mentions").select("_e.*", "n_mentions")
 
 
 def provenance_edges(triples: DataFrame) -> DataFrame:
     """Dimension-internal edges (published_by, has_rights) plus one
     documented_in edge per (graph entity, domain) carrying the evidence
-    count as weight — (subj, pred, obj, weight)."""
-    with_dom = triples.withColumn("domain", _domain(F.col("src_url")))
-    doms = with_dom.select("domain").distinct()
-    sid = F.concat(F.lit(SOURCE_PREFIX), _safe(F.col("domain")))
-    aid = F.concat(F.lit(ACTOR_PREFIX), _safe(F.col("domain")))
-    rid = F.concat(F.lit(RIGHTS_PREFIX), _safe(F.col("domain")))
-    meta = doms.select(
-        sid.alias("subj"), F.lit("published_by").alias("pred"), aid.alias("obj"),
-        F.lit(1).cast("long").alias("weight"),
-    ).unionByName(
-        doms.select(
-            sid.alias("subj"), F.lit("has_rights").alias("pred"), rid.alias("obj"),
-            F.lit(1).cast("long").alias("weight"),
-        )
+    count as weight — (subj, pred, obj, weight).
+
+    One aggregate over two grouping sets: (subj, domain) rows count the
+    documented_in evidence, and (domain) rows carry the two meta edges."""
+    counts = (
+        triples.select("subj", _domain().alias("domain"))
+        .groupingSets([["subj", "domain"], ["domain"]], "subj", "domain")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"), F.grouping("subj").alias("_per_domain"))
     )
-    documented = (
-        with_dom.groupBy("subj", "domain")
-        .agg(F.count(F.lit(1)).alias("weight"))
-        .select(
-            "subj",
-            F.lit("documented_in").alias("pred"),
-            F.concat(F.lit(SOURCE_PREFIX), _safe(F.col("domain"))).alias("obj"),
-            F.col("weight").cast("long").alias("weight"),
+
+    def edge(subj, pred, obj, weight):
+        return F.struct(
+            subj.alias("subj"), F.lit(pred).alias("pred"), obj.alias("obj"),
+            weight.alias("weight"),
         )
+
+    one = F.lit(1).cast("long")
+    edges = F.when(
+        F.col("_per_domain") == 1,
+        F.array(
+            edge(_dim_id(SOURCE_PREFIX), "published_by", _dim_id(ACTOR_PREFIX), one),
+            edge(_dim_id(SOURCE_PREFIX), "has_rights", _dim_id(RIGHTS_PREFIX), one),
+        ),
+    ).otherwise(
+        F.array(edge(F.col("subj"), "documented_in", _dim_id(SOURCE_PREFIX), F.col("n")))
     )
-    return meta.unionByName(documented)
+    return counts.select(F.explode(edges).alias("_e")).select("_e.*")

@@ -57,9 +57,9 @@ def get_spark(
         # InferFiltersFromGenerate duplicates the full generator-input
         # expression as a size()>0 Filter that then pushes below any
         # repartition — for our shingle/token explodes the arrays are never
-        # empty (word_shingles pads to >=1 element), so the inferred filter
-        # excludes nothing while re-evaluating the whole shingle build on
-        # the scan side (measured: 10x on dedup_minhash over a single-file
+        # empty (dedup.word_shingles_from pads to >=1 element), so the
+        # inferred filter excludes nothing while re-evaluating the whole
+        # shingle build on the scan side (measured: 10x on dedup_minhash over a single-file
         # input: the filter ran the shingle pipeline single-partition).
         .config(
             "spark.sql.optimizer.excludedRules",

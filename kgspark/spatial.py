@@ -62,6 +62,8 @@ from . import geom
 # ---------------------------------------------------------------------------
 
 BBOX_FIELDS = ("xmin", "ymin", "xmax", "ymax")
+# Units are (unit_id, bbox) rows, or (unit_id, wkb) for the WKB operators.
+CELL_SIZE = 16.0  # default grid-cell edge of the blocked joins
 
 
 def bbox_struct(xmin: Column, ymin: Column, xmax: Column, ymax: Column) -> Column:
@@ -153,8 +155,6 @@ def _blocked_pairs(
     left: DataFrame,
     right: DataFrame,
     cell_size: float,
-    id_col: str,
-    bbox_col: str,
     self_join: bool,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -165,16 +165,16 @@ def _blocked_pairs(
     level (iw >= 0 and ih >= 0) before anything else. `carry` columns ride
     along as a_<col>/b_<col> for exact verification by the caller."""
     la = left.select(
-        F.col(id_col).alias("a_id"),
-        F.col(bbox_col).alias("a_bbox"),
+        F.col("unit_id").alias("a_id"),
+        F.col("bbox").alias("a_bbox"),
         *[F.col(c).alias(f"a_{c}") for c in carry],
-        F.explode(grid_cells(F.col(bbox_col), cell_size)).alias("cell"),
+        F.explode(grid_cells(F.col("bbox"), cell_size)).alias("cell"),
     )
     rb = right.select(
-        F.col(id_col).alias("b_id"),
-        F.col(bbox_col).alias("b_bbox"),
+        F.col("unit_id").alias("b_id"),
+        F.col("bbox").alias("b_bbox"),
         *[F.col(c).alias(f"b_{c}") for c in carry],
-        F.explode(grid_cells(F.col(bbox_col), cell_size)).alias("cell"),
+        F.explode(grid_cells(F.col("bbox"), cell_size)).alias("cell"),
     )
     pairs = la.join(rb, "cell")
     if self_join:
@@ -192,14 +192,12 @@ def _blocked_pairs(
 def spatial_overlap_join(
     left: DataFrame,
     right: DataFrame,
-    cell_size: float = 16.0,
+    cell_size: float = CELL_SIZE,
     iou_threshold_e6: int = 100000,
-    id_col: str = "unit_id",
-    bbox_col: str = "bbox",
 ) -> DataFrame:
     """Cross-snapshot overlap join: (a_id, b_id, iou_e6, a_cover_e6,
     b_cover_e6) for pairs with IoU >= threshold. Reference J1."""
-    pairs = _blocked_pairs(left, right, cell_size, id_col, bbox_col, self_join=False)
+    pairs = _blocked_pairs(left, right, cell_size, self_join=False)
     a, b = F.col("a_bbox"), F.col("b_bbox")
     return (
         pairs.select(
@@ -213,39 +211,27 @@ def spatial_overlap_join(
     )
 
 
-def spatial_borders(
-    units: DataFrame,
-    cell_size: float = 16.0,
-    id_col: str = "unit_id",
-    bbox_col: str = "bbox",
-) -> DataFrame:
+def spatial_borders(units: DataFrame) -> DataFrame:
     """Symmetric-deduped self-join on edge contact (reference J2 borders)."""
-    pairs = _blocked_pairs(units, units, cell_size, id_col, bbox_col, self_join=True)
+    pairs = _blocked_pairs(units, units, CELL_SIZE, self_join=True)
     return pairs.where(bboxes_touch(F.col("a_bbox"), F.col("b_bbox"))).select(
         "a_id", "b_id"
     )
 
 
-def dissolve(
-    units: DataFrame,
-    group_col: str,
-    id_col: str = "unit_id",
-    bbox_col: str = "bbox",
-) -> DataFrame:
+def dissolve(units: DataFrame, group_col: str) -> DataFrame:
     """Group member units into one parent row: extent bbox, part count,
     summed member area (exact when members are disjoint, as census units
     are). Pure built-in aggregation — reference A2 without the per-group
     shapely bottleneck; a head group costs the same as any other because
     min/max/sum all combine map-side."""
+    b = F.col("bbox")
     return units.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_parts"),
         bbox_struct(
-            F.min(F.col(bbox_col)["xmin"]),
-            F.min(F.col(bbox_col)["ymin"]),
-            F.max(F.col(bbox_col)["xmax"]),
-            F.max(F.col(bbox_col)["ymax"]),
+            F.min(b["xmin"]), F.min(b["ymin"]), F.max(b["xmax"]), F.max(b["ymax"])
         ).alias("extent"),
-        F.sum(bbox_area(F.col(bbox_col))).alias("area_sum"),
+        F.sum(bbox_area(b)).alias("area_sum"),
     )
 
 
@@ -291,10 +277,7 @@ def wkb_intersection_area(wa: pd.Series, wb: pd.Series) -> pd.Series:
 def spatial_overlap_join_wkb(
     left: DataFrame,
     right: DataFrame,
-    cell_size: float = 16.0,
     iou_threshold_e6: int = 100000,
-    id_col: str = "unit_id",
-    wkb_col: str = "wkb",
     area_round: int | None = None,
 ) -> DataFrame:
     """Overlap join over general WKB geometry — concave, holed, multi-part
@@ -305,13 +288,10 @@ def spatial_overlap_join_wkb(
     exactly like the bbox form, but true to the ring geometry (reference
     J1, link_csd_years_spatial_v2.py:100-132 GEOS intersection + the
     make_valid repair at :55-59)."""
-    lg = with_wkb_geometry(left.select(id_col, wkb_col), wkb_col)
-    rg = with_wkb_geometry(right.select(id_col, wkb_col), wkb_col)
-    pairs = _blocked_pairs(
-        lg, rg, cell_size, id_col, "bbox", self_join=False,
-        carry=(wkb_col, "ring_area"),
-    )
-    inter = wkb_intersection_area(F.col(f"a_{wkb_col}"), F.col(f"b_{wkb_col}"))
+    lg = with_wkb_geometry(left.select("unit_id", "wkb"))
+    rg = with_wkb_geometry(right.select("unit_id", "wkb"))
+    pairs = _blocked_pairs(lg, rg, CELL_SIZE, self_join=False, carry=("wkb", "ring_area"))
+    inter = wkb_intersection_area(F.col("a_wkb"), F.col("b_wkb"))
     if area_round is not None:
         # Oracle-portability quantization: for integer-coordinate fixture
         # geometry the true intersection area is a multiple of 0.5, but the
@@ -337,11 +317,11 @@ def spatial_overlap_join_wkb(
     )
 
 
-def with_wkb_geometry(df: DataFrame, wkb_col: str = "wkb") -> DataFrame:
-    """Attach bbox struct + exact ring area parsed from a WKB column —
+def with_wkb_geometry(df: DataFrame) -> DataFrame:
+    """Attach bbox struct + exact ring area parsed from the `wkb` column —
     the entry point for real gazetteer tables. Downstream operators
     (overlap join, borders, dissolve) consume only the bbox struct."""
-    parsed = df.withColumn("_g", wkb_summary(F.col(wkb_col)))
+    parsed = df.withColumn("_g", wkb_summary(F.col("wkb")))
     return parsed.select(
         "*",
         bbox_struct(

@@ -11,9 +11,9 @@ an entity flips between snapshots.
 Scale notes:
 - the page->year map is 1:1 with pages; it joins to links on url, the key
   links were already shuffled on — AQE plans a co-partitioned join;
-- per-(entity, year, surface) counts pre-reduce BEFORE the argmax window,
-  so head entities ("Canada", 35% of pages) enter the window at
-  vocabulary-size, not corpus-size;
+- per-(entity, year, surface) counts pre-reduce BEFORE the per-(entity,
+  year) argmax aggregate, so head entities ("Canada", 35% of pages) enter
+  it at vocabulary-size, not corpus-size;
 - the chain window partitions by entity and orders by year — bounded by
   the number of snapshots (~tens), never by corpus size.
 """
@@ -38,16 +38,15 @@ def entity_snapshots(links: DataFrame, pages: DataFrame) -> DataFrame:
     per_surface = l.groupBy("entity_id", "snapshot_year", "surface").agg(
         F.count(F.lit(1)).alias("n")
     )
-    w = Window.partitionBy("entity_id", "snapshot_year").orderBy(
-        F.desc("n"), F.asc("surface")
+    # argmax as min-of-struct (as in canonicalize.consensus_canonical):
+    # (n desc, surface asc) is min(struct(-n, surface)), and surface is
+    # unique per row of the group, so the order has no ties
+    return per_surface.groupBy("entity_id", "snapshot_year").agg(
+        F.sum("n").cast("long").alias("n_mentions"),
+        F.min(F.struct((-F.col("n")).alias("_neg_n"), "surface")).alias("_top"),
+    ).select(
+        "entity_id", "snapshot_year", "n_mentions", F.col("_top.surface").alias("top_surface")
     )
-    top = per_surface.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") == 1
-    ).select("entity_id", "snapshot_year", F.col("surface").alias("top_surface"))
-    totals = per_surface.groupBy("entity_id", "snapshot_year").agg(
-        F.sum("n").cast("long").alias("n_mentions")
-    )
-    return totals.join(top, ["entity_id", "snapshot_year"])
 
 
 def entity_timeline(snapshots: DataFrame) -> DataFrame:

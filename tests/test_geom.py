@@ -175,7 +175,7 @@ def test_overlap_join_wkb_concave_and_holes(spark):
     got = {
         (r["a_id"], r["b_id"]): (r["iou_e6"], r["a_cover_e6"], r["b_cover_e6"])
         for r in spatial.spatial_overlap_join_wkb(
-            mk(left), mk(right), cell_size=16.0, iou_threshold_e6=1000
+            mk(left), mk(right), iou_threshold_e6=1000
         ).collect()
     }
     want = {}

@@ -68,8 +68,9 @@ def test_simhash_identical_docs_same_hash(spark):
 
 
 def test_simhash_hamming_banding_has_exact_recall(spark):
-    """With k < n_bands the nibble-band equi-join must return EXACTLY the
-    brute-force Hamming<=k pair set (pigeonhole guarantee, not approx)."""
+    """With SIMHASH_K < SIMHASH_BANDS the nibble-band equi-join must return
+    EXACTLY the brute-force Hamming<=k pair set (pigeonhole guarantee, not
+    approx)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(120)
     sig = dedup.simhash_bits(docs, n_bits=16).collect()
     brute = set()
@@ -80,7 +81,7 @@ def test_simhash_hamming_banding_has_exact_recall(spark):
                 brute.add((a, b))
     banded = {
         (r["a"], r["b"])
-        for r in dedup.simhash_hamming_pairs(docs, k=3, n_bands=4).collect()
+        for r in dedup.simhash_hamming_pairs(docs).collect()
     }
     assert banded == brute
     assert len(brute) > 0  # fixture actually exercises the path
@@ -108,7 +109,7 @@ def test_simhash_hamming_60bit_production_width(spark):
                 brute.add((a, b))
     banded = {
         (r["a"], r["b"])
-        for r in dedup.simhash_hamming_pairs(docs, k=3, n_bands=4, n_bits=60).collect()
+        for r in dedup.simhash_hamming_pairs(docs, n_bits=60).collect()
     }
     assert banded == brute
     assert {(i, i + 100000) for i in range(15)} <= banded  # exact copies found
@@ -295,7 +296,7 @@ def test_ivf_full_probe_equals_brute_force(spark):
     }
     full = {
         (r["query_id"], r["vec_id"], r["rank"])
-        for r in simsearch.ivf_topk(emb, q, cents, k=5, nprobe=8).collect()
+        for r in simsearch.ivf_topk(emb, q, cents, nprobe=8).collect()
     }
     assert full == truth
 
@@ -318,14 +319,14 @@ def test_ivf_partial_probe_recall(spark):
     }
     got = {
         (r["query_id"], r["vec_id"])
-        for r in simsearch.ivf_topk(emb, q, cents, k=5, nprobe=2).collect()
+        for r in simsearch.ivf_topk(emb, q, cents, nprobe=2).collect()
     }
     recall = len(truth & got) / len(truth)
     assert recall >= 0.25, recall
     # more probes -> recall can only grow (candidate sets are nested)
     got4 = {
         (r["query_id"], r["vec_id"])
-        for r in simsearch.ivf_topk(emb, q, cents, k=5, nprobe=4).collect()
+        for r in simsearch.ivf_topk(emb, q, cents, nprobe=4).collect()
     }
     recall4 = len(truth & got4) / len(truth)
     assert recall4 >= recall - 1e-9, (recall, recall4)
@@ -441,34 +442,6 @@ def test_near_dup_clusters_transitive(spark):
     assert rows[1]["cluster_size"] == 3
     assert rows[1]["keep"] and not rows[2]["keep"] and not rows[3]["keep"]
     assert rows[9]["component"] == 9 and rows[9]["cluster_size"] == 1 and rows[9]["keep"]
-
-
-def test_word_shingles_from_matches_inline(spark):
-    """Two-step tokenize->shingle == the inline word_shingles expression,
-    including null text, empty text, and docs shorter than the window."""
-    from pyspark.sql import functions as F
-
-    from kgspark.ops.dedup import word_shingles, word_shingles_from, word_tokens
-
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon"),
-            (2, "one two"),
-            (3, ""),
-            (4, None),
-            (5, "  leading and   multi   spaces "),
-            (6, "repeat repeat repeat repeat repeat"),
-        ],
-        "doc_id long, text string",
-    )
-    for n in (2, 3, 5):
-        a = docs.select("doc_id", word_shingles("text", n).alias("sh")).collect()
-        b = (
-            docs.select("doc_id", word_tokens("text").alias("_t"))
-            .select("doc_id", word_shingles_from(F.col("_t"), n).alias("sh"))
-            .collect()
-        )
-        assert sorted(a) == sorted(b), n
 
 
 def test_ngrams_zip_form_matches_transform_spec(spark):

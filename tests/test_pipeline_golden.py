@@ -102,15 +102,14 @@ def test_stages_mapping_builds_lazily(tmp_path, spark):
     ckdir = tmp_path / "ck_lazy"
     out = run_pipeline(spark, pages, aliases, checkpoint_dir=str(ckdir))
     assert set(out) == {
-        "extracted", "annotated", "mentions", "relations", "links", "surfaces",
+        "annotated", "mentions", "relations", "links", "surfaces",
         "surface_entity", "components", "canonical_map", "resolved_surfaces",
         "triples", "entities", "edges", "lineage", "prov_entities", "prov_edges",
         "entity_snapshots", "entity_timeline",
     }
-    assert "entities" in out and len(out) == 18
+    assert "entities" in out and len(out) == 17
     out["triples"]
-    # triples and its inputs only: not canonical_map, and not extracted
-    # (annotate reads html directly)
+    # triples and its inputs only: not canonical_map
     assert {p.parent.name for p in ckdir.glob(f"*/{MARKER}")} == {
         "annotated", "mentions", "relations", "links", "surfaces", "surface_entity",
         "components", "resolved_surfaces", "triples",

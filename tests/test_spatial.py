@@ -93,7 +93,7 @@ def test_borders_touch_semantics(spark):
         (2.0, 2.0, 8.0, 8.0),  # strictly inside 0: overlap, NOT border
     ]
     units = _mk_units(spark, rects)
-    got = {(r["a_id"], r["b_id"]) for r in spatial.spatial_borders(units, 16.0).collect()}
+    got = {(r["a_id"], r["b_id"]) for r in spatial.spatial_borders(units).collect()}
     assert got == {(0, 1), (0, 2), (1, 2)}
 
 
@@ -190,7 +190,7 @@ def test_overlap_join_wkb_rotated_rings(spark):
     got = {
         (r["a_id"], r["b_id"]): (r["iou_e6"], r["a_cover_e6"])
         for r in spatial.spatial_overlap_join_wkb(
-            mk(left_rings), mk(right_rings), cell_size=16.0, iou_threshold_e6=10000
+            mk(left_rings), mk(right_rings), iou_threshold_e6=10000
         ).collect()
     }
 

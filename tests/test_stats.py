@@ -56,7 +56,7 @@ def test_outlier_zscore_flags_planted_anomaly(spark):
     df = spark.createDataFrame(
         base + [(999, "a", 1000)], "doc_id long, grp string, v long"
     )
-    flagged = stats.outlier_zscore(df, "grp", "v", k=3).collect()
+    flagged = stats.outlier_zscore(df, "grp", "v").collect()
     assert {r["doc_id"] for r in flagged} == {999}
 
 
@@ -64,7 +64,7 @@ def test_outlier_zscore_none_on_tight_group(spark):
     df = spark.createDataFrame(
         [(i, "a", 100) for i in range(20)], "doc_id long, grp string, v long"
     )
-    assert stats.outlier_zscore(df, "grp", "v", k=3).count() == 0
+    assert stats.outlier_zscore(df, "grp", "v").count() == 0
 
 
 def test_outlier_zscore_broadcasts_moments(spark):

@@ -52,6 +52,20 @@ def test_entity_snapshots_topsurface_and_counts(spark):
     assert ("E2", 1999) not in snaps
 
 
+def test_entity_snapshots_count_tie_smaller_surface_wins(spark):
+    # two surfaces tied at 2 mentions in one year: the smaller one wins
+    rows = [("z1", "Zeta"), ("z2", "Zeta"), ("a1", "Alpha"), ("a2", "Alpha"), ("m1", "Mu")]
+    pages = spark.createDataFrame(
+        [(u, dt.datetime(2002, 6, 1)) for u, _ in rows], "url string, warc_ts timestamp"
+    )
+    links = spark.createDataFrame(
+        [(u, s, "E3", "high") for u, s in rows],
+        "url string, surface string, entity_id string, confidence string",
+    )
+    (snap,) = temporal.entity_snapshots(links, pages).collect()
+    assert (snap["snapshot_year"], snap["n_mentions"], snap["top_surface"]) == (2002, 5, "Alpha")
+
+
 def test_timeline_chain_order_and_lag(spark):
     pages, links = _fixture(spark)
     tl = temporal.entity_timeline(temporal.entity_snapshots(links, pages))

@@ -70,7 +70,7 @@ def test_asof_join_semantics(spark):
     )
     rows = {
         r["event_id"]: r
-        for r in W.asof_join(left, right, by="user_id", ts_col="ts").collect()
+        for r in W.asof_join(left, right, by="user_id").collect()
     }
     assert rows[1]["asof_value"] == 100.0 and rows[1]["asof_ts"] == 4.0
     # tie: right row AT the left ts is eligible (<=, not <)
@@ -85,7 +85,7 @@ def test_asof_join_single_shuffle_no_cartesian(spark):
     left = spark.createDataFrame([(1, 10, 5.0)], "event_id long, user_id long, ts double")
     right = spark.createDataFrame([(10, 4.0, 1.0)], "user_id long, ts double, value double")
     plan = (
-        W.asof_join(left, right, by="user_id", ts_col="ts")
+        W.asof_join(left, right, by="user_id")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan, plan
@@ -188,12 +188,12 @@ def test_redact_pii_map_only(spark):
 
 def test_bloom_no_false_negatives_and_plan(spark):
     hist = spark.range(200).select(F.concat(F.lit("doc-"), F.col("id")).alias("key"))
-    bloom = W.bloom_build(hist, "key", k=3)
+    bloom = W.bloom_build(hist, "key")
     assert bloom.count() <= 2048
     probe = spark.range(400).select(
         F.col("id").alias("doc_id"), F.concat(F.lit("doc-"), F.col("id")).alias("key")
     )
-    out = W.bloom_might_contain(probe, bloom, "key", k=3).collect()
+    out = W.bloom_might_contain(probe, bloom, "key").collect()
     seen = {r["doc_id"]: r["maybe_seen"] for r in out}
     # zero false negatives: every historical key must flag
     assert all(seen[i] for i in range(200))
@@ -203,7 +203,7 @@ def test_bloom_no_false_negatives_and_plan(spark):
     # scale contract: screening is map-only over the batch — broadcast
     # joins, no exchange of the probe side
     plan = (
-        W.bloom_might_contain(probe, bloom, "key", k=3)
+        W.bloom_might_contain(probe, bloom, "key")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("BroadcastHashJoin") == 3, plan
