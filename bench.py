@@ -63,7 +63,6 @@ HEADLINE = [
     "unpivot_lineitem",
     "dedup_exact",
     "dedup_minhash_lsh",
-    "dedup_minhash_lsh_fast",
     "text_quality_score",
     "ann_cosine_topk",
     "events_sessionize",

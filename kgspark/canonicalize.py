@@ -7,8 +7,11 @@ assign_canonical_names_simple.py:94-124) as distributed primitives:
 
 1. **Candidate pairs** between distinct mention surfaces via MinHash-LSH
    over character-3-gram shingles — all JVM-side (`xxhash64`, `transform`,
-   `array_min`), no Python. This is the blocking analog of the reference's
-   R-tree bbox prefilter (SURVEY.md O1) and the north rule's "MinHash-LSH
+   `array_min`), no Python — plus a 3-char prefix block. Surfaces that share
+   a band bucket become pairs inside that bucket (`ops.dedup.bucket_pairs`,
+   one aggregate, no band-key self-join), the same path as document
+   MinHash-LSH dedup. This is the blocking analog of the reference's R-tree
+   bbox prefilter (SURVEY.md O1) and the north rule's "MinHash-LSH
    blocking".
 2. **Verify + classify**: exact Jaccard on shingle sets + Levenshtein ratio;
    pairs above threshold become SAME_AS edges (reference classifier
@@ -47,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .link import char_ngrams
+from .ops.dedup import bucket_pairs
 
 N_HASHES = 12  # r=1 banding: any colliding minhash makes a candidate pair.
 # Mention surfaces are short (1-4 words), so 3-gram Jaccard of true OCR
@@ -65,48 +69,35 @@ def candidate_pairs_lsh(surfaces: DataFrame) -> DataFrame:
     surfaces: one row per distinct normalized surface (`norm_surface`).
     Returns pairs with a < b and their exact shingle Jaccard.
     """
-    sh = surfaces.select("norm_surface", char_ngrams("norm_surface", 3).alias("sh"))
-    # K minhashes, JVM-side: min over xxhash64(shingle, k)
-    minhash_cols = [
-        F.array_min(F.expr(f"transform(sh, s -> xxhash64(s, {k}))")).alias(f"mh{k}")
-        for k in range(N_HASHES)
-    ]
-    sig = sh.select("norm_surface", "sh", *minhash_cols)
-    # r=1 banding: one (band, key) row per minhash, via a single explode
-    # (no N-way union -> one scan, one shuffle)
-    banded = sig.select(
-        "norm_surface",
-        "sh",
-        F.posexplode(F.array(*[F.col(f"mh{k}") for k in range(N_HASHES)])).alias(
-            "band", "band_key"
-        ),
+    members = surfaces.select(
+        F.struct("norm_surface", char_ngrams("norm_surface", 3).alias("sh")).alias("m")
     )
-    # deterministic safety-net block: (3-char prefix, first-token count)
-    prefix = sh.select(
-        "norm_surface",
-        "sh",
+    # K minhashes, JVM-side: min over xxhash64(shingle, k); r=1 banding is
+    # one (band, key) row per minhash, via a single explode
+    banded = members.select(
+        "m",
+        F.posexplode(
+            F.array(*[
+                F.array_min(F.expr(f"transform(m.sh, s -> xxhash64(s, {k}))"))
+                for k in range(N_HASHES)
+            ])
+        ).alias("band", "band_key"),
+    )
+    # deterministic safety-net block: the 3-char prefix
+    prefix = members.select(
+        "m",
         F.lit(-1).alias("band"),
-        F.xxhash64(F.substring("norm_surface", 1, 3)).alias("band_key"),
+        F.xxhash64(F.substring("m.norm_surface", 1, 3)).alias("band_key"),
     )
-    banded = banded.unionByName(prefix)
-
-    # the shingles ride the band join, so the exact verify (shingle
+    # the shingles ride in the bucket members, so the exact verify (shingle
     # Jaccard, JVM-side) needs no lookup of either side
-    left = banded.select(F.col("norm_surface").alias("a"), F.col("sh").alias("sh_a"), "band", "band_key")
-    right = banded.select(F.col("norm_surface").alias("b"), F.col("sh").alias("sh_b"), "band", "band_key")
-    return (
-        left.join(right, ["band", "band_key"])
-        .where(F.col("a") < F.col("b"))  # symmetric dedup (reference O4)
-        .select(
-            "a",
-            "b",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ).alias("jaccard"),
-        )
-        .distinct()
+    return bucket_pairs(banded.unionByName(prefix)).select(
+        F.col("x.norm_surface").alias("a"),  # a < b: symmetric dedup (reference O4)
+        F.col("y.norm_surface").alias("b"),
+        F.round(
+            F.size(F.array_intersect("x.sh", "y.sh")) / F.size(F.array_union("x.sh", "y.sh")),
+            6,
+        ).alias("jaccard"),
     )
 
 

@@ -650,18 +650,6 @@ def dedup_minhash_lsh(spark, sf_dir):
     return dedup.minhash_lsh_pairs(corpus, shingle_n=3)
 
 
-def dedup_minhash_lsh_fast(spark, sf_dir):
-    """xxhash64-signature MinHash-LSH — the crawl-scale fast path. No DuckDB
-    oracle (xxhash64 is engine-native); correctness is pinned two ways:
-    the md5 twin `dedup_minhash_lsh` is oracle-green with the identical
-    banding plan, and pytest asserts the fast variant recovers the same
-    exact-duplicate pairs on the fixture corpus."""
-    return dedup.minhash_lsh_pairs_fast(spread(_t(spark, sf_dir, "documents")))
-
-
-QUERIES["dedup_minhash_lsh_fast"] = dedup_minhash_lsh_fast
-
-
 @q(
     "dedup_cluster_keep",
     _TWIN_SQL.replace("WITH base", "WITH RECURSIVE base", 1)
@@ -2707,7 +2695,6 @@ _DEMOTED = [
     "unpivot_lineitem",  # bench.py HEADLINE key
     "date_rollup_orders",  # only registry row of the date family
     "rollup_orders",  # only registry row of the grouping-sets family
-    "dedup_minhash_lsh_fast",  # bench.py HEADLINE key; no oracle by design
 ]
 
 # Must sit inside the driver's 50-entry window (checked by pytest).

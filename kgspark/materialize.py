@@ -28,16 +28,13 @@ def build_entities(alias_index: DataFrame, links: DataFrame) -> DataFrame:
     """Entity dimension: vocabulary + observed mention counts.
 
     Mention counting groups by entity_id — the textbook head-entity hot key
-    ("Canada" on 35% of pages) — so it runs as an explicit two-phase salted
-    count (ops/skew.py): no single task ever holds more than ~1/16 of a
-    head key's rows."""
-    from .ops.skew import salted_count
-
-    mention_counts = salted_count(
-        links.where(F.col("confidence") == "high"),
-        ["entity_id"],
-        identity_cols=["url", "surface"],
-        count_col="n_mentions",
+    ("Canada" on 35% of pages). A plain count needs no salt: its partial
+    aggregate combines map-side, so a hot key reaches its reducer as at
+    most one row per map task."""
+    mention_counts = (
+        links.where(F.col("confidence") == "high")
+        .groupBy("entity_id")
+        .agg(F.count(F.lit(1)).alias("n_mentions"))
     )
     return (
         alias_index.select(

@@ -9,10 +9,11 @@ Python UDFs, no driver-side loops.
 
 Scale notes per operator:
 - exact: one shuffle on the 32-hex digest; group sizes are tiny (true dups).
-- minhash-lsh: explode to (doc, band) rows -> equi-join on band key. The
-  classic shingle->minhash->band->bucket-join. Bucket skew (boilerplate
-  shingles) is bounded because band keys combine R minhashes; AQE skew-join
-  covers the residue.
+- minhash-lsh: explode to (doc, band) rows -> one aggregate per
+  (band, band_key) bucket -> pairs inside each bucket (`bucket_pairs`,
+  shared with canonicalize's surface blocking). Bucket size is bounded
+  because band keys combine R minhashes, so boilerplate shingles alone
+  make no giant bucket.
 - ngram-jaccard: candidate generation via shared *rare* shingles (document
   frequency cap) — the blocking trick that keeps the self-join linear-ish;
   verify with exact Jaccard on shingle sets.
@@ -32,7 +33,7 @@ from pyspark.sql import functions as F
 # Every operator reads a documents table of (doc_id, text).
 N_HASHES = 8  # MinHash families: two md5 calls per shingle give 8 slices
 N_BANDS = 4  # MinHash-LSH bands of N_HASHES // N_BANDS minhashes each
-SHINGLE_N = 3  # MinHash word n-gram width (the md5 signature's default)
+SHINGLE_N = 3  # MinHash word n-gram width (minhash_lsh_pairs' default)
 MAX_DF = 20  # n-gram Jaccard blocks only on shingles in <= MAX_DF docs
 SIMHASH_BANDS = 4  # simhash nibble bands
 SIMHASH_K = 3  # max Hamming distance; < SIMHASH_BANDS gives exact recall
@@ -135,87 +136,29 @@ def minhash_signature(docs: DataFrame, shingle_n: int) -> DataFrame:
     )
 
 
-def minhash_signature_fast(docs: DataFrame) -> DataFrame:
-    """Engine-native minhash — the signature the ENGINE should use at crawl
-    scale. Not oracle-portable (DuckDB has no xxhash64), so the md5 variant
-    stays as the oracle-paired query; near-dup recall properties are
-    identical (both are uniform hash families).
+def bucket_pairs(banded: DataFrame) -> DataFrame:
+    """Distinct member pairs (x, y) with x < y of the rows that share a
+    (band, band_key) bucket — the one place LSH band buckets become pairs.
 
-    Two cost levers vs the portable signature:
-    - shingles are never materialized as strings: each word n-gram is
-      hashed directly from its token columns (xxhash64 is variadic), so no
-      slice/array_join allocations;
-    - the 8 hash families reuse the one string-level hash: family k is
-      xxhash64(shingle_hash, k) over a LONG, not a re-hash of the string.
-    min() is duplicate-insensitive, so skipping array_distinct changes
-    nothing. Null-text docs have no shingles and therefore NO signature
-    row (similarity is undefined for them; empty-doc dedup belongs to
-    exact_dedup). Shingles are word SHINGLE_N-grams.
-    """
-    toks = word_tokens("text")
-    # F.get (0-based) returns null past the end instead of raising under
-    # ANSI mode (docs shorter than the shingle width hash a null-padded
-    # window — deterministic on both variants' terms)
-    def window_hash(i):
-        return F.xxhash64(*[F.get(F.col("toks"), i + j) for j in range(SHINGLE_N)])
-
-    # Null AND blank-text docs are dropped BEFORE the signature is built:
-    # xxhash64 over an all-null window is a seed constant (and
-    # greatest(null, 0) swallows the null size), and a whitespace-only doc
-    # tokenizes to a constant window too — unguarded, each cohort shares
-    # one signature and the banding join emits O(n^2) spurious pairs
-    # (round-3/round-4 advice). length(trim(..)) > 0 is null-rejecting, so
-    # one pushdown-friendly filter covers both. A plain filter rather than
-    # a F.when guard around the transform: a conditional branch defeats
-    # common-subexpression elimination and recomputes the tokenizer split
-    # for every F.get reference in the window hash (measured 10x slower).
-    base = docs.where(F.length(F.trim("text")) > 0).select(
-        "doc_id", toks.alias("toks")
-    ).select(
-        "doc_id",
-        F.transform(
-            F.sequence(
-                F.lit(0), F.greatest(F.size(F.col("toks")) - SHINGLE_N, F.lit(0))
-            ),
-            window_hash,
-        ).alias("hs"),
+    `banded` holds (band, band_key, m): `m` is a struct whose first field
+    is the row's unique id (pairs are ordered by it); its other fields are
+    a payload the caller's verify step reads from x and y. One aggregate
+    per bucket builds `banded` once, where a band-key self-join plans it
+    once per join side (the whole md5 signature subtree ran twice).
+    where(size > 1) drops the singleton buckets, the vast majority, before
+    any pair is generated. Only for bounded buckets (band keys that combine
+    minhashes, or a prefix block): a low-cardinality key such as a SimHash
+    nibble or an SRP bucket would collect a corpus share per bucket."""
+    key = banded.schema["m"].dataType.fieldNames()[0]
+    buckets = (
+        banded.groupBy("band", "band_key")
+        .agg(F.collect_list("m").alias("ms"))
+        .where(F.size("ms") > 1)
     )
-
-    def mh(k: int):
-        seed = F.lit(k)
-        return F.array_min(
-            F.transform(F.col("hs"), lambda h: F.xxhash64(h, seed))
-        ).alias(f"mh{k}")
-
-    return base.select("doc_id", *[mh(k) for k in range(N_HASHES)])
-
-
-def _banded_pairs_from_signature(sig: DataFrame) -> DataFrame:
-    """(a < b) candidate pairs from an mh0..mh7 signature frame: band
-    keys combine R minhashes, one equi-join on (band, band_key)."""
-    r = N_HASHES // N_BANDS
-    # Precondition: `sig` carries no null mh columns (both signature
-    # builders drop null-text docs upstream — xxhash64 SKIPS null inputs,
-    # so null signatures here would all collapse to the identical
-    # seed-only band key and emit O(n^2) spurious pairs; and filtering
-    # HERE is 9x slower, see minhash_signature).
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(*[F.col(f"mh{b * r + i}") for i in range(r)])
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "band_key"),
-    )
-    left = banded.select(F.col("doc_id").alias("a"), "band", "band_key")
-    right = banded.select(F.col("doc_id").alias("b"), "band", "band_key")
     return (
-        left.join(right, ["band", "band_key"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
+        buckets.select(F.explode("ms").alias("x"), "ms")
+        .select("x", F.explode("ms").alias("y"))
+        .where(F.col(f"x.{key}") < F.col(f"y.{key}"))
         .distinct()
     )
 
@@ -224,22 +167,17 @@ def minhash_lsh_pairs(docs: DataFrame, shingle_n: int = SHINGLE_N) -> DataFrame:
     """Candidate near-dup pairs (a < b) via banded MinHash-LSH (portable
     md5 signature — same pairs as the DuckDB oracle's md5 band keys).
 
-    r7 restructure (guide §2.4/§3): the previous band-key SELF-JOIN made
-    Catalyst compute the whole shingle->md5->signature subtree TWICE (once
-    per join side — both visible in the r6 plan); grouping doc ids per
-    bucket computes the signature ONCE and generates pairs inside each
-    bucket. Bucket membership is keyed on the R minhash values themselves
-    (a struct) rather than md5(mh0||'|'||mh1): the '|' join makes the
-    concat injective, so two docs share a band key iff they share the R
-    minhash values — the identical pair set without hashing. Bucket sizes
-    are bounded (band keys combine R minhashes), so collect_list stays
-    small; the where(size > 1) drops the singleton buckets (the vast
-    majority) before any pair is generated."""
+    Bucket membership is keyed on the R minhash values themselves (a
+    struct) rather than md5(mh0||'|'||mh1): the '|' join makes the concat
+    injective, so two docs share a band key iff they share the R minhash
+    values — the identical pair set without hashing. Bucket sizes are
+    bounded (band keys combine R minhashes), so `bucket_pairs`' per-bucket
+    list stays small."""
     sig = minhash_signature(docs, shingle_n)
     r = N_HASHES // N_BANDS
     # null-text docs already dropped inside minhash_signature (see there)
     banded = sig.select(
-        "doc_id",
+        F.struct("doc_id").alias("m"),
         F.posexplode(
             F.array(
                 *[
@@ -251,24 +189,9 @@ def minhash_lsh_pairs(docs: DataFrame, shingle_n: int = SHINGLE_N) -> DataFrame:
             )
         ).alias("band", "band_key"),
     )
-    buckets = (
-        banded.groupBy("band", "band_key")
-        .agg(F.collect_list("doc_id").alias("ids"))
-        .where(F.size("ids") > 1)
+    return bucket_pairs(banded).select(
+        F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b")
     )
-    return (
-        buckets.select(F.explode("ids").alias("a"), "ids")
-        .select("a", F.explode("ids").alias("b"))
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-
-
-def minhash_lsh_pairs_fast(docs: DataFrame) -> DataFrame:
-    """Candidate near-dup pairs via the xxhash64 signature — the crawl-scale
-    fast path (same banding plan, integer band keys, no string md5)."""
-    return _banded_pairs_from_signature(minhash_signature_fast(docs))
 
 
 # --- n-gram Jaccard ----------------------------------------------------------
@@ -505,7 +428,7 @@ def near_dup_clusters(docs: DataFrame) -> DataFrame:
     the reference applies to entity surface forms,
     /root/reference/scripts/assign_canonical_names_simple.py:118-151).
 
-    Scale shape: pairs are the banded equi-join (minhash_lsh_pairs);
+    Scale shape: pairs come from the band buckets (minhash_lsh_pairs);
     components are a per-partition union-find over the pairs where they
     land, then the same union-find over the boundary graph only (docs
     that appear in pairs of 2+ partitions, linked to their local roots)

@@ -232,6 +232,10 @@ def test_lsh_blocking_recall_on_ocr_variants(spark):
     for x, y in pairs:
         a, b = min(x, y), max(x, y)
         assert (a, b) in got, f"blocking lost pair {(a, b)}"
+    # pairs come from one aggregate per band bucket, not a band-key
+    # self-join (which builds the signature once per side)
+    plan = cands._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan, plan
 
 
 def test_consensus_gate_preserves_true_renames(spark):

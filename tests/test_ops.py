@@ -34,11 +34,9 @@ def test_minhash_lsh_finds_near_dup(spark):
 
 
 def test_minhash_fast_finds_exact_dups(spark):
-    """The xxhash64 fast path shares the banding plan with the md5 path but
-    draws a different hash family, so near-dup luck differs pair-by-pair;
-    the hard contract is that identical texts ALWAYS collide (all bands
-    equal) and emitted pairs are ordered. Checked on the parquet fixture
-    corpus, which carries real exact-dup structure."""
+    """The hard contract of MinHash-LSH: identical texts ALWAYS collide
+    (all bands equal) and emitted pairs are ordered. Checked on the parquet
+    fixture corpus, which carries real exact-dup structure."""
     base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
@@ -48,9 +46,44 @@ def test_minhash_fast_finds_exact_dups(spark):
     )
     docs = base.unionByName(dups)
     want = {(i, i + 100000) for i in range(25)}
-    fast = {(r["a"], r["b"]) for r in dedup.minhash_lsh_pairs_fast(docs).collect()}
-    assert want <= fast  # every exact-dup pair is retrieved
-    assert all(a < b for a, b in fast)
+    got = {(r["a"], r["b"]) for r in dedup.minhash_lsh_pairs(docs).collect()}
+    assert want <= got  # every exact-dup pair is retrieved
+    assert all(a < b for a, b in got)
+
+
+def test_bucket_pairs_matches_self_join(spark):
+    """`bucket_pairs` equals the band-key self-join it replaces: the
+    distinct (x, y) member pairs, x's id < y's id, of every (band,
+    band_key) bucket, payload carried. Pairs collide in several bands,
+    band 3 is all singleton buckets, and buckets of 2 to 5 members mix."""
+    ids = spark.range(120).select(
+        F.struct(
+            F.col("id"),
+            F.concat(F.lit("p"), F.col("id").cast("string")).alias("p"),
+            F.array(F.col("id") % 7, F.col("id") % 3).alias("arr"),
+        ).alias("m"),
+        F.array(
+            F.floor(F.col("id") / 2), F.col("id") % 25, F.floor(F.col("id") / 2) + 1000,
+            F.col("id"),
+        ).alias("keys"),
+    )
+    banded = ids.select("m", F.posexplode("keys").alias("band", "band_key"))
+    left = banded.select("band", "band_key", F.col("m").alias("x"))
+    right = banded.select("band", "band_key", F.col("m").alias("y"))
+    want = (
+        left.join(right, ["band", "band_key"]).where("x.id < y.id").select("x", "y").distinct()
+    )
+
+    def key(r):
+        return tuple((m["id"], m["p"], tuple(m["arr"])) for m in (r["x"], r["y"]))
+
+    got = [key(r) for r in dedup.bucket_pairs(banded).collect()]
+    assert len(got) == len(set(got))  # each pair once, however many bands it shares
+    assert set(got) == {key(r) for r in want.collect()}
+    # (0, 1) collides in bands 0 and 2; band 3 alone pairs nothing
+    assert ((0, "p0", (0, 0)), (1, "p1", (1, 1))) in set(got)
+    # 60 pairs from id // 2; 230 from id % 25 (20 buckets of 5, 5 of 4)
+    assert len(got) == 60 + 230
 
 
 def test_ngram_jaccard(spark):
@@ -229,23 +262,14 @@ def test_jpeg_fill_bytes_and_sos():
 
 def test_minhash_fast_null_text_no_pair_explosion(spark):
     """Docs with null text (null signatures) must not collapse into one
-    band bucket in the fast path — xxhash64 skips nulls, so unfiltered null
-    signatures would all share the seed-only band key and emit O(n^2)
-    spurious pairs (round-3 advice)."""
+    band bucket — unfiltered, null signatures would all share one band key
+    and emit O(n^2) spurious pairs (round-3 advice)."""
     rows = [("d0", "alpha beta gamma delta epsilon zeta"),
             ("d1", "alpha beta gamma delta epsilon zeta"),
             ("d2", None), ("d3", None), ("d4", None)]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
-    pairs = {
-        (r["a"], r["b"])
-        for r in dedup.minhash_lsh_pairs_fast(docs).collect()
-    }
+    pairs = {(r["a"], r["b"]) for r in dedup.minhash_lsh_pairs(docs).collect()}
     assert pairs == {("d0", "d1")}
-    # parity with the portable md5 path on the same frame
-    portable = {
-        (r["a"], r["b"]) for r in dedup.minhash_lsh_pairs(docs).collect()
-    }
-    assert pairs == portable
 
 
 def test_png_bmp_real_pixel_luma():
@@ -333,17 +357,16 @@ def test_ivf_partial_probe_recall(spark):
 
 
 def test_minhash_blank_text_no_pair_explosion(spark):
-    """Whitespace-only docs collapse to ONE signature in both hash paths
-    (every md5 shingle is ""; every xxhash64 window is a seed constant),
-    so left in they pair up quadratically exactly like the round-3 null
-    case — blank docs must carry no signature at all (round-4 advice)."""
+    """Whitespace-only docs collapse to ONE signature (every md5 shingle
+    is ""), so left in they pair up quadratically exactly like the round-3
+    null case — blank docs must carry no signature at all (round-4
+    advice)."""
     rows = [("d0", "alpha beta gamma delta epsilon zeta"),
             ("d1", "alpha beta gamma delta epsilon zeta"),
             ("d2", ""), ("d3", "   "), ("d4", " \t "), ("d5", None)]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
-    for fn in (dedup.minhash_lsh_pairs, dedup.minhash_lsh_pairs_fast):
-        pairs = {(r["a"], r["b"]) for r in fn(docs).collect()}
-        assert pairs == {("d0", "d1")}, fn.__name__
+    pairs = {(r["a"], r["b"]) for r in dedup.minhash_lsh_pairs(docs).collect()}
+    assert pairs == {("d0", "d1")}
 
 
 def test_png_decompression_bomb_bounded():

@@ -18,8 +18,8 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 MODULES = [
     *(f"kgspark/ops/{m}.py" for m in (
-        "corpus", "dedup", "graph", "sampling", "simsearch", "skew", "stats",
-        "textstats", "webtext",
+        "corpus", "dedup", "graph", "sampling", "simsearch", "stats", "textstats",
+        "webtext",
     )),
     "kgspark/spatial.py",
     "kgspark/observations.py",

@@ -103,14 +103,9 @@ def test_entry_contract_keys():
     oracles = entry.oracle_sql()
     assert set(oracles) <= set(qs)
     assert len(qs) >= 25
-    # oracle-less entries are the documented non-SQL-expressible ones:
-    # the full pipeline (covered by its oracle-green mention-triple
-    # companion) and the xxhash64 minhash fast path (no xxhash64 in
-    # DuckDB; pinned against its oracle-green md5 twin in test_ops)
-    assert set(qs) - set(oracles) == {
-        "kg_pipeline_triples",
-        "dedup_minhash_lsh_fast",
-    }
+    # the one oracle-less entry is the full pipeline, which is not
+    # SQL-expressible (covered by its oracle-green stage companions)
+    assert set(qs) - set(oracles) == {"kg_pipeline_triples"}
 
 
 def test_cap_hub_adjacency_exact_and_bounded(spark):

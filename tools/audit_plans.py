@@ -76,6 +76,11 @@ CHECKS = {
         (r"HashAggregate", "map-combined count tables"),
         (r"ReadSchema: [^\n]*struct<doc_id:bigint,text:string>", "scan pruned to 2 cols"),
     ],
+    "dedup_minhash_lsh": [
+        # band buckets become pairs inside one aggregate per bucket; a
+        # band-key self-join would build the md5 signature once per side
+        (r"(?s)\A(?!.*SortMergeJoin)", "band buckets from one aggregate, no band-key join"),
+    ],
     "graph_triangles": [
         # wedge enumeration must stay equi-join — a cartesian/NL join on
         # the oriented edge table is the hub blow-up this op exists to avoid
